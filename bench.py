@@ -28,7 +28,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from solana_data_etl_pipeline_spark.session import get_spark
+    from solana_data_etl_pipeline_spark.session import get_spark, persistent_rdd_ids, unpersist_rdds_since
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -106,13 +106,13 @@ def main() -> None:
     # gc.collect() attempt, whose ASYNC ContextCleaner deletions then
     # contended inside the next sample's timed region). Every
     # per-query checkpoint is sample-local -- the per-sf layout caches
-    # hold PATHS, not frames -- so nothing long-lived is dropped; the
-    # timed loop itself is byte-identical to r12/r13.
-    def _drop_sample_blocks(sess) -> None:
+    # hold PATHS, not frames; only RDDs persisted after the `before`
+    # snapshot are dropped, so a frame cached earlier is never silently
+    # recomputed per sample. The timed region itself is unchanged
+    # since r12/r13.
+    def _drop_sample_blocks(sess, before: set[int]) -> None:
         try:
-            jmap = sess.sparkContext._jsc.getPersistentRDDs()
-            for jrdd in jmap.values():
-                jrdd.unpersist(True)
+            unpersist_rdds_since(sess, before)
         except Exception:
             pass  # hygiene must never fail the bench
 
@@ -120,6 +120,7 @@ def main() -> None:
     for name in DRIVER_ORDER:
         fn = qs[name]
         samples = []
+        before = persistent_rdd_ids(spark)
         for _ in range(RUNS):
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
@@ -127,7 +128,7 @@ def main() -> None:
             # Catalyst prune the computed expressions and under-measure)
             df.write.format("noop").mode("overwrite").save()
             samples.append(time.perf_counter() - t0)
-            _drop_sample_blocks(spark)
+            _drop_sample_blocks(spark, before)
         timings[name] = round(statistics.median(samples), 3)
 
     # non-graded baselines: the deliberately-unregistered quadratic
@@ -831,14 +832,15 @@ def main() -> None:
     standalone_warm: dict[str, float] = {}
     for name in heavy5:
         fn = qs[name]
+        before = persistent_rdd_ids(spark)
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        _drop_sample_blocks(spark)
+        _drop_sample_blocks(spark, before)
         samples = []
         for _ in range(RUNS):
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(time.perf_counter() - t0)
-            _drop_sample_blocks(spark)
+            _drop_sample_blocks(spark, before)
         standalone_warm[name] = round(statistics.median(samples), 3)
 
     total = round(sum(timings.values()), 3)

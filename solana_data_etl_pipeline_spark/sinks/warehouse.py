@@ -28,8 +28,10 @@ or Iceberg MERGE) slots in behind the same protocol when available.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
+from collections import Counter
 from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +40,9 @@ from pyspark.sql import functions as F
 from solana_data_etl_pipeline_spark.config import WarehouseConfig
 from solana_data_etl_pipeline_spark.errors import ConfigError
 from solana_data_etl_pipeline_spark.schemas import CANONICAL_EVENT_SCHEMA, EVENT_DATE_COL
+
+#: directory value Spark writes for a NULL partition column
+HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def touched_dates_predicate(dates: list) -> F.Column:
@@ -126,8 +131,16 @@ class ParquetWarehouse:
            partitions (partition-pruned scan);
         3. append, partitioned by event_date.
         Returns the number of newly written rows.
+
+        The deduped batch is materialized once, up front: the dates
+        probe, the anti-join, the count and the append all read it, so
+        the fetch and parse behind ``events`` run once per call.
         """
-        batch = events.withColumn(EVENT_DATE_COL, F.to_date("block_time")).dropDuplicates(["event_id"])
+        batch = (
+            events.withColumn(EVENT_DATE_COL, F.to_date("block_time"))
+            .dropDuplicates(["event_id"])
+            .localCheckpoint(eager=True)
+        )
         existing = self._existing()
         if existing is not None:
             dates = [r[0] for r in batch.select(EVENT_DATE_COL).distinct().collect()]
@@ -149,22 +162,27 @@ class ParquetWarehouse:
         return n_new
 
     def compact(self, target_files_per_partition: int = 1) -> int:
-        """Rewrite each date partition into `target_files_per_partition`
-        slot-sorted files. Incremental appends accumulate small files
+        """Rewrite each date partition holding more than
+        `target_files_per_partition` files into that many slot-sorted
+        files; partitions already at or under the target are neither
+        read nor written. Incremental appends accumulate small files
         (one per micro-batch per date); periodic compaction restores
         scan efficiency. Returns the number of partitions rewritten.
 
-        At scale: run per-partition (bounded memory), only on
-        partitions whose file count exceeds the target -- the rewrite
-        cost scales with the data actually compacted.
+        Runs per partition (bounded memory), so the rewrite cost scales
+        with the data actually compacted, not with the table.
         """
         existing = self._existing()
         if existing is None:
             return 0
-        dates = [r[0] for r in existing.select(EVENT_DATE_COL).distinct().collect()]
+        files = Counter(os.path.basename(os.path.dirname(f)) for f in existing.inputFiles())
         done = 0
-        for d in dates:
-            part = existing.filter(F.col(EVENT_DATE_COL) == d)
+        for part_dir, n_files in sorted(files.items()):
+            if n_files <= target_files_per_partition:
+                continue
+            value = part_dir.split("=", 1)[1]
+            date = None if value == HIVE_DEFAULT_PARTITION else dt.date.fromisoformat(value)
+            part = existing.filter(touched_dates_predicate([date]))
             merged = part.repartition(target_files_per_partition).sortWithinPartitions("slot")
             merged = merged.localCheckpoint(eager=True)  # never re-scan files being replaced
             conf = "spark.sql.sources.partitionOverwriteMode"

@@ -11,6 +11,7 @@ from __future__ import annotations
 import json
 from collections.abc import Iterable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -77,6 +78,13 @@ def fetch_blocks_df(spark: SparkSession, client, slots: list[int]) -> DataFrame:
                 yield json.dumps(block)
 
     raw = sc.parallelize(slots, n_parts).mapPartitions(fetch_partition)
+    # Fetch each slot once: the probe below and every branch of the
+    # parse read the stored blocks instead of re-issuing get_block (a
+    # live chain may also answer differently between two fetches).
+    # persist(), not localCheckpoint(): PySpark fuses the next Python
+    # step into this RDD's function unless the RDD is marked cached,
+    # which would bypass a checkpoint taken on the JVM side.
+    raw.persist(StorageLevel.MEMORY_AND_DISK)
     if raw.isEmpty():
         return spark.createDataFrame([], BLOCK_SCHEMA)
     return spark.read.schema(BLOCK_SCHEMA).json(raw)

@@ -8,6 +8,7 @@ import pytest
 
 from solana_data_etl_pipeline_spark.operators.parse import parse_blocks
 from solana_data_etl_pipeline_spark.plans.canonical import normalize_canonical, run_analytics
+from solana_data_etl_pipeline_spark.session import CODEGEN_CACHE_ENTRIES, codegen_stats
 from solana_data_etl_pipeline_spark.sources.blocks import blocks_to_df
 from solana_data_etl_pipeline_spark.sources.fixtures import make_block
 
@@ -72,3 +73,24 @@ def test_analytics_writes_parquet_outputs(spark, events, as_of, tmp_path):
     run_analytics(events, as_of, output_path=str(tmp_path))
     got = spark.read.parquet(str(tmp_path / "analytics_transaction_volume"))
     assert {r.period_type for r in got.collect()} == {"total", "today", "week", "month"}
+
+
+def test_session_sizes_codegen_cache(spark):
+    # static conf: only the session builder can set it
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+
+
+def test_identical_recompute_reuses_generated_code(spark, events, as_of, tmp_path):
+    # one recompute compiles ~136 classes (~95 sources, most compiled
+    # under both the planning thread's and the tasks' class loader);
+    # with Spark's default 100-entry cache the LRU evicts each before
+    # it is needed again. The one allowed exception: Spark numbers the distinct
+    # groups of a multi-column count(distinct) (token_transfer_stats,
+    # wallet_activity) in hash order of fresh expression ids, so a
+    # recompute may draw an order not seen yet for the two stages of
+    # each of those plans: at most 2 plans x 2 stages x 2 compiles.
+    run_analytics(events, as_of, output_path=str(tmp_path))
+    compiled, _ = codegen_stats(spark)
+    run_analytics(events, as_of, output_path=str(tmp_path))
+    assert codegen_stats(spark)[0] - compiled <= 8

@@ -8,7 +8,7 @@ import pytest
 from solana_data_etl_pipeline_spark.config import Config, WarehouseConfig
 from solana_data_etl_pipeline_spark.operators.parse import parse_blocks
 from solana_data_etl_pipeline_spark.sinks.warehouse import ParquetWarehouse, create_warehouse
-from solana_data_etl_pipeline_spark.sources.blocks import blocks_to_df
+from solana_data_etl_pipeline_spark.sources.blocks import blocks_to_df, fetch_blocks_df
 from solana_data_etl_pipeline_spark.sources.fixtures import FixtureRpcClient, make_block
 from solana_data_etl_pipeline_spark.streaming.incremental import (
     chunk_ranges,
@@ -95,6 +95,62 @@ def test_compact_preserves_rows_and_reduces_files(spark, warehouse):
     assert sorted(r.event_id for r in after.select("event_id").collect()) == ids_before
     files_after = len(glob.glob(f"{warehouse.events_path}/*/*.parquet"))
     assert files_after < files_before
+
+
+def _data_files(warehouse, part_dir):
+    import glob
+    import os
+
+    return {os.path.basename(f) for f in glob.glob(f"{warehouse.events_path}/{part_dir}/*.parquet")}
+
+
+def test_compact_rewrites_only_fragmented_partitions(spark, warehouse):
+    # day A: two appends, compacted once -> one file
+    for slots in ([1], [2]):
+        warehouse.insert_events(_events(spark, slots))
+    warehouse.compact()
+    part_a = "event_date=2023-11-14"
+    (kept,) = _data_files(warehouse, part_a)
+    # day B (block time crosses midnight at slot 3200) and the NULL
+    # partition: two appends each -> several files
+    for slots in ([3300], [3301]):
+        warehouse.insert_events(_events(spark, slots))
+        warehouse.insert_events(_null_time(_events(spark, [s + 50 for s in slots])))
+    n_before = warehouse.read_events().count()
+
+    assert warehouse.compact() == 2
+    assert _data_files(warehouse, part_a) == {kept}  # never rewritten
+    assert len(_data_files(warehouse, "event_date=2023-11-15")) == 1
+    assert len(_data_files(warehouse, "event_date=__HIVE_DEFAULT_PARTITION__")) == 1
+    assert warehouse.read_events().count() == n_before
+    assert warehouse.compact() == 0
+
+
+def test_ingest_fetches_each_slot_once(spark, warehouse, tmp_path):
+    from collections import Counter
+
+    log = str(tmp_path / "get_block.log")
+
+    def counting_client():
+        # runs in the Python workers: count calls in a shared file
+        client = FixtureRpcClient(tip=40)
+        get_block = client.get_block
+
+        def counted(slot, encoding="jsonParsed"):
+            with open(log, "a") as f:
+                f.write(f"{slot}\n")
+            return get_block(slot, encoding)
+
+        client.get_block = counted
+        return client
+
+    slots = list(range(1, 21))
+    warehouse.insert_events(_events(spark, [1]))  # non-empty table: the anti-join path
+    n = warehouse.insert_events(parse_blocks(fetch_blocks_df(spark, counting_client, slots)))
+    assert n == _events(spark, slots[1:]).count()
+    with open(log) as f:
+        calls = Counter(int(line) for line in f)
+    assert calls == Counter(slots)
 
 
 def test_checkpoint_roundtrip(warehouse):
