@@ -74,27 +74,22 @@ def main() -> None:
     #
     # r12 ADDITION -- the fix that DOES work: one untimed warm pass
     # over the window first. It (a) builds every per-sf ingest
-    # artifact (semdedup keeper layouts, bm25 postings, LSH bucket
-    # index, BPE vocab, cluster membership -- their cold costs are
-    # the *_build twins below, so the timed loop should measure the
-    # PROBE shape the registry documents, not smear one-time builds
-    # into first samples) and (b) pays expression JIT once; then ONE
-    # SparkContext restart clears the accumulated executor state the
-    # builds leave behind (localCheckpoint blocks, shuffle files --
-    # the drag class above) while the JVM's codegen cache survives.
+    # artifact the window probes (plans.suite.ARTIFACTS -- their cold
+    # costs are the *_build twins below, so the timed loop should
+    # measure the PROBE shape the registry documents, not smear
+    # one-time builds into first samples) and (b) pays expression JIT
+    # once; then ONE SparkContext restart clears the accumulated
+    # executor state the builds leave behind (localCheckpoint blocks,
+    # shuffle files -- the drag class above) while the JVM's codegen
+    # cache survives.
     # Unlike the per-entry System.gc()/gc.collect() attempts, the
     # restart happens OUTSIDE any timed region, exactly once.
-    # SPARK_GRAFT_BENCH_RAW=1 disables the warm pass + restart (the
-    # same-code no-protocol number VERDICT r12 #4 wants on record once
-    # per round); the artifact's protocol block says which ran.
-    raw_protocol = os.environ.get("SPARK_GRAFT_BENCH_RAW", "") == "1"
-    if not raw_protocol:
-        for name in DRIVER_ORDER:
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        spark.stop()
-        spark = get_spark("bench-window")
-        spark.sparkContext.setLogLevel("ERROR")
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    for name in DRIVER_ORDER:
+        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    spark.stop()
+    spark = get_spark("bench-window")
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
     # r14 window hygiene (VERDICT r13 #3/#5): several queries
     # localCheckpoint intermediates (curation train, dsir buckets, CC
@@ -105,10 +100,10 @@ def main() -> None:
     # sample, OUTSIDE the timed region (unlike the reverted
     # gc.collect() attempt, whose ASYNC ContextCleaner deletions then
     # contended inside the next sample's timed region). Every
-    # per-query checkpoint is sample-local -- the per-sf layout caches
-    # hold PATHS, not frames; only RDDs persisted after the `before`
-    # snapshot are dropped, so a frame cached earlier is never silently
-    # recomputed per sample. The timed region itself is unchanged
+    # per-query checkpoint is sample-local -- the per-sf artifact
+    # registry holds PATHS, not frames; only RDDs persisted after the
+    # `before` snapshot are dropped, so a frame cached earlier is never
+    # silently recomputed per sample. The timed region itself is unchanged
     # since r12/r13.
     def _drop_sample_blocks(sess, before: set[int]) -> None:
         try:
@@ -149,161 +144,25 @@ def main() -> None:
             samples.append(time.perf_counter() - t0)
         twins[name] = round(statistics.median(samples), 3)
 
-    # the materialized-IVF layout is cached per sf_dir (build happens
-    # at ingest cadence, probes amortize it), so the BUILD cost is
-    # timed explicitly here instead of being smeared into the
-    # knn_ivf_materialized query samples
+    # cold builds of every registered per-sf ingest artifact
+    # (plans.suite.ARTIFACTS): the suite probes them from one build per
+    # process, so each build is timed here on a fresh directory as
+    # `<name>_build` -- index build and query answering stay separate
+    # costs and the amortization hides nothing
     import shutil
     import tempfile
 
-    from solana_data_etl_pipeline_spark.operators.similarity import materialize_ivf
-    from solana_data_etl_pipeline_spark.plans.suite import load_table as _lt
+    from solana_data_etl_pipeline_spark.plans.suite import ARTIFACTS
 
-    _emb = _lt(spark, sf_dir, "embeddings")
-    samples = []
-    for _ in range(RUNS):
-        d = tempfile.mkdtemp(prefix="ivf_build_bench_")
-        t0 = time.perf_counter()
-        materialize_ivf(_emb, d, cell_col="label")
-        samples.append(time.perf_counter() - t0)
-        shutil.rmtree(d, ignore_errors=True)
-    twins["ivf_build"] = round(statistics.median(samples), 3)
-
-    # the residual-PQ codes and the cluster-curation membership are
-    # likewise ingest-time artifacts (the suite entries probe per-sf
-    # stored layouts, the _ivf_layout stance) -- their COLD build
-    # costs are timed explicitly here so the amortization hides
-    # nothing
-    from solana_data_etl_pipeline_spark.operators.similarity import (
-        lloyd_cells as _lc_build,
-        reconstructed_pq_residual as _rpr_build,
-    )
-    from solana_data_etl_pipeline_spark.operators.text import hash_embed as _he_build
-
-    samples = []
-    for _ in range(RUNS):
-        d = tempfile.mkdtemp(prefix="pq_build_bench_")
-        t0 = time.perf_counter()
-        _rpr_build(_emb).write.mode("overwrite").parquet(d)
-        samples.append(time.perf_counter() - t0)
-        shutil.rmtree(d, ignore_errors=True)
-    twins["pq_build"] = round(statistics.median(samples), 3)
-
-    from solana_data_etl_pipeline_spark.operators.similarity import (
-        reconstructed_int8 as _ri8_build,
-    )
-
-    samples = []
-    for _ in range(RUNS):
-        d = tempfile.mkdtemp(prefix="int8_build_bench_")
-        t0 = time.perf_counter()
-        _lc_build(_ri8_build(_emb)).write.mode("overwrite").parquet(d)
-        samples.append(time.perf_counter() - t0)
-        shutil.rmtree(d, ignore_errors=True)
-    twins["int8_build"] = round(statistics.median(samples), 3)
-
-    # the MRL (truncated-prefix) rung's cold fit+write (VERDICT r12
-    # #6: the suite entry now probes the per-sf stored 16-dim layout
-    # like its int8/PQ siblings; this twin prices the amortization)
-    from solana_data_etl_pipeline_spark.operators.similarity import _dvec as _dv_build
-    from solana_data_etl_pipeline_spark.plans.suite import MRL_DIM as _MRL_DIM
-
-    samples = []
-    for _ in range(RUNS):
-        d = tempfile.mkdtemp(prefix="mrl_build_bench_")
-        t0 = time.perf_counter()
-        _lc_build(
-            _emb.select(
-                "vec_id",
-                F.slice(_dv_build(F.col("embedding")), 1, _MRL_DIM).alias("embedding"),
-            ),
-            dim=_MRL_DIM,
-        ).write.mode("overwrite").parquet(d)
-        samples.append(time.perf_counter() - t0)
-        shutil.rmtree(d, ignore_errors=True)
-    twins["mrl_build"] = round(statistics.median(samples), 3)
-
-    _docs_build = _lt(spark, sf_dir, "documents")
-    samples = []
-    for _ in range(RUNS):
-        d = tempfile.mkdtemp(prefix="cluster_fit_bench_")
-        t0 = time.perf_counter()
-        _lc_build(_he_build(_docs_build)).select(
-            F.col("vec_id").alias("doc_id"), "cell"
-        ).write.mode("overwrite").parquet(d)
-        samples.append(time.perf_counter() - t0)
-        shutil.rmtree(d, ignore_errors=True)
-    twins["cluster_fit_build"] = round(statistics.median(samples), 3)
-
-    # the trained-BPE artifact (merges + per-word piece counts) the
-    # suite's bpe_train/bpe_encode entries probe is likewise built
-    # once per process (_bpe_layout_dir) -- its cold 8-round training
-    # cost is timed here so the amortization hides nothing
-    from solana_data_etl_pipeline_spark.operators.text import _bpe_loop as _bpe_build
-
-    samples = []
-    for _ in range(RUNS):
-        d = tempfile.mkdtemp(prefix="bpe_build_bench_")
-        t0 = time.perf_counter()
-        _m, _s = _bpe_build(_docs_build, n_merges=8)
-        _m.write.mode("overwrite").parquet(f"{d}/merges")
-        _s.select("w", F.size("s").cast("long").alias("n_pieces")).write.mode(
-            "overwrite"
-        ).parquet(f"{d}/vocab")
-        samples.append(time.perf_counter() - t0)
-        shutil.rmtree(d, ignore_errors=True)
-    twins["bpe_train_build"] = round(statistics.median(samples), 3)
-
-    # the stored text-retrieval layouts the indexed entries probe --
-    # the 256-way-pfx bm25 postings and the (table, bucket)-partitioned
-    # LSH bucket directory (r14) -- are ingest-cadence artifacts built
-    # by the warm pass; their cold build+write costs are priced here
-    # so the amortization hides nothing (VERDICT r13 #4)
-    from solana_data_etl_pipeline_spark.operators.similarity import (
-        materialize_lsh_rows as _mlr_build,
-    )
-    from solana_data_etl_pipeline_spark.operators.text import (
-        materialize_inverted_index as _mii_build,
-    )
-
-    for tag, build in (
-        ("bm25_index_build", lambda d: _mii_build(_docs_build, d)),
-        ("lsh_index_build", lambda d: _mlr_build(_he_build(_docs_build), d)),
-    ):
+    for name, build in ARTIFACTS.items():
         samples = []
         for _ in range(RUNS):
-            d = tempfile.mkdtemp(prefix=f"{tag}_bench_")
+            d = tempfile.mkdtemp(prefix=f"{name}_build_bench_")
             t0 = time.perf_counter()
-            build(d)
+            build(spark, sf_dir, d)
             samples.append(time.perf_counter() - t0)
             shutil.rmtree(d, ignore_errors=True)
-        twins[tag] = round(statistics.median(samples), 3)
-
-    # the semdedup keeper layouts the suite entries probe are likewise
-    # ingest-cadence artifacts (dedup runs once per corpus snapshot;
-    # consumers read keepers) -- their cold computation+write costs
-    # are timed here so the amortization hides nothing. The ladder
-    # composition's build is measured beside the plain form's: the
-    # exact stage's extra groupBy is the price of replica immunity
-    # (SCALE.md round-12: 21.3x -> 1.21x under 10x replicas).
-    from solana_data_etl_pipeline_spark.operators.dedup import (
-        semdedup_exact_first as _sef_build,
-        semdedup_keepers_multiprobe as _smp_build,
-    )
-
-    _emb_sd = _lt(spark, sf_dir, "embeddings")
-    for tag, build in (
-        ("semdedup_build", lambda: _smp_build(_emb_sd, threshold=0.5, nprobe=3)),
-        ("semdedup_exact_first_build", lambda: _sef_build(_emb_sd, threshold=0.5, nprobe=3)),
-    ):
-        samples = []
-        for _ in range(RUNS):
-            d = tempfile.mkdtemp(prefix="semdedup_build_bench_")
-            t0 = time.perf_counter()
-            build().write.mode("overwrite").parquet(d)
-            samples.append(time.perf_counter() - t0)
-            shutil.rmtree(d, ignore_errors=True)
-        twins[tag] = round(statistics.median(samples), 3)
+        twins[f"{name}_build"] = round(statistics.median(samples), 3)
 
     # measured recall of the approximate plans against their exact
     # twins (non-graded, like the twin timings): turns the analytic
@@ -782,9 +641,9 @@ def main() -> None:
     from solana_data_etl_pipeline_spark.operators.dedup import (
         delta_embedding_dedup as _ded,
     )
-    from solana_data_etl_pipeline_spark.plans.suite import _delta_embedding_index
+    from solana_data_etl_pipeline_spark.plans.suite import artifact_path
 
-    _eidx = _delta_embedding_index(spark, sf_dir)
+    _eidx = artifact_path(spark, sf_dir, "delta_embedding_index")
     rng2 = np.random.default_rng(43)
     rows2 = []
     for r in emb_tbl.filter(F.col("vec_id") % 10 != 7).orderBy("vec_id").limit(50).collect():
@@ -850,22 +709,13 @@ def main() -> None:
     # context-restart protocol moved the same-code total 102.8 ->
     # 56.5 s (SCALE.md ladder) -- so the artifact itself must say
     # which protocol produced it, keeping cross-round totals
-    # comparable without reading SCALE.md. amortized_layouts lists
-    # the per-sf ingest artifacts the warm pass builds (their cold
-    # costs are the *_build twins in baseline_twins).
+    # comparable without reading SCALE.md. amortized_layouts is the
+    # registry of per-sf ingest artifacts (plans.suite.ARTIFACTS; their
+    # cold costs are the *_build twins in baseline_twins).
     protocol = {
-        "warm_pass": not raw_protocol,
-        "context_restart": not raw_protocol,
-        "amortized_layouts": [
-            "semdedup_keepers",
-            "semdedup_exact_first",
-            "bm25_postings",
-            "text_lsh_buckets",
-            "bpe_vocab",
-            "cluster_membership",
-            "ivf_cells",
-            "mrl_cells",
-        ],
+        "warm_pass": True,
+        "context_restart": True,
+        "amortized_layouts": sorted(ARTIFACTS),
     }
     # Full payload first (tools/solobench.py captures complete stdout
     # and picks the LONGEST JSON line), then a compact summary as the

@@ -13,6 +13,12 @@ across engines.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import itertools
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +39,51 @@ from solana_data_etl_pipeline_spark.plans import temporal as T
 from solana_data_etl_pipeline_spark.plans.testdata_model import NORM_SQL, as_of, load_table, normalized_events
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+
+# ---------------------------------------------------------------------------
+# per-sf ingest artifacts
+
+#: name -> build(spark, sf_dir, path): the derived tables and indexes
+#: the suite builds once at ingest cadence and then probes, like the
+#: reference's derived tables. Filled by @artifact next to each build.
+#: bench.py prices every entry as a cold `<name>_build` twin and lists
+#: them all as the protocol's amortized layouts.
+ARTIFACTS: dict[str, Callable[[SparkSession, str, str], None]] = {}
+_BUILT: dict[tuple[str, str], str] = {}
+_SEQ = itertools.count()
+
+
+def artifact(name: str):
+    """Register the decorated ``build(spark, sf_dir, path)`` as ARTIFACTS[name]."""
+
+    def register(build):
+        ARTIFACTS[name] = build
+        return build
+
+    return register
+
+
+@functools.cache
+def _artifact_root() -> str:
+    root = tempfile.mkdtemp(prefix="suite_artifacts_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def artifact_path(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Directory holding artifact `name` built over `sf_dir`. Each
+    (name, sf_dir) is built at most once per process, so repeated
+    invocations of a probe (bench RUNS samples, driver retries) read
+    ONE artifact instead of building and leaking a fresh one per call.
+    Every artifact lives under one temp root, removed at exit."""
+    key = (name, sf_dir)
+    if key not in _BUILT:
+        path = os.path.join(_artifact_root(), f"{name}-{next(_SEQ)}")
+        os.mkdir(path)
+        ARTIFACTS[name](spark, sf_dir, path)
+        _BUILT[key] = path
+    return _BUILT[key]
+
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments (oracle side)
@@ -674,36 +725,22 @@ def _docs(plan) -> QueryFn:
     return run
 
 
-#: per-sf cached cluster membership (the _ivf_layout amortization)
-_CLUSTER_MEMBER: dict[str, str] = {}
-
-
-def _cluster_member(spark: SparkSession, sf_dir: str) -> DataFrame:
+@artifact("cluster_fit")
+def _build_cluster_member(spark: SparkSession, sf_dir: str, path: str) -> None:
     """The ingest-time cluster assignment (hash_embed -> lloyd_cells
     membership, written as a parquet side table) shared by the
     cluster-curation entries (corpus_topic_map,
-    cluster_prune_keepers) -- the same amortization stance as
-    _ivf_layout: clustering runs ONCE at ingest cadence, every
+    cluster_prune_keepers) -- the same amortization stance as the
+    `ivf` layout: clustering runs ONCE at ingest cadence, every
     curation consumer probes the stored assignment, and the cold fit
-    cost stays separately measured as bench.py's `cluster_fit_build`
-    twin. Parquet stores the (doc_id, cell) longs exactly, so the
-    layout is value-identical to the inline fit (oracles replay the
-    fit from the corpus and stay green either way)."""
-    path = _CLUSTER_MEMBER.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        docs = load_table(spark, sf_dir, "documents")
-        mem = V.lloyd_cells(X.hash_embed(docs)).select(
-            F.col("vec_id").alias("doc_id"), "cell"
-        )
-        path = tempfile.mkdtemp(prefix="cluster_member_")
-        mem.write.mode("overwrite").parquet(path)
-        _CLUSTER_MEMBER[sf_dir] = path
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return spark.read.parquet(path)
+    cost stays separately measured by the registry's bench twin.
+    Parquet stores the (doc_id, cell) longs exactly, so the layout is
+    value-identical to the inline fit (oracles replay the fit from the
+    corpus and stay green either way)."""
+    docs = load_table(spark, sf_dir, "documents")
+    V.lloyd_cells(X.hash_embed(docs)).select(
+        F.col("vec_id").alias("doc_id"), "cell"
+    ).write.mode("overwrite").parquet(path)
 
 
 # the registered mix: keep all of src0, half of src1, a tenth of src2,
@@ -728,85 +765,43 @@ _PACK_BUDGET = 512
 # actually discriminates); BM25 defaults k1=1.2 b=0.75
 _BM25_TERMS = ["spark", "window", "merge", "query"]
 
-#: materialized inverted-index dirs keyed by sf_dir -- the
-#: _DELTA_DEDUP_INDEX lifecycle (build once per process, atexit
-#: cleanup); bm25_indexed probes it instead of scanning the corpus
-_BM25_INDEX: dict[str, str] = {}
+#: the materialized inverted index; bm25_indexed probes it instead of
+#: scanning the corpus
+@artifact("bm25_index")
+def _build_bm25_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    X.materialize_inverted_index(load_table(spark, sf_dir, "documents"), path)
 
 
-def _bm25_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    path = _BM25_INDEX.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        docs = load_table(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="bm25_index_")
-        X.materialize_inverted_index(docs, path)
-        _BM25_INDEX[sf_dir] = path
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
-
-
-#: stored text-corpus LSH bucket indexes keyed by sf_dir -- hash_embed
-#: run once over the documents, then the exploded (vec_id, c_emb,
-#: c_norm, table, bucket) rows written as a parquet side table
-#: (similarity.materialize_lsh_rows: the classic bucket->members LSH
-#: table layout). Written once per process per sf (the
-#: _cluster_member stance: encoding AND bucketing are ingest-time
-#: artifacts; hybrid_rank_indexed's semantic member probes the index
-#: instead of re-encoding and re-bucketing the corpus per query --
-#: VERDICT r11 #4). Parquet stores the doubles exactly, so the probe
-#: is value-identical to the inline knn_lsh form.
-_TEXT_LSH_INDEX: dict[str, str] = {}
+#: stored text-corpus LSH bucket index -- hash_embed run once over the
+#: documents, then the exploded (vec_id, c_emb, c_norm, table, bucket)
+#: rows written as a parquet side table (similarity.materialize_lsh_rows:
+#: the classic bucket->members LSH table layout). The `cluster_fit`
+#: stance: encoding AND bucketing are ingest-time artifacts;
+#: hybrid_rank_indexed's semantic member probes the index instead of
+#: re-encoding and re-bucketing the corpus per query -- VERDICT r11
+#: #4. Parquet stores the doubles exactly, so the probe is
+#: value-identical to the inline knn_lsh form.
+@artifact("lsh_index")
+def _build_text_lsh_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    V.materialize_lsh_rows(X.hash_embed(load_table(spark, sf_dir, "documents")), path)
 
 
-def _text_lsh_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    path = _TEXT_LSH_INDEX.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        docs = load_table(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="text_lsh_index_")
-        V.materialize_lsh_rows(X.hash_embed(docs), path)
-        _TEXT_LSH_INDEX[sf_dir] = path
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
-
-
-#: trained-BPE artifact dirs keyed by sf_dir -- merges/ (the learned
-#: merge table, bpe_train's contract frame) and vocab/ (per-word
-#: piece counts, the encoder bpe_encode_with_vocab joins). One
-#: training run per process per sf (cold cost = bench
-#: `bpe_train_build`); both suite entries probe the stored layout
-#: (ADVICE r11: registering train + encode inline executed the
-#: 8-round training DAG twice per pass). Parquet stores the
-#: (string, int/long) columns exactly, so the stored path is
-#: value-identical to inline training -- the oracles replay all 8
-#: merge rounds from the corpus and stay green either way.
-_BPE_LAYOUT: dict[str, str] = {}
-
-
-def _bpe_layout_dir(spark: SparkSession, sf_dir: str) -> str:
-    path = _BPE_LAYOUT.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        docs = load_table(spark, sf_dir, "documents")
-        merges, syms = X._bpe_loop(docs, n_merges=8)
-        path = tempfile.mkdtemp(prefix="bpe_layout_")
-        merges.write.mode("overwrite").parquet(f"{path}/merges")
-        syms.select(
-            "w", F.size("s").cast("long").alias("n_pieces")
-        ).write.mode("overwrite").parquet(f"{path}/vocab")
-        _BPE_LAYOUT[sf_dir] = path
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+#: trained-BPE artifact -- merges/ (the learned merge table,
+#: bpe_train's contract frame) and vocab/ (per-word piece counts, the
+#: encoder bpe_encode_with_vocab joins). One training run per process
+#: per sf; both suite entries probe the stored layout (ADVICE r11:
+#: registering train + encode inline executed the 8-round training
+#: DAG twice per pass). Parquet stores the (string, int/long) columns
+#: exactly, so the stored path is value-identical to inline training
+#: -- the oracles replay all 8 merge rounds from the corpus and stay
+#: green either way.
+@artifact("bpe_train")
+def _build_bpe_layout(spark: SparkSession, sf_dir: str, path: str) -> None:
+    merges, syms = X._bpe_loop(load_table(spark, sf_dir, "documents"), n_merges=8)
+    merges.write.mode("overwrite").parquet(f"{path}/merges")
+    syms.select(
+        "w", F.size("s").cast("long").alias("n_pieces")
+    ).write.mode("overwrite").parquet(f"{path}/vocab")
 
 
 TEXT_QUERIES: dict[str, QueryFn] = {
@@ -827,11 +822,13 @@ TEXT_QUERIES: dict[str, QueryFn] = {
     # same permutation (n_shards=16, seed=7): per shard, doc count +
     # order-insensitive (id, pos) multiset digest -- the artifact a
     # re-export or training job checks instead of re-reading bytes.
-    # The export runs once per sf_dir (temp dir, atexit-cleaned) and
-    # the query reads it back, so the driver row also exercises the
-    # writer's partitionBy/pos-sort contract end to end
+    # The export runs once per sf_dir (the `shard_export` artifact)
+    # and the query reads it back, so the driver row also exercises
+    # the writer's partitionBy/pos-sort contract end to end
     "shard_manifest": (
-        lambda spark, sf_dir: SH.shard_manifest(spark, _shard_export_dir(spark, sf_dir))
+        lambda spark, sf_dir: SH.shard_manifest(
+            spark, artifact_path(spark, sf_dir, "shard_export")
+        )
     ),
     "vocab_top_words": _docs(X.vocab_top_words),
     # Count-Min sketch on the token stream, graded against the exact
@@ -852,7 +849,7 @@ TEXT_QUERIES: dict[str, QueryFn] = {
     # IDENTICAL to the scan form -- shared oracle
     "bm25_indexed": (
         lambda spark, sf_dir: X.bm25_rank_indexed(
-            spark, _bm25_index_dir(spark, sf_dir), _BM25_TERMS
+            spark, artifact_path(spark, sf_dir, "bm25_index"), _BM25_TERMS
         )
     ),
     # hybrid retrieval: RRF fusion of bm25_rank and the hash_embed ->
@@ -868,10 +865,10 @@ TEXT_QUERIES: dict[str, QueryFn] = {
     "hybrid_rank_indexed": (
         lambda spark, sf_dir: X.hybrid_rank_indexed(
             spark,
-            _bm25_index_dir(spark, sf_dir),
+            artifact_path(spark, sf_dir, "bm25_index"),
             # the PATH, not pre-read rows: engages the _lsh_meta
             # build-parameter pinning (ADVICE r12)
-            _text_lsh_index_dir(spark, sf_dir),
+            artifact_path(spark, sf_dir, "lsh_index"),
             _BM25_TERMS,
         )
     ),
@@ -1010,12 +1007,12 @@ TEXT_QUERIES: dict[str, QueryFn] = {
         )
     ),
     # MiniPile-style cluster inspection table: the SHARED ingest-time
-    # membership (_cluster_member, fit cost = bench cluster_fit_build)
+    # membership (the `cluster_fit` artifact)
     # -> per-cluster mass/source/top-terms rollup
     "corpus_topic_map": (
         lambda spark, sf_dir: C.corpus_topic_map(
             load_table(spark, sf_dir, "documents"),
-            member=_cluster_member(spark, sf_dir),
+            member=spark.read.parquet(artifact_path(spark, sf_dir, "cluster_fit")),
         )
     ),
     # ...and its ACTING form: drop whole clusters below the
@@ -1024,7 +1021,7 @@ TEXT_QUERIES: dict[str, QueryFn] = {
     "cluster_prune_keepers": (
         lambda spark, sf_dir: C.cluster_prune_keepers(
             load_table(spark, sf_dir, "documents"),
-            member=_cluster_member(spark, sf_dir),
+            member=spark.read.parquet(artifact_path(spark, sf_dir, "cluster_fit")),
         )
     ),
     # per-source data-acquisition scorecard: registered quality
@@ -1236,16 +1233,16 @@ TEXT_QUERIES: dict[str, QueryFn] = {
     # the full iterative BPE trainer (bpe_merge_stats is one round):
     # 8 learned merges over the frequency-weighted word vocabulary.
     # Both entries probe the per-sf stored training artifact
-    # (_bpe_layout_dir -- merges table + per-word piece counts), the
+    # (`bpe_train` -- merges table + per-word piece counts), the
     # materialized-index stance every other ingest-time artifact
-    # here takes: training runs ONCE per process per sf (cold cost =
-    # bench `bpe_train_build`) instead of the 8-round DAG executing
-    # twice per suite pass (ADVICE r11). Value-identical to inline
-    # training (parquet-exact strings/longs); the oracles replay the
-    # full training from the corpus.
+    # here takes: training runs ONCE per process per sf instead of
+    # the 8-round DAG executing twice per suite pass (ADVICE r11).
+    # Value-identical to inline training (parquet-exact
+    # strings/longs); the oracles replay the full training from the
+    # corpus.
     "bpe_train": (
         lambda spark, sf_dir: spark.read.parquet(
-            f"{_bpe_layout_dir(spark, sf_dir)}/merges"
+            f"{artifact_path(spark, sf_dir, 'bpe_train')}/merges"
         )
     ),
     # ...and its downstream half: encode the corpus with the learned
@@ -1254,7 +1251,7 @@ TEXT_QUERIES: dict[str, QueryFn] = {
     "bpe_encode": (
         lambda spark, sf_dir: X.bpe_encode_with_vocab(
             load_table(spark, sf_dir, "documents"),
-            spark.read.parquet(f"{_bpe_layout_dir(spark, sf_dir)}/vocab"),
+            spark.read.parquet(f"{artifact_path(spark, sf_dir, 'bpe_train')}/vocab"),
         )
     ),
     # vocab-based numericalization: frequency-ranked ids, 0 = unk
@@ -3033,71 +3030,33 @@ def _cap_guard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("family")
 
 
-#: materialized LSH index dirs keyed by sf_dir -- the index build is
-#: the SETUP of the incremental-dedup scenario (ingest/compaction
-#: cadence in production), so repeated invocations of the query fn
-#: (bench RUNS samples, driver retries) must time/probe ONE index, not
-#: build-and-leak a fresh tempdir per call.
-_DELTA_DEDUP_INDEX: dict[str, str] = {}
+#: materialized minhash LSH index over the corpus side of the
+#: deterministic split (doc_id % 10 != 7) -- the index build is the
+#: SETUP of the incremental-dedup scenario (ingest/compaction cadence
+#: in production), so probes read the stored index.
+@artifact("delta_minhash_index")
+def _build_delta_minhash_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    docs = load_table(spark, sf_dir, "documents")
+    D.materialize_minhash(docs.filter(~(F.col("doc_id") % 10 == 7)), path)
 
 
-def _delta_dedup_index(spark: SparkSession, sf_dir: str) -> str:
-    path = _DELTA_DEDUP_INDEX.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        docs = load_table(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="minhash_index_")
-        D.materialize_minhash(docs.filter(~(F.col("doc_id") % 10 == 7)), path)
-        _DELTA_DEDUP_INDEX[sf_dir] = path
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+#: exported training shards -- the export mirrors the registered
+#: training_shuffle's (n_shards=16, seed=7) permutation so the
+#: manifest oracle can re-derive the assignment in SQL.
+@artifact("shard_export")
+def _build_shard_export(spark: SparkSession, sf_dir: str, path: str) -> None:
+    docs = load_table(spark, sf_dir, "documents")
+    SH.export_shards(docs.select("doc_id", "text"), path, n_shards=16, seed=7)
 
 
-#: exported training-shard dirs keyed by sf_dir -- same rationale and
-#: lifecycle as _DELTA_DEDUP_INDEX above; the export mirrors the
-#: registered training_shuffle's (n_shards=16, seed=7) permutation so
-#: the manifest oracle can re-derive the assignment in SQL.
-_SHARD_EXPORT: dict[str, str] = {}
-
-
-def _shard_export_dir(spark: SparkSession, sf_dir: str) -> str:
-    path = _SHARD_EXPORT.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        docs = load_table(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="shard_export_")
-        SH.export_shards(docs.select("doc_id", "text"), path, n_shards=16, seed=7)
-        _SHARD_EXPORT[sf_dir] = path
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
-
-
-#: materialized winnowing decontamination index dirs keyed by sf_dir
-#: -- same rationale and lifecycle as _DELTA_DEDUP_INDEX above.
-_DELTA_WINNOW_INDEX: dict[str, str] = {}
-
-
-def _delta_winnow_index(spark: SparkSession, sf_dir: str) -> str:
-    path = _DELTA_WINNOW_INDEX.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        docs = load_table(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="winnow_index_")
-        D.materialize_winnow(
-            docs.filter(~(F.col("doc_id") % 10 == 7)), path, max_bucket=DEDUP_MAX_BUCKET
-        )
-        _DELTA_WINNOW_INDEX[sf_dir] = path
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+#: materialized winnowing decontamination index over the corpus side
+#: of the same split as `delta_minhash_index`.
+@artifact("delta_winnow_index")
+def _build_delta_winnow_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    docs = load_table(spark, sf_dir, "documents")
+    D.materialize_winnow(
+        docs.filter(~(F.col("doc_id") % 10 == 7)), path, max_bucket=DEDUP_MAX_BUCKET
+    )
 
 
 def _delta_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3109,7 +3068,7 @@ def _delta_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-width with corpus size (the 10x sweep measured the blowup)
     -- and the oracle mirrors the corpus-side cap exactly."""
     docs = load_table(spark, sf_dir, "documents")
-    path = _delta_winnow_index(spark, sf_dir)
+    path = artifact_path(spark, sf_dir, "delta_winnow_index")
     return D.delta_containment(
         spark, path, docs.filter(F.col("doc_id") % 10 == 7), threshold=0.5
     ).orderBy("delta_id", "corpus_id")
@@ -3122,32 +3081,20 @@ def _delta_containment_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate) list -- the cap loss as a per-document routing
     signal instead of a corpus-level aggregate."""
     docs = load_table(spark, sf_dir, "documents")
-    path = _delta_winnow_index(spark, sf_dir)
+    path = artifact_path(spark, sf_dir, "delta_winnow_index")
     return D.delta_containment_exposure(
         spark, path, docs.filter(F.col("doc_id") % 10 == 7)
     ).orderBy("delta_id")
 
 
-#: materialized embedding-LSH index dirs keyed by sf_dir -- same
-#: rationale and lifecycle as _DELTA_DEDUP_INDEX above.
-_DELTA_EMB_INDEX: dict[str, str] = {}
-
-
-def _delta_embedding_index(spark: SparkSession, sf_dir: str) -> str:
-    path = _DELTA_EMB_INDEX.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        path = tempfile.mkdtemp(prefix="emb_lsh_index_")
-        D.materialize_embedding_lsh(
-            emb.filter(~(F.col("vec_id") % 10 == 7)), path, max_bucket=DEDUP_MAX_BUCKET
-        )
-        _DELTA_EMB_INDEX[sf_dir] = path
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+#: materialized embedding-LSH index over the corpus side of the
+#: same split as `delta_minhash_index` (vec_id % 10 != 7).
+@artifact("delta_embedding_index")
+def _build_delta_embedding_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    emb = load_table(spark, sf_dir, "embeddings")
+    D.materialize_embedding_lsh(
+        emb.filter(~(F.col("vec_id") % 10 == 7)), path, max_bucket=DEDUP_MAX_BUCKET
+    )
 
 
 def _delta_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3159,7 +3106,7 @@ def _delta_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the registered suite's 0.35 threshold. Oracle mirrors the
     corpus-side cap exactly."""
     emb = load_table(spark, sf_dir, "embeddings")
-    path = _delta_embedding_index(spark, sf_dir)
+    path = artifact_path(spark, sf_dir, "delta_embedding_index")
     return D.delta_embedding_dedup(
         spark, path, emb.filter(F.col("vec_id") % 10 == 7), threshold=0.35
     ).orderBy("vec_id")
@@ -3171,7 +3118,7 @@ def _delta_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the delta batch (doc_id % 10 == 7). Deterministic split, so the
     oracle recomputes the same pairs set-based."""
     docs = load_table(spark, sf_dir, "documents")
-    path = _delta_dedup_index(spark, sf_dir)
+    path = artifact_path(spark, sf_dir, "delta_minhash_index")
     return D.delta_dedup_materialized(
         spark, path, docs.filter(F.col("doc_id") % 10 == 7), threshold=0.2
     ).orderBy("doc_id")
@@ -3246,7 +3193,7 @@ DEDUP_QUERIES: dict[str, QueryFn] = {
     "delta_embedding_exposure": (
         lambda spark, sf_dir: D.delta_embedding_exposure(
             spark,
-            _delta_embedding_index(spark, sf_dir),
+            artifact_path(spark, sf_dir, "delta_embedding_index"),
             load_table(spark, sf_dir, "embeddings").filter(
                 F.col("vec_id") % 10 == 7
             ),
@@ -3464,19 +3411,16 @@ DEDUP_QUERIES: dict[str, QueryFn] = {
     # existed to cut is gone once tau stops percolating). Routing
     # rule: tau is the regime dial -- percolating tau = sampler
     # semantics (the _scaled form), near-dup tau = this form.
-    # both registered semdedup forms probe the per-sf stored keeper
-    # layout (_semdedup_layout_dir): corpus dedup runs at INGEST
-    # cadence -- downstream consumers read keepers, nobody re-dedups
-    # the same corpus snapshot per query -- the same materialized-
-    # artifact stance as _cluster_member / _pq_layout (cold costs
-    # benched as `semdedup_build` / `semdedup_exact_first_build`).
-    # Parquet stores the (long, long, long, 4dp-double) keeper rows
-    # exactly; the oracles replay the FULL computation from the
-    # corpus and stay green either way.
+    # both registered semdedup forms probe a per-sf stored keeper
+    # layout (the `semdedup` / `semdedup_exact_first` artifacts):
+    # corpus dedup runs at INGEST cadence -- downstream consumers
+    # read keepers, nobody re-dedups the same corpus snapshot per
+    # query -- the same materialized-artifact stance as `cluster_fit`
+    # / `pq`. Parquet stores the (long, long, long, 4dp-double)
+    # keeper rows exactly; the oracles replay the FULL computation
+    # from the corpus and stay green either way.
     "semdedup_near_dup": (
-        lambda spark, sf_dir: spark.read.parquet(
-            f"{_semdedup_layout_dir(spark, sf_dir)}/near_dup"
-        )
+        lambda spark, sf_dir: spark.read.parquet(artifact_path(spark, sf_dir, "semdedup"))
     ),
     # the dedup-ladder contract as a registered plan (VERDICT r11
     # #3): exact dedup absorbs byte-identical copies BEFORE the
@@ -3486,35 +3430,30 @@ DEDUP_QUERIES: dict[str, QueryFn] = {
     # 1.21x under the 10x byte-identical replica protocol)
     "semdedup_exact_first": (
         lambda spark, sf_dir: spark.read.parquet(
-            f"{_semdedup_layout_dir(spark, sf_dir)}/exact_first"
+            artifact_path(spark, sf_dir, "semdedup_exact_first")
         )
     ),
 }
 
 
-#: stored semdedup keeper layouts keyed by sf_dir -- see the
-#: registration comment above; built once per process per sf
-_SEMDEDUP_LAYOUT: dict[str, str] = {}
+#: the stored semdedup keeper layouts -- see the registration comment
+#: above. The ladder composition is its own artifact, so its build is
+#: priced beside the plain form's: the exact stage's extra groupBy is
+#: the price of replica immunity.
+@artifact("semdedup")
+def _build_semdedup(spark: SparkSession, sf_dir: str, path: str) -> None:
+    emb = load_table(spark, sf_dir, "embeddings")
+    D.semdedup_keepers_multiprobe(emb, threshold=0.5, nprobe=3).write.mode(
+        "overwrite"
+    ).parquet(path)
 
 
-def _semdedup_layout_dir(spark: SparkSession, sf_dir: str) -> str:
-    path = _SEMDEDUP_LAYOUT.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        path = tempfile.mkdtemp(prefix="semdedup_layout_")
-        D.semdedup_keepers_multiprobe(emb, threshold=0.5, nprobe=3).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/near_dup")
-        D.semdedup_exact_first(emb, threshold=0.5, nprobe=3).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/exact_first")
-        _SEMDEDUP_LAYOUT[sf_dir] = path
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+@artifact("semdedup_exact_first")
+def _build_semdedup_exact_first(spark: SparkSession, sf_dir: str, path: str) -> None:
+    emb = load_table(spark, sf_dir, "embeddings")
+    D.semdedup_exact_first(emb, threshold=0.5, nprobe=3).write.mode(
+        "overwrite"
+    ).parquet(path)
 
 def _minhash_sigs_sql(num_hashes: int = D.MINHASH_HASHES) -> str:
     """Mirror of dedup.minhash_signatures: md5 base hash once per
@@ -4767,41 +4706,24 @@ def _knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return V.knn_ivf(emb, queries_df, k=10, nprobe=2)
 
 
-#: materialized IVF layout dirs keyed by sf_dir -- same rationale and
-#: lifecycle as _DELTA_DEDUP_INDEX above: the layout build happens at
-#: ingest/compaction cadence in production, so repeated invocations
-#: (bench RUNS samples, driver retries) probe ONE layout instead of
-#: building-and-leaking a fresh tempdir per call.
-_IVF_LAYOUT: dict[str, str] = {}
-
-
-def _ivf_layout(spark: SparkSession, sf_dir: str) -> str:
-    path = _IVF_LAYOUT.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        path = tempfile.mkdtemp(prefix="ivf_layout_")
-        V.materialize_ivf(emb, path, cell_col="label")
-        _IVF_LAYOUT[sf_dir] = path
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+#: materialized IVF layout -- the layout build happens at
+#: ingest/compaction cadence in production.
+@artifact("ivf")
+def _build_ivf_layout(spark: SparkSession, sf_dir: str, path: str) -> None:
+    V.materialize_ivf(load_table(spark, sf_dir, "embeddings"), path, cell_col="label")
 
 
 def _knn_ivf_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production IVF shape end-to-end: build the cell-partitioned
-    layout + persisted centroids (amortized per sf_dir -- the
-    layout-build cost stays separately measured as bench.py's
-    `ivf_build` entry), then probe it -- the scan carries dynamic
+    layout + persisted centroids (the `ivf` artifact, amortized per
+    sf_dir and priced by its bench twin), then probe it -- the scan carries dynamic
     partition pruning to the probed cells (pinned in
     tests/test_similarity.py). Result-identical to `knn_ivf` (same
     ingest-time assignment: the label column), so it shares that
     query's oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    path = _ivf_layout(spark, sf_dir)
+    path = artifact_path(spark, sf_dir, "ivf")
     return V.knn_ivf_materialized(spark, path, queries_df, k=10, nprobe=2)
 
 
@@ -5012,28 +4934,14 @@ SELECT query_id, neighbor_id, cosine, CAST(rnk AS INT) AS rank FROM (
 SIMILARITY_SQL["knn_ivf_kmeans"] = _lloyd_ivf_sql()
 
 
-#: per-sf cached int8 index layout (the _ivf_layout stance)
-_INT8_LAYOUT: dict[str, str] = {}
-
-
-def _int8_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
+@artifact("int8")
+def _build_int8_layout(spark: SparkSession, sf_dir: str, path: str) -> None:
     """The int8 index as its stored production artifact (the
     quantized vectors and their trained-cell assignment are written
     once at ingest): lloyd_cells over reconstructed_int8, persisted
-    as a per-sf parquet side table exactly like _pq_layout, cold
-    build cost measured as bench.py's `int8_build` twin."""
-    path = _INT8_LAYOUT.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        path = tempfile.mkdtemp(prefix="int8_layout_")
-        V.lloyd_cells(V.reconstructed_int8(emb)).write.mode("overwrite").parquet(path)
-        _INT8_LAYOUT[sf_dir] = path
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return spark.read.parquet(path)
+    as a per-sf parquet side table exactly like `pq`."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    V.lloyd_cells(V.reconstructed_int8(emb)).write.mode("overwrite").parquet(path)
 
 
 def _knn_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5042,12 +4950,11 @@ def _knn_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     int8-reconstructed vectors (quantize_embeddings' 4x-smaller
     storage), while queries arrive full-precision -- measuring
     exactly the recall the compression costs (planted bench rows
-    knn_ivf_int8_*). The index is the per-sf stored layout
-    (_int8_layout; build cost = bench `int8_build`) -- the
-    production read path, like the PQ rung."""
+    knn_ivf_int8_*). The index is the per-sf stored `int8`
+    artifact -- the production read path, like the PQ rung."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    assigned = _int8_layout(spark, sf_dir)
+    assigned = spark.read.parquet(artifact_path(spark, sf_dir, "int8"))
     return V.knn_ivf(assigned, queries_df, k=10, nprobe=2, cell_col="cell")
 
 
@@ -5064,31 +4971,17 @@ e AS (SELECT vec_id, list_transform(v, x -> round(x / s) * s) AS v FROM sc)"""
 SIMILARITY_SQL["knn_ivf_int8"] = _lloyd_ivf_sql(q_src="raw", e_cte=_INT8_E_CTE)
 
 
-#: per-sf cached residual-PQ index layout (the _ivf_layout stance)
-_PQ_LAYOUT: dict[str, str] = {}
-
-
-def _pq_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
+@artifact("pq")
+def _build_pq_layout(spark: SparkSession, sf_dir: str, path: str) -> None:
     """The residual-PQ index as the stored artifact it is in
     production (codebooks + codes are built ONCE at ingest; queries
     probe the stored reconstruction): reconstructed_pq_residual's
     (vec_id, embedding, cell) written as a parquet side table per sf,
-    amortized exactly like _ivf_layout, with the cold build cost
-    separately measured as bench.py's `pq_build` twin. Parquet stores
-    the doubles exactly, so probing the layout is value-identical to
-    probing the inline reconstruction."""
-    path = _PQ_LAYOUT.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        path = tempfile.mkdtemp(prefix="pq_layout_")
-        V.reconstructed_pq_residual(emb).write.mode("overwrite").parquet(path)
-        _PQ_LAYOUT[sf_dir] = path
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return spark.read.parquet(path)
+    amortized exactly like `ivf`. Parquet stores the doubles exactly,
+    so probing the layout is value-identical to probing the inline
+    reconstruction."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    V.reconstructed_pq_residual(emb).write.mode("overwrite").parquet(path)
 
 
 def _knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5103,11 +4996,11 @@ def _knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rung holds recall at ~100x compression -- planted @.95 recall
     1.00 vs the raw-vector form's saturated 0.70 at the SAME code
     budget (bench rows knn_ivf_pq_* vs knn_ivf_pq_raw_*). The index
-    is the per-sf stored layout (_pq_layout; build cost = bench
-    `pq_build`), probed here -- the production read path."""
+    is the per-sf stored `pq` artifact, probed here -- the production
+    read path."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    recon = _pq_layout(spark, sf_dir)
+    recon = spark.read.parquet(artifact_path(spark, sf_dir, "pq"))
     return V.knn_ivf(recon, queries_df, k=10, nprobe=2, cell_col="cell")
 
 
@@ -5203,33 +5096,20 @@ SIMILARITY_SQL["knn_ivf_pq"] = _lloyd_ivf_sql(
 #: Matryoshka prefix width: first 16 of 64 dims (4x memory cut)
 MRL_DIM = 16
 
-#: per-sf cached truncated-prefix index layout (the _ivf_layout stance)
-_MRL_LAYOUT: dict[str, str] = {}
-
-
-def _mrl_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
+@artifact("mrl")
+def _build_mrl_layout(spark: SparkSession, sf_dir: str, path: str) -> None:
     """The MRL index as its stored production artifact: the 16-dim
     truncated vectors and their Lloyd cell assignment, written once
-    per sf exactly like _int8_layout / _pq_layout (VERDICT r12 #6 --
-    the inline per-query fit was the heaviest window entry; MRL
-    deployments store and search the prefix space, so the fit IS an
-    ingest artifact). Cold build cost = bench.py's `mrl_build` twin."""
-    path = _MRL_LAYOUT.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        emb16 = emb.select(
-            "vec_id",
-            F.slice(V._dvec(F.col("embedding")), 1, MRL_DIM).alias("embedding"),
-        )
-        path = tempfile.mkdtemp(prefix="mrl_layout_")
-        V.lloyd_cells(emb16, dim=MRL_DIM).write.mode("overwrite").parquet(path)
-        _MRL_LAYOUT[sf_dir] = path
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return spark.read.parquet(path)
+    per sf exactly like `int8` / `pq` (VERDICT r12 #6 -- the inline
+    per-query fit was the heaviest window entry; MRL deployments
+    store and search the prefix space, so the fit IS an ingest
+    artifact)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    emb16 = emb.select(
+        "vec_id",
+        F.slice(V._dvec(F.col("embedding")), 1, MRL_DIM).alias("embedding"),
+    )
+    V.lloyd_cells(emb16, dim=MRL_DIM).write.mode("overwrite").parquet(path)
 
 
 def _knn_ivf_mrl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5252,13 +5132,12 @@ def _knn_ivf_mrl(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = emb16.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # the 16-dim Lloyd fit is the per-sf stored layout (_mrl_layout;
-    # build cost = bench `mrl_build`) -- the _cluster_member stance
-    # every sibling rung uses (VERDICT r12 #6: the inline fit made
+    # the 16-dim Lloyd fit is the per-sf stored `mrl` artifact -- the
+    # `cluster_fit` stance every sibling rung uses (VERDICT r12 #6: the inline fit made
     # this the heaviest window entry at 6.0 s solo while int8/PQ
     # probed stored layouts). The oracle replays the fit, so results
     # are unchanged.
-    assigned = _mrl_layout(spark, sf_dir)
+    assigned = spark.read.parquet(artifact_path(spark, sf_dir, "mrl"))
     return V.knn_ivf(assigned, queries_df, k=10, nprobe=2, cell_col="cell")
 
 

@@ -59,6 +59,14 @@ def touched_dates_predicate(dates: list) -> F.Column:
     return pred
 
 
+def _overwrite_partitions(df: DataFrame, path: str) -> None:
+    """Replace only the date partitions present in `df` (a per-write
+    dynamic partition overwrite; the session conf is left alone)."""
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        EVENT_DATE_COL
+    ).parquet(path)
+
+
 class Warehouse(Protocol):
     """L1: abstract sink surface (reference src/warehouse.rs:8-27)."""
 
@@ -161,13 +169,13 @@ class ParquetWarehouse:
             batch.unpersist()
         return n_new
 
-    def compact(self, target_files_per_partition: int = 1) -> int:
-        """Rewrite each date partition holding more than
-        `target_files_per_partition` files into that many slot-sorted
-        files; partitions already at or under the target are neither
-        read nor written. Incremental appends accumulate small files
-        (one per micro-batch per date); periodic compaction restores
-        scan efficiency. Returns the number of partitions rewritten.
+    def compact(self) -> int:
+        """Rewrite each date partition holding more than one file into
+        one slot-sorted file; partitions already at one file are
+        neither read nor written. Incremental appends accumulate small
+        files (one per micro-batch per date); periodic compaction
+        restores scan efficiency. Returns the number of partitions
+        rewritten.
 
         Runs per partition (bounded memory), so the rewrite cost scales
         with the data actually compacted, not with the table.
@@ -178,20 +186,14 @@ class ParquetWarehouse:
         files = Counter(os.path.basename(os.path.dirname(f)) for f in existing.inputFiles())
         done = 0
         for part_dir, n_files in sorted(files.items()):
-            if n_files <= target_files_per_partition:
+            if n_files == 1:
                 continue
             value = part_dir.split("=", 1)[1]
             date = None if value == HIVE_DEFAULT_PARTITION else dt.date.fromisoformat(value)
             part = existing.filter(touched_dates_predicate([date]))
-            merged = part.repartition(target_files_per_partition).sortWithinPartitions("slot")
+            merged = part.repartition(1).sortWithinPartitions("slot")
             merged = merged.localCheckpoint(eager=True)  # never re-scan files being replaced
-            conf = "spark.sql.sources.partitionOverwriteMode"
-            prev = self.spark.conf.get(conf, "static")
-            self.spark.conf.set(conf, "dynamic")
-            try:
-                merged.write.mode("overwrite").partitionBy(EVENT_DATE_COL).parquet(self.events_path)
-            finally:
-                self.spark.conf.set(conf, prev)
+            _overwrite_partitions(merged, self.events_path)
             done += 1
         return done
 
@@ -227,13 +229,7 @@ class ParquetWarehouse:
             # the write must never re-trigger a scan of the files it is
             # replacing (persist alone is evictable and would).
             merged = kept.select(*batch.columns).unionByName(batch).localCheckpoint(eager=True)
-            conf = "spark.sql.sources.partitionOverwriteMode"
-            prev = self.spark.conf.get(conf, "static")
-            self.spark.conf.set(conf, "dynamic")
-            try:
-                merged.write.mode("overwrite").partitionBy(EVENT_DATE_COL).parquet(self.events_path)
-            finally:
-                self.spark.conf.set(conf, prev)
+            _overwrite_partitions(merged, self.events_path)
             return n
         finally:
             batch.unpersist()
