@@ -16,16 +16,12 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
 def _configure(spark: SparkSession) -> SparkSession:
-    """Apply engine session conventions to a driver-provided session."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # coalesce post-shuffle partitions by bytes, not core count (see
-    # session.py -- measured r14 win on the small-shuffle queries at
-    # both 8 and 32 cores; scale-adaptive: the advisory byte target
-    # keeps corpus-scale shuffles wide)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    """Apply engine session conventions to a driver-provided session:
+    every runtime SQL conf get_spark sets (session.RUNTIME_CONF)."""
+    from solana_data_etl_pipeline_spark.session import RUNTIME_CONF
+
+    for key, value in RUNTIME_CONF.items():
+        spark.conf.set(key, value)
     return spark
 
 

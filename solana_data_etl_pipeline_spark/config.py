@@ -1,6 +1,7 @@
 """Env-var configuration with defaults.
 
-Parity with reference src/config.rs:1-94 (same knobs, same defaults);
+Parity with reference src/config.rs:1-94 (same defaults for every knob
+the engine reads);
 `Config.load()` mirrors the reference's behavior of returning env-var
 defaults (reference src/config.rs:89-94 ignores files too).
 """
@@ -44,13 +45,12 @@ class WarehouseConfig:
 
 @dataclass
 class EtlConfig:
-    """reference src/config.rs:64-83."""
+    """reference src/config.rs:72-79. The reference's batch size,
+    checkpoint interval and max slot lag have no counterpart: Spark
+    writes each chunk as one batch and checkpoints once per chunk."""
 
-    batch_size: int = field(default_factory=lambda: _env_int("ETL_BATCH_SIZE", 1000))
-    checkpoint_interval: int = field(default_factory=lambda: _env_int("ETL_CHECKPOINT_INTERVAL", 100))
     backfill_chunk_size: int = field(default_factory=lambda: _env_int("ETL_BACKFILL_CHUNK_SIZE", 1000))
     interval_seconds: int = field(default_factory=lambda: _env_int("ETL_INTERVAL_SECONDS", 30))
-    max_slot_lag: int = field(default_factory=lambda: _env_int("ETL_MAX_SLOT_LAG", 1000))
 
 
 @dataclass

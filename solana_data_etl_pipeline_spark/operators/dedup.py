@@ -21,10 +21,10 @@ Hash: h(s) = first 60 bits of md5(s), as a signed long (always >= 0).
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from solana_data_etl_pipeline_spark.operators.util import require_index_meta, write_index_meta
 
 MINHASH_HASHES = 16
 MINHASH_BANDS = 4
@@ -563,8 +563,8 @@ def materialize_minhash(
         )
     b.write.mode("overwrite").parquet(f"{path}/bands")
     _shingle_sets(df, text_col).write.mode("overwrite").parquet(f"{path}/shingles")
-    # the index self-describes its banding scheme (minhash_index_scheme)
-    write_minhash_index_meta(df.sparkSession, path, num_hashes, bands)
+    # the banding scheme defines band_sig: probes must use the index's
+    write_index_meta(df.sparkSession, path, {"num_hashes": num_hashes, "bands": bands})
 
 
 def delta_match_pairs(
@@ -573,8 +573,6 @@ def delta_match_pairs(
     delta: DataFrame,
     text_col: str = "text",
     threshold: float = 0.5,
-    num_hashes: int = MINHASH_HASHES,
-    bands: int = MINHASH_BANDS,
 ) -> tuple[DataFrame, DataFrame]:
     """Verified near-dup MATCH PAIRS of a delta batch against an
     already-materialized corpus index (materialize_minhash): returns
@@ -592,10 +590,9 @@ def delta_match_pairs(
     corpus index is scanned once and never shuffled; exact verify
     touches only candidate pairs. The index verify join reads
     `{path}/shingles` instead of corpus text -- the index is
-    self-contained."""
-    # the INDEX defines the banding scheme; the parameters are only
-    # the fallback for an index that does not exist yet
-    num_hashes, bands = minhash_index_scheme(spark, index_path, num_hashes, bands)
+    self-contained, banding scheme included (its `_meta`)."""
+    meta = require_index_meta(spark, index_path)
+    num_hashes, bands = meta["num_hashes"], meta["bands"]
     rows = num_hashes // bands
     idx_bands = spark.read.parquet(f"{index_path}/bands")
     idx_sh = spark.read.parquet(f"{index_path}/shingles")
@@ -654,8 +651,6 @@ def delta_dedup_materialized(
     delta: DataFrame,
     text_col: str = "text",
     threshold: float = 0.5,
-    num_hashes: int = MINHASH_HASHES,
-    bands: int = MINHASH_BANDS,
 ) -> DataFrame:
     """Incremental near-dup dedup: the doc_ids of `delta` that survive
     against an already-materialized corpus index -- the continuous-
@@ -670,9 +665,7 @@ def delta_dedup_materialized(
     twin of keep_representatives' min-label rule, without the
     iterative closure a single batch doesn't need). Pair discovery and
     plan shape live in delta_match_pairs."""
-    corpus_hits, delta_pairs = delta_match_pairs(
-        spark, index_path, delta, text_col, threshold, num_hashes, bands
-    )
+    corpus_hits, delta_pairs = delta_match_pairs(spark, index_path, delta, text_col, threshold)
     dropped_c = corpus_hits.select(F.col("delta_id").alias("doc_id")).distinct()
     dropped_d = delta_pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     # the dropped set is bounded by the delta batch -- broadcasting it
@@ -1583,8 +1576,8 @@ def materialize_winnow(
     excluded.write.mode("overwrite").parquet(f"{path}/excluded")
     fp.write.mode("overwrite").parquet(f"{path}/fingerprints")
     _shingle_sets(df, text_col).write.mode("overwrite").parquet(f"{path}/shingles")
-    # the index self-describes its winnowing scheme (winnow_index_scheme)
-    write_winnow_index_meta(df.sparkSession, path, k, window)
+    # (k, window) define the fingerprints: probes must use the index's
+    write_index_meta(df.sparkSession, path, {"k": k, "window": window})
 
 
 def delta_containment(
@@ -1593,8 +1586,6 @@ def delta_containment(
     delta: DataFrame,
     threshold: float = 0.5,
     min_shared: int = 1,
-    k: int = 5,
-    window: int = 4,
     text_col: str = "text",
 ) -> DataFrame:
     """Incremental DECONTAMINATION probe: verified containment hits
@@ -1624,12 +1615,10 @@ def delta_containment(
     query does exactly that with the cap mirrored in its oracle."""
     from solana_data_etl_pipeline_spark.operators.text import winnow_fingerprints
 
-    # the INDEX defines the winnowing scheme; the parameters are only
-    # the fallback for a pre-meta index
-    k, window = winnow_index_scheme(spark, index_path, k, window)
+    meta = require_index_meta(spark, index_path)
     idx_fp = spark.read.parquet(f"{index_path}/fingerprints")
     idx_sh = spark.read.parquet(f"{index_path}/shingles")
-    d_fp = winnow_fingerprints(delta, k=k, window=window, text_col=text_col)
+    d_fp = winnow_fingerprints(delta, k=meta["k"], window=meta["window"], text_col=text_col)
     d_sh = _shingle_sets(delta, text_col)
     cand = (
         idx_fp.alias("c")
@@ -1660,8 +1649,6 @@ def delta_containment_exposure(
     spark,
     index_path: str,
     delta: DataFrame,
-    k: int = 5,
-    window: int = 4,
     text_col: str = "text",
 ) -> DataFrame:
     """Per-document observability of the winnow index's capped blind
@@ -1688,10 +1675,9 @@ def delta_containment_exposure(
     report no rows (no fingerprints to be blind about)."""
     from solana_data_etl_pipeline_spark.operators.text import winnow_fingerprints
 
+    meta = require_index_meta(spark, index_path)
     excluded = spark.read.parquet(f"{index_path}/excluded")
-    # the INDEX defines the winnowing scheme (see delta_containment)
-    k, window = winnow_index_scheme(spark, index_path, k, window)
-    d_fp = winnow_fingerprints(delta, k=k, window=window, text_col=text_col)
+    d_fp = winnow_fingerprints(delta, k=meta["k"], window=meta["window"], text_col=text_col)
     totals = d_fp.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_fps")
     )
@@ -1943,125 +1929,14 @@ def embedding_near_dup_lsh(
     )
 
 
-#: Hash-table count for the embedding dedup-GATE family (index build,
-#: delta probe, exposure probe, and the streaming-maintained index --
-#: all must agree, or probe tables beyond the index's never match).
+#: Hash-table count for the embedding dedup-GATE family's index build
+#: and the streaming-maintained index (probes read the count from the
+#: index's `_meta`, so they always agree with it).
 #: 6 is the measured shippable point: planted cos>=0.97 recall 0.98
 #: (vs 0.88 at 4, 0.72 at 2; see delta_embedding_dedup). knn_lsh's
 #: ANN default (LSH_TABLES=4) is a different operating point: search
 #: recall@10, not a drop gate.
 EMBED_INDEX_TABLES = 6
-
-
-def embedding_index_tables(spark, index_path: str, default: int = EMBED_INDEX_TABLES) -> int:
-    """Resolve the table count a materialized embedding index was
-    BUILT with -- the index defines the probe geometry, so every
-    probe (delta_embedding_dedup / delta_embedding_exposure / the
-    streaming semantic gate) derives n_tables from here instead of
-    trusting its caller to pass the matching value: probe tables
-    beyond the index's silently never match (measured: a 6-table
-    probe of a 2-table index keeps the 2-table 0.72 recall while the
-    docstrings promise 0.98). Reads `{path}/meta` (written at build);
-    for a pre-meta legacy index, infers max(table)+1 from the bucket
-    rows; falls back to `default` only when the index does not exist
-    yet."""
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        return int(spark.read.parquet(f"{index_path}/meta").first()["n_tables"])
-    except AnalysisException:
-        pass
-    try:
-        m = spark.read.parquet(f"{index_path}/buckets").agg(F.max("table")).first()[0]
-    except AnalysisException:
-        return default
-    return default if m is None else int(m) + 1
-
-
-def minhash_index_scheme(
-    spark,
-    index_path: str,
-    num_hashes: int = MINHASH_HASHES,
-    bands: int = MINHASH_BANDS,
-) -> tuple[int, int]:
-    """Resolve the (num_hashes, bands) scheme a materialized minhash
-    index was BUILT with -- the banding scheme defines band_sig, so a
-    probe at any other scheme produces disjoint signatures and SILENT
-    zero matches (worse than the embedding-family mismatch, which at
-    least kept the shared tables). Reads `{path}/meta`; a pre-meta
-    legacy index infers bands = max(band)+1 with the repo-wide
-    rows-per-band (MINHASH_ROWS) -- an ASSUMPTION the band rows cannot
-    confirm (they carry only the banded hash, not the signature), so
-    the inference is logged loudly: a legacy index built at a
-    non-default rows-per-band would otherwise resolve to a wrong
-    num_hashes and the probe would silently match nothing. Falls back
-    to the arguments only when the index does not exist yet."""
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        r = spark.read.parquet(f"{index_path}/meta").first()
-        return int(r["num_hashes"]), int(r["bands"])
-    except AnalysisException:
-        pass
-    try:
-        m = spark.read.parquet(f"{index_path}/bands").agg(F.max("band")).first()[0]
-    except AnalysisException:
-        return num_hashes, bands
-    if m is None:
-        return num_hashes, bands
-    inferred = int(m) + 1
-    logging.getLogger(__name__).warning(
-        "minhash index %s has no meta table; inferring scheme "
-        "(num_hashes=%d, bands=%d) by ASSUMING the repo-default %d "
-        "rows per band. If the index was built at a different "
-        "rows-per-band the probe will silently match nothing -- "
-        "rebuild the index or write_minhash_index_meta() the true "
-        "scheme.",
-        index_path,
-        inferred * MINHASH_ROWS,
-        inferred,
-        MINHASH_ROWS,
-    )
-    return inferred * MINHASH_ROWS, inferred
-
-
-def write_minhash_index_meta(spark, index_path: str, num_hashes: int, bands: int) -> None:
-    """Persist the index's banding scheme (see minhash_index_scheme)."""
-    spark.createDataFrame(
-        [(int(num_hashes), int(bands))], "num_hashes long, bands long"
-    ).write.mode("overwrite").parquet(f"{index_path}/meta")
-
-
-def winnow_index_scheme(
-    spark, index_path: str, k: int = 5, window: int = 4
-) -> tuple[int, int]:
-    """Resolve the (k, window) winnowing scheme a materialized
-    containment index was BUILT with: a probe at a different k-gram
-    size or window produces disjoint fingerprints and silent zero
-    matches. Reads `{path}/meta`; fingerprint rows carry no inferable
-    geometry, so a pre-meta legacy index falls back to the arguments
-    (the historical defaults)."""
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        r = spark.read.parquet(f"{index_path}/meta").first()
-        return int(r["k"]), int(r["window"])
-    except AnalysisException:
-        return k, window
-
-
-def write_winnow_index_meta(spark, index_path: str, k: int, window: int) -> None:
-    """Persist the index's winnowing scheme (see winnow_index_scheme)."""
-    spark.createDataFrame([(int(k), int(window))], "k long, window long").write.mode(
-        "overwrite"
-    ).parquet(f"{index_path}/meta")
-
-
-def write_embedding_index_meta(spark, index_path: str, n_tables: int) -> None:
-    """Persist the index's build geometry (see embedding_index_tables)."""
-    spark.createDataFrame([(int(n_tables),)], "n_tables long").write.mode(
-        "overwrite"
-    ).parquet(f"{index_path}/meta")
 
 
 def materialize_embedding_lsh(
@@ -2110,15 +1985,14 @@ def materialize_embedding_lsh(
     # blindness (delta_embedding_exposure)
     excluded.write.mode("overwrite").parquet(f"{path}/excluded")
     v.write.mode("overwrite").parquet(f"{path}/buckets")
-    # the index self-describes its probe geometry (embedding_index_tables)
-    write_embedding_index_meta(emb_df.sparkSession, path, n_tables)
+    # probe tables beyond the index's would silently never match
+    write_index_meta(emb_df.sparkSession, path, {"n_tables": n_tables})
 
 
 def delta_embedding_exposure(
     spark,
     index_path: str,
     delta: DataFrame,
-    n_tables: int = EMBED_INDEX_TABLES,
 ) -> DataFrame:
     """Per-vector observability of the embedding index's capped blind
     spot (the vector twin of delta_containment_exposure): for each
@@ -2142,10 +2016,8 @@ def delta_embedding_exposure(
         table_bucket_col,
     )
 
+    n_tables = require_index_meta(spark, index_path)["n_tables"]
     excluded = spark.read.parquet(f"{index_path}/excluded")
-    # the INDEX defines the probe geometry; the parameter is only the
-    # fallback for an index that does not exist yet
-    n_tables = embedding_index_tables(spark, index_path, n_tables)
     buckets = table_bucket_col("embedding", LSH_PLANES, n_tables)
     d = delta.select(
         F.col("vec_id").alias("delta_id"),
@@ -2176,7 +2048,6 @@ def delta_embedding_dedup(
     index_path: str,
     delta: DataFrame,
     threshold: float = 0.95,
-    n_tables: int = EMBED_INDEX_TABLES,
 ) -> DataFrame:
     """Incremental embedding dedup: the vec_ids of a delta batch that
     survive against an already-materialized hyperplane-LSH index
@@ -2187,7 +2058,8 @@ def delta_embedding_dedup(
     with, or against a SMALLER-ID delta vector (min-id-wins within
     the batch).
 
-    `n_tables` defaults to 6 -- the MEASURED dedup-gate
+    The table count is the index's (its `_meta`); the build default
+    EMBED_INDEX_TABLES = 6 is the MEASURED dedup-gate
     configuration. Per-table sign-LSH collision for a cos>=0.97
     neighbor is p^8 with p = 1 - theta/pi ~ 0.922, so L tables catch
     1-(1-p^8)^L of true near-dups (the analytic knn_lsh validates):
@@ -2196,8 +2068,7 @@ def delta_embedding_dedup(
     6 -> 0.988 (measured 0.98 on the same planted batch, sf0.1). A
     28% -- or even 12% -- miss rate is not a shippable dedup gate;
     6 tables costs 1.5x the 4-table index rows for a 6x lower miss
-    rate. The index (materialize_embedding_lsh) must be built at the
-    same table count.
+    rate.
 
     Scale shape: the delta's bucket rows (vector payload included)
     are bounded by the batch contract and BROADCAST against one scan
@@ -2213,10 +2084,8 @@ def delta_embedding_dedup(
         table_bucket_col,
     )
 
+    n_tables = require_index_meta(spark, index_path)["n_tables"]
     idx = spark.read.parquet(f"{index_path}/buckets")
-    # the INDEX defines the probe geometry; the parameter is only the
-    # fallback for an index that does not exist yet
-    n_tables = embedding_index_tables(spark, index_path, n_tables)
     buckets = table_bucket_col("embedding", LSH_PLANES, n_tables)
     d = delta.select(
         F.col("vec_id"),

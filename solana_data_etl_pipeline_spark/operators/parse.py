@@ -205,15 +205,8 @@ def parse_blocks(blocks: DataFrame) -> DataFrame:
     parse_block/parse_transaction expressed as three exploded branches
     unioned by name."""
     txs = _exploded_txs(blocks)
-    events = (
+    return (
         _finish(_tx_events(txs))
         .unionByName(_finish(_instruction_events(txs)))
         .unionByName(_finish(_token_transfer_events(txs)))
     )
-    return flatten_instructions(events)
-
-
-def flatten_instructions(events: DataFrame) -> DataFrame:
-    """T8: pass-through normalizer (reference src/parsers.rs:206-222
-    reserves inner-instruction expansion; identity today)."""
-    return events

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from solana_data_etl_pipeline_spark.operators.util import require_index_meta, write_index_meta
+
 LSH_PLANES = 8
 EMB_DIM = 64
 
@@ -397,14 +399,10 @@ def materialize_lsh_rows(
     norm are stored parquet-exact, so the probe is value-identical to
     the inline form (pinned by test).
 
-    The BUILD PARAMETERS are written beside the rows as
-    `{path}/_lsh_meta` (ADVICE r12: a probe at different
-    n_planes/n_tables/dim buckets queries in a DIFFERENT hash space
-    and silently returns near-empty/wrong neighbor sets -- the index
-    must define the probe geometry, the embedding_index_tables /
-    minhash_index_scheme contract). The underscore prefix keeps the
-    sidecar invisible to the parquet scan of `path`, and it is
-    written through the session's filesystem so remote stores work."""
+    The build geometry (n_planes, dim, n_tables) is the index's
+    `_meta` (operators/util.py write_index_meta), written after the
+    root overwrite that would otherwise delete it: the index defines
+    the hash space queries are bucketed in."""
     rows = lsh_bucket_rows(emb_df, n_planes, dim, n_tables)
     # The classic bucket DIRECTORY (r14, VERDICT r13 #4 / guide §6):
     # the index is PARTITIONED by (table, bucket), so a probe's
@@ -419,73 +417,13 @@ def materialize_lsh_rows(
     rows.repartition("table", "bucket").write.mode("overwrite").partitionBy(
         "table", "bucket"
     ).parquet(path)
-    emb_df.sparkSession.createDataFrame(
-        [(n_planes, dim, n_tables)], "n_planes int, dim int, n_tables int"
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/_lsh_meta")
-    # a rebuild may change the geometry: drop any cached sidecar read
-    _LSH_META_CACHE.pop(path, None)
+    write_index_meta(
+        emb_df.sparkSession, path, {"n_planes": n_planes, "dim": dim, "n_tables": n_tables}
+    )
     return path
 
 
-#: parsed `_lsh_meta` sidecars by index path. The sidecar is three
-#: ints describing an immutable written index; re-reading it through
-#: spark.read.json on EVERY probe construction cost a schema-inference
-#: job plus a read job per call (measured ~0.4 s of the indexed-fusion
-#: query's per-call time, r13). Invalidated by materialize_lsh_rows on
-#: rebuild; this caches probe GEOMETRY, never data or results.
-_LSH_META_CACHE: dict[str, dict | None] = {}
-
-
-def lsh_index_meta(spark, path: str) -> dict | None:
-    """Read the build-parameter sidecar materialize_lsh_rows writes
-    (`{path}/_lsh_meta`); None for a pre-meta legacy index. Parsed
-    once per path per process (see _LSH_META_CACHE) with a cheap
-    existence revalidation for locally-stat-able paths (a sidecar
-    removed out-of-band must read as legacy again); the read uses an
-    explicit schema so no inference job runs."""
-    import os
-
-    from pyspark.sql.utils import AnalysisException
-
-    side = f"{path}/_lsh_meta"
-    local = side.removeprefix("file:")
-    statable = "://" not in local
-    if statable and not os.path.exists(local):
-        _LSH_META_CACHE.pop(path, None)
-        return None
-    if path in _LSH_META_CACHE and _LSH_META_CACHE[path] is not None:
-        return _LSH_META_CACHE[path]
-    try:
-        r = (
-            spark.read.schema("n_planes int, dim int, n_tables int")
-            .json(side)
-            .first()
-        )
-        # an empty or unparseable sidecar yields no row / null fields
-        # under the explicit schema (the inference-based read raised);
-        # classify it as a legacy index, as before (ADVICE r13)
-        if r is None or any(r[k] is None for k in ("n_planes", "dim", "n_tables")):
-            meta = None
-        else:
-            meta = {
-                "n_planes": int(r["n_planes"]),
-                "dim": int(r["dim"]),
-                "n_tables": int(r["n_tables"]),
-            }
-    except AnalysisException:
-        meta = None
-    _LSH_META_CACHE[path] = meta
-    return meta
-
-
-def knn_lsh_indexed(
-    index: DataFrame | str,
-    queries: DataFrame,
-    k: int = 10,
-    n_planes: int | None = None,
-    dim: int | None = None,
-    n_tables: int | None = None,
-) -> DataFrame:
+def knn_lsh_indexed(index_path: str, queries: DataFrame, k: int = 10) -> DataFrame:
     """knn_lsh's probe against the stored bucket index
     (materialize_lsh_rows): queries compute their own buckets from
     the SAME fixed plane matrices (deterministic, so candidates are
@@ -494,73 +432,33 @@ def knn_lsh_indexed(
     Result-identical to knn_lsh on the same corpus (shared oracle /
     row-identity test contract).
 
-    PARAMETER PINNING (ADVICE r12): pass `index` as the PATH the
-    index was materialized at and the probe geometry is resolved
-    from the `_lsh_meta` sidecar -- the index defines n_planes / dim
-    / n_tables, and explicitly-passed values that CONFLICT with the
-    sidecar raise ValueError instead of silently bucketing queries
-    in a different hash space (which returns near-empty/wrong
-    neighbor sets, not an error). A DataFrame `index` (or a pre-meta
-    legacy path) keeps the caller-supplied/default geometry -- the
-    caller owns the match in that form.
+    The probe geometry (n_planes, dim, n_tables) is the index's
+    `_meta`, never a caller's: a probe in a different hash space
+    silently returns near-empty/wrong neighbor sets, so a path
+    without `_meta` raises ValueError instead of guessing.
 
     Scale shape: query cost is the index rows in the probed buckets
     (|queries| x n_tables bucket keys broadcast onto the index read)
     -- the corpus-side hyperplane dots, norms, and explode moved to
     ingest cadence."""
-    if isinstance(index, str):
-        spark = queries.sparkSession
-        meta = lsh_index_meta(spark, index)
-        if meta is not None:
-            for name, got in (
-                ("n_planes", n_planes),
-                ("dim", dim),
-                ("n_tables", n_tables),
-            ):
-                if got is not None and got != meta[name]:
-                    raise ValueError(
-                        f"knn_lsh_indexed: probe {name}={got} does not match "
-                        f"the stored index's build {name}={meta[name]} at "
-                        f"{index} -- a mismatched probe buckets queries in a "
-                        f"different hash space and silently returns wrong "
-                        f"neighbors; rebuild the index or drop the override"
-                    )
-            n_planes, dim, n_tables = (
-                meta["n_planes"],
-                meta["dim"],
-                meta["n_tables"],
-            )
-        if meta is not None:
-            # fixed layout (materialize_lsh_rows wrote the sidecar, so
-            # the column types are its own casts) -- skip footer
-            # inference
-            index_rows = spark.read.schema(
-                "vec_id long, c_emb array<double>, c_norm double, table int, bucket long"
-            ).parquet(index)
-        else:
-            # pre-meta legacy index: the writer did not pin types
-            # (vec_id may be int32), and Spark's parquet reader fails
-            # on a declared-type mismatch instead of upcasting -- keep
-            # the inferred read for that form (ADVICE r13)
-            index_rows = spark.read.parquet(index)
-    else:
-        index_rows = index
-    n_planes = LSH_PLANES if n_planes is None else n_planes
-    dim = EMB_DIM if dim is None else dim
-    n_tables = LSH_TABLES if n_tables is None else n_tables
-    buckets = table_bucket_col("embedding", n_planes, n_tables, dim)
-    if isinstance(index, str):
-        # dynamic-partition-pruning enabler (r14): the stored index is
-        # partitioned by (table, bucket), and Spark's PartitionPruning
-        # rule only injects the pruning subquery when the probe side
-        # carries a likely-selective predicate -- literal query frames
-        # (hybrid/text_knn build theirs from the query terms) have
-        # none. This comparison is result-neutral (query ids are
-        # ordinary longs, and a NULL query_id row can never produce
-        # output: the self-match filter already drops it), but it
-        # turns the probe scan into a `dynamicpruningexpression(...)`
-        # partition-pruned read of only the probed bucket directories.
-        queries = queries.filter(F.col("query_id") > F.lit(-(1 << 62)))
+    spark = queries.sparkSession
+    meta = require_index_meta(spark, index_path)
+    # fixed layout (materialize_lsh_rows' own casts) -- no footer inference
+    index_rows = spark.read.schema(
+        "vec_id long, c_emb array<double>, c_norm double, table int, bucket long"
+    ).parquet(index_path)
+    buckets = table_bucket_col("embedding", meta["n_planes"], meta["n_tables"], meta["dim"])
+    # dynamic-partition-pruning enabler (r14): the stored index is
+    # partitioned by (table, bucket), and Spark's PartitionPruning
+    # rule only injects the pruning subquery when the probe side
+    # carries a likely-selective predicate -- literal query frames
+    # (hybrid/text_knn build theirs from the query terms) have none.
+    # `query_id >= Long.MIN_VALUE` holds for every non-null long (a
+    # NULL query_id row can never produce output: the self-match
+    # filter already drops it), so it is result-neutral, yet it turns
+    # the probe scan into a `dynamicpruningexpression(...)`
+    # partition-pruned read of only the probed bucket directories.
+    queries = queries.filter(F.col("query_id") >= F.lit(-(1 << 63)))
     q = queries.select(
         F.col("query_id"),
         _dvec(F.col("embedding")).alias("q_emb"),

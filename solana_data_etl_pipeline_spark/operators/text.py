@@ -590,7 +590,7 @@ def _rrf_fuse(lex: DataFrame, sem: DataFrame, k: int, rrf_k: int) -> DataFrame:
 def hybrid_rank_indexed(
     spark,
     index_path: str,
-    lsh_index,
+    lsh_index: str,
     query_terms: list[str],
     k: int = 10,
     rrf_k: int = 60,
@@ -601,12 +601,10 @@ def hybrid_rank_indexed(
     the materialized inverted index (bm25_rank_indexed -- result
     pinned identical to the scan form through the shared oracle) and
     the semantic member probes a stored LSH bucket index over the
-    hash_embed corpus vectors (`lsh_index`: the PATH of -- or the
-    exploded (vec_id, c_emb, c_norm, table, bucket) rows from -- the
-    parquet similarity.materialize_lsh_rows writes once at ingest
-    cadence; passing the path engages the `_lsh_meta` build-parameter
-    pinning, ADVICE r12) instead of re-encoding and re-bucketing the
-    corpus per query.
+    hash_embed corpus vectors (`lsh_index`: the PATH
+    similarity.materialize_lsh_rows writes once at ingest cadence;
+    its `_meta` defines the probe geometry) instead of re-encoding
+    and re-bucketing the corpus per query.
     Result-identical to hybrid_rank on the same corpus: parquet
     stores the encoder's doubles and norms exactly, the query side
     buckets with the same fixed plane matrices, BM25's integer-ppm

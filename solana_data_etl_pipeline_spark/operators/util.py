@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
 
 
@@ -22,3 +24,57 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     except Exception:
         return df.repartition(target)
     return df if current >= target else df.repartition(target)
+
+
+def _index_meta_file(spark, path: str):
+    """(Hadoop FileSystem, Path) of the `{path}/_meta` sidecar, resolved
+    through the session's Hadoop configuration so remote stores work."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(f"{path}/_meta")
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
+def write_index_meta(spark, path: str, geometry: dict) -> None:
+    """Write a stored index's build geometry as `{path}/_meta`, a small
+    JSON object (e.g. {"num_hashes": 16, "bands": 4}).
+
+    Every ingest-time index (minhash bands, winnow fingerprints,
+    embedding buckets, text-LSH bucket rows) defines the geometry it
+    is probed with: a probe at any other geometry hashes into a
+    different space and silently matches nothing. So the index, not
+    the caller, owns it -- probes read it back with read_index_meta
+    and take no geometry parameters. The leading underscore keeps the
+    file out of parquet scans of `path`. A driver-side filesystem
+    write: no Spark job runs."""
+    fs, p = _index_meta_file(spark, path)
+    out = fs.create(p, True)
+    try:
+        out.write(bytearray(json.dumps(geometry, sort_keys=True).encode()))
+    finally:
+        out.close()
+
+
+def read_index_meta(spark, path: str) -> dict | None:
+    """The geometry write_index_meta stored at `path`, or None when
+    `{path}/_meta` is absent (not a materialized index). Read through
+    the filesystem on every call -- nothing is cached, so a rebuilt
+    index is never probed with its predecessor's geometry -- and no
+    Spark job runs."""
+    fs, p = _index_meta_file(spark, path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        text = spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return json.loads(text)
+
+
+def require_index_meta(spark, path: str) -> dict:
+    """read_index_meta for a probe: raises ValueError naming `path`
+    instead of guessing a geometry when the index has no `_meta`."""
+    meta = read_index_meta(spark, path)
+    if meta is None:
+        raise ValueError(f"{path}: no `_meta`: not a materialized index; rebuild it")
+    return meta

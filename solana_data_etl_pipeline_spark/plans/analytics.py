@@ -34,9 +34,7 @@ Scale notes (100 TB design point): every plan is a single scan ->
 partial/final hash aggregate -> (tiny) top-k. No plan shuffles the fact
 table more than once; `TakeOrderedAndProject` keeps top-k on the
 executors. Exact COUNT(DISTINCT) matches reference semantics (Catalyst
-plans it as expand + two-phase agg); `approx=True` opts into
-`approx_count_distinct` (HLL) for the 100 TB path where a 2% error is
-acceptable.
+plans it as expand + two-phase agg).
 """
 
 from __future__ import annotations
@@ -56,10 +54,6 @@ TREND_DAYS = 30  # reference src/analytics.rs:685
 
 def _as_of_lit(as_of: dt.datetime) -> Column:
     return F.lit(as_of).cast("timestamp_ntz")
-
-
-def _count_distinct(col: Column, approx: bool) -> Column:
-    return F.approx_count_distinct(col) if approx else F.count_distinct(col)
 
 
 def transaction_volume(df: DataFrame, as_of: dt.datetime) -> DataFrame:
@@ -104,7 +98,7 @@ def hourly_volume(df: DataFrame, as_of: dt.datetime) -> DataFrame:
     )
 
 
-def active_programs(df: DataFrame, as_of: dt.datetime, *, approx: bool = False) -> DataFrame:
+def active_programs(df: DataFrame, as_of: dt.datetime) -> DataFrame:
     """A6: most active programs, top 50.
 
     Reference src/analytics.rs:363-378: COUNT(*), COUNT(DISTINCT
@@ -116,7 +110,7 @@ def active_programs(df: DataFrame, as_of: dt.datetime, *, approx: bool = False) 
         .groupBy("program_id")
         .agg(
             F.count("*").alias("tx_count"),
-            _count_distinct(F.col("wallet"), approx).alias("unique_wallets"),
+            F.count_distinct(F.col("wallet")).alias("unique_wallets"),
             F.max("block_time").alias("last_seen"),
         )
         .orderBy(F.desc("tx_count"), F.asc("program_id"))
@@ -124,7 +118,7 @@ def active_programs(df: DataFrame, as_of: dt.datetime, *, approx: bool = False) 
     )
 
 
-def token_transfer_stats(df: DataFrame, as_of: dt.datetime, *, approx: bool = False) -> DataFrame:
+def token_transfer_stats(df: DataFrame, as_of: dt.datetime) -> DataFrame:
     """A7: global token-transfer stats (one row, 3 exact distincts).
 
     Reference src/analytics.rs:406-438.
@@ -132,13 +126,13 @@ def token_transfer_stats(df: DataFrame, as_of: dt.datetime, *, approx: bool = Fa
     xfer = df.filter(F.col("event_type") == "token_transfer")
     return xfer.agg(
         F.count("*").alias("total_transfers"),
-        _count_distinct(F.col("token_mint"), approx).alias("unique_mints"),
-        _count_distinct(F.col("from_wallet"), approx).alias("unique_senders"),
-        _count_distinct(F.col("to_wallet"), approx).alias("unique_receivers"),
+        F.count_distinct(F.col("token_mint")).alias("unique_mints"),
+        F.count_distinct(F.col("from_wallet")).alias("unique_senders"),
+        F.count_distinct(F.col("to_wallet")).alias("unique_receivers"),
     )
 
 
-def top_tokens(df: DataFrame, as_of: dt.datetime, *, approx: bool = False) -> DataFrame:
+def top_tokens(df: DataFrame, as_of: dt.datetime) -> DataFrame:
     """A8: top 20 tokens by transfer count.
 
     Reference src/analytics.rs:459-473 (null mints excluded by the
@@ -150,7 +144,7 @@ def top_tokens(df: DataFrame, as_of: dt.datetime, *, approx: bool = False) -> Da
         .groupBy(F.col("token_mint"))
         .agg(
             F.count("*").alias("transfer_count"),
-            _count_distinct(F.col("from_wallet"), approx).alias("unique_senders"),
+            F.count_distinct(F.col("from_wallet")).alias("unique_senders"),
         )
         .orderBy(F.desc("transfer_count"), F.asc("token_mint"))
         .limit(TOP_TOKENS)
@@ -192,7 +186,7 @@ def top_errors(df: DataFrame, as_of: dt.datetime) -> DataFrame:
     )
 
 
-def wallet_activity(df: DataFrame, as_of: dt.datetime, *, approx: bool = False) -> DataFrame:
+def wallet_activity(df: DataFrame, as_of: dt.datetime) -> DataFrame:
     """A11: distinct active wallets total / today / last 7 days.
 
     Reference src/analytics.rs:573-600 runs three separate
@@ -203,12 +197,12 @@ def wallet_activity(df: DataFrame, as_of: dt.datetime, *, approx: bool = False) 
     today = F.to_date(ts)
     tx = df.filter((F.col("event_type") == "transaction") & F.col("wallet").isNotNull())
     return tx.agg(
-        _count_distinct(F.col("wallet"), approx).alias("active_wallets_total"),
-        _count_distinct(F.when(F.to_date("block_time") == today, F.col("wallet")), approx).alias(
+        F.count_distinct(F.col("wallet")).alias("active_wallets_total"),
+        F.count_distinct(F.when(F.to_date("block_time") == today, F.col("wallet"))).alias(
             "active_wallets_today"
         ),
-        _count_distinct(
-            F.when(F.col("block_time") >= F.date_sub(today, 7).cast("timestamp_ntz"), F.col("wallet")), approx
+        F.count_distinct(
+            F.when(F.col("block_time") >= F.date_sub(today, 7).cast("timestamp_ntz"), F.col("wallet"))
         ).alias("active_wallets_week"),
     )
 

@@ -153,18 +153,7 @@ def _analytic(plan) -> QueryFn:
     return run
 
 
-ANALYTICS_QUERIES: dict[str, QueryFn] = {
-    "transaction_volume": _analytic(A.transaction_volume),
-    "hourly_volume": _analytic(A.hourly_volume),
-    "active_programs": _analytic(A.active_programs),
-    "token_transfer_stats": _analytic(A.token_transfer_stats),
-    "top_tokens": _analytic(A.top_tokens),
-    "failed_transactions": _analytic(A.failed_transactions),
-    "top_errors": _analytic(A.top_errors),
-    "wallet_activity": _analytic(A.wallet_activity),
-    "top_wallets": _analytic(A.top_wallets),
-    "program_trends": _analytic(A.program_trends),
-}
+ANALYTICS_QUERIES: dict[str, QueryFn] = {name: _analytic(plan) for name, plan in A.ALL_PLANS.items()}
 
 ANALYTICS_SQL: dict[str, str] = {
     "transaction_volume": f"""
@@ -866,8 +855,6 @@ TEXT_QUERIES: dict[str, QueryFn] = {
         lambda spark, sf_dir: X.hybrid_rank_indexed(
             spark,
             artifact_path(spark, sf_dir, "bm25_index"),
-            # the PATH, not pre-read rows: engages the _lsh_meta
-            # build-parameter pinning (ADVICE r12)
             artifact_path(spark, sf_dir, "lsh_index"),
             _BM25_TERMS,
         )

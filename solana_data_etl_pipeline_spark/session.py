@@ -35,6 +35,41 @@ from pyspark.sql import SparkSession
 CODEGEN_CACHE_ENTRIES = 2048
 
 
+#: Engine session conventions that are runtime SQL confs: get_spark
+#: applies them through the builder, and __spark_entry__._configure
+#: through spark.conf.set on a session created elsewhere, so both kinds
+#: of session plan every query alike.
+RUNTIME_CONF: dict[str, str] = {
+    "spark.sql.session.timeZone": "UTC",
+    # Engine convention: all timestamps are UTC wall-clock, carried as
+    # TIMESTAMP_NTZ end-to-end (parquet naive timestamps stay naive;
+    # matches the DuckDB oracle's timestamp semantics exactly).
+    "spark.sql.timestampType": "TIMESTAMP_NTZ",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # Coalesce post-shuffle partitions by BYTES (the advisory
+    # size), not by core count: with the default parallelismFirst
+    # the tiny shuffles of sub-GB stages stay fragmented across
+    # 2x cores partitions and task overhead dominates -- measured
+    # r14: dedup_minhash_lsh 2.30->1.84 s at 32 cores, 1.97->1.30 s
+    # at 8 (the PERF_r13 anti-scaling class). Scale-adaptive by
+    # construction: at 100 TB the same advisory target keeps
+    # shuffles wide because the bytes are there (guide §2.2).
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.parquet.filterPushdown": "true",
+    # Some inputs carry TIMESTAMP(NANOS) parquet columns, which the
+    # Spark reader rejects outright; read them as raw nano longs and
+    # convert explicitly (see testdata_model.load_table).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.parquet.aggregatePushdown": "true",
+    "spark.sql.files.maxPartitionBytes": "134217728",
+    "spark.sql.shuffledHashJoinFactor": "3",
+}
+
+
 def get_spark(app_name: str = "solana-etl-spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -44,36 +79,10 @@ def get_spark(app_name: str = "solana-etl-spark", master: str | None = None) -> 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
-        # Engine convention: all timestamps are UTC wall-clock, carried as
-        # TIMESTAMP_NTZ end-to-end (parquet naive timestamps stay naive;
-        # matches the DuckDB oracle's timestamp semantics exactly).
-        .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
+        .config(map=RUNTIME_CONF)
         .config("spark.sql.shuffle.partitions", shuffle_partitions)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Coalesce post-shuffle partitions by BYTES (the advisory
-        # size), not by core count: with the default parallelismFirst
-        # the tiny shuffles of sub-GB stages stay fragmented across
-        # 2x cores partitions and task overhead dominates -- measured
-        # r14: dedup_minhash_lsh 2.30->1.84 s at 32 cores, 1.97->1.30 s
-        # at 8 (the PERF_r13 anti-scaling class). Scale-adaptive by
-        # construction: at 100 TB the same advisory target keeps
-        # shuffles wide because the bytes are there (guide §2.2).
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        # Some inputs carry TIMESTAMP(NANOS) parquet columns, which the
-        # Spark reader rejects outright; read them as raw nano longs and
-        # convert explicitly (see testdata_model.load_table).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffledHashJoinFactor", "3")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     return builder.getOrCreate()

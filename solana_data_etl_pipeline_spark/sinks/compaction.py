@@ -190,14 +190,15 @@ def compact_lsh_index(
     sub-table is rewritten into ~target-sized files through the same
     crash-safe tmp-write + directory-swap as compact_parquet (a crash
     mid-compaction leaves the recoverable marker recover_swap
-    repairs), clustered within files on its probe-join keys. The tiny
-    `meta` table (index geometry) is left alone. Returns per-sub
+    repairs), clustered within files on its probe-join keys. The
+    `_meta` geometry file is not a directory, so it is left alone.
+    Returns per-sub
     summaries; run it at the same cadence as cluster compaction --
     after a drain, never concurrent with an appending batch."""
     out: dict[str, dict] = {}
     for sub in sorted(os.listdir(index_path)):
         sub_path = os.path.join(index_path, sub)
-        if sub == "meta" or not os.path.isdir(sub_path) or "._compact_" in sub:
+        if not os.path.isdir(sub_path) or "._compact_" in sub:
             continue
         try:
             cols = set(spark.read.parquet(sub_path).columns)

@@ -75,7 +75,11 @@ class Warehouse(Protocol):
     def get_last_slot(self) -> int | None: ...
     def update_last_slot(self, slot: int) -> None: ...
     def is_slot_processed(self, slot: int) -> bool: ...
+    def processed_slots(self) -> DataFrame: ...
     def health_check(self) -> bool: ...
+    def get_last_backfill_slot(self) -> int | None: ...
+    def update_last_backfill_slot(self, slot: int) -> None: ...
+    def update_chain_tip_slot(self, slot: int) -> None: ...
 
 
 def create_warehouse(spark: SparkSession, config: WarehouseConfig):

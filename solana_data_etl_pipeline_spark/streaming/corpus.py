@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from solana_data_etl_pipeline_spark.operators import text as X
+from solana_data_etl_pipeline_spark.operators.util import read_index_meta, write_index_meta
 from solana_data_etl_pipeline_spark.plans.corpus import (
     MIN_ALPHA_RATIO,
     MIN_TOKENS,
@@ -443,6 +444,16 @@ def run_document_stream(
         catch_up_clusters,
     )
 
+    def _index_geometry(path: str, default: dict) -> dict:
+        """The geometry of the stream-maintained index at `path`; an
+        index without `_meta` gets `default` written BEFORE any row is
+        appended, so a crash can never leave rows without geometry."""
+        meta = read_index_meta(spark, path)
+        if meta is None:
+            meta = default
+            write_index_meta(spark, path, meta)
+        return meta
+
     def _near_dup_matches(kept):
         """(corpus_hits, delta_pairs) of `kept` against the index --
         both eagerly checkpointed so the one probe execution feeds the
@@ -477,9 +488,9 @@ def run_document_stream(
     def _embed_bucket_rows(vecs: DataFrame, n_tables: int) -> DataFrame:
         """materialize_embedding_lsh's index-row projection over
         hashed document vectors: (vec_id, v, n, table, bucket).
-        `n_tables` is the INDEX's resolved geometry (see
-        embedding_index_tables): appends at any other count would
-        leave older vectors reachable through fewer tables."""
+        `n_tables` is the INDEX's geometry (its `_meta`): appends at
+        any other count would leave older vectors reachable through
+        fewer tables."""
         from solana_data_etl_pipeline_spark.operators.similarity import (
             LSH_PLANES,
             _dvec,
@@ -594,19 +605,15 @@ def run_document_stream(
             todo = corpus_now.join(have, "doc_id", "left_anti")
         else:
             todo = corpus_now
-        n_tables = D.embedding_index_tables(spark, semantic_index)
+        geometry = _index_geometry(semantic_index, {"n_tables": D.EMBED_INDEX_TABLES})
         rows, overflow = split_capped_bands(
-            _embed_bucket_rows(hash_embed(todo), n_tables),
+            _embed_bucket_rows(hash_embed(todo), geometry["n_tables"]),
             existing,
             semantic_max_bucket,
             keys=("table", "bucket"),
         )
         overflow = overflow.localCheckpoint(eager=True)
         rows.write.mode("append").parquet(f"{semantic_index}/buckets")
-        if existing is None:
-            # first creation defines the index geometry for every
-            # future probe and catch-up (embedding_index_tables)
-            D.write_embedding_index_meta(spark, semantic_index, n_tables)
         if overflow.limit(1).count():
             # same shape as materialize_embedding_lsh's excluded table;
             # width here = the rejected mass when the bucket first
@@ -623,14 +630,14 @@ def run_document_stream(
             exc.write.mode("append").parquet(f"{semantic_index}/excluded")
             if semantic_route_blind:
                 over_path = f"{semantic_index}_overflow"
+                # the overflow twin shares the capped index's geometry
+                # (a probe at any other table count would silently
+                # miss its rows)
+                _index_geometry(over_path, geometry)
                 try:
                     seen_over = spark.read.parquet(f"{over_path}/buckets")
                 except AnalysisException:
                     seen_over = None
-                    # the overflow twin shares the capped index's
-                    # geometry (a probe at any other table count
-                    # would silently miss its rows)
-                    D.write_embedding_index_meta(spark, over_path, n_tables)
                 new_over = overflow
                 if seen_over is not None:
                     new_over = overflow.join(
@@ -652,9 +659,11 @@ def run_document_stream(
         through the accumulated-width bucket cap (cap_new_bands)."""
         corpus_now = spark.read.parquet(output_dir).select("doc_id", "text")
         # the index's banding scheme governs both the probe
-        # (delta_match_pairs resolves it the same way) and every
-        # append; first creation below defines it
-        nh, nb = D.minhash_index_scheme(spark, near_dup_index)
+        # (delta_match_pairs reads the same `_meta`) and every append
+        geometry = _index_geometry(
+            near_dup_index, {"num_hashes": D.MINHASH_HASHES, "bands": D.MINHASH_BANDS}
+        )
+        nh, nb = geometry["num_hashes"], geometry["bands"]
 
         def _build_bands(d: DataFrame, existing: DataFrame | None) -> DataFrame:
             return cap_new_bands(
@@ -667,21 +676,17 @@ def run_document_stream(
             "bands": _build_bands,
             "shingles": lambda d, _existing: D._shingle_sets(d),
         }
-        created = False
         for sub, build in builders.items():
             try:
                 existing = spark.read.parquet(f"{near_dup_index}/{sub}")
             except AnalysisException:
                 existing = None
-                created = True
             if existing is not None:
                 have = existing.select("doc_id").distinct()
                 todo = corpus_now.join(have, "doc_id", "left_anti")
             else:
                 todo = corpus_now
             build(todo, existing).write.mode("append").parquet(f"{near_dup_index}/{sub}")
-        if created:
-            D.write_minhash_index_meta(spark, near_dup_index, nh, nb)
 
     def _apply_policies(kept: DataFrame, seen: DataFrame | None, batch_id: int) -> DataFrame:
         """Streaming curation policies over one batch (see docstring):

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from solana_data_etl_pipeline_spark.config import Config
 from solana_data_etl_pipeline_spark.operators.parse import parse_blocks
-from solana_data_etl_pipeline_spark.sinks.warehouse import ParquetWarehouse
+from solana_data_etl_pipeline_spark.sinks.warehouse import Warehouse
 from solana_data_etl_pipeline_spark.sources.blocks import fetch_blocks_df
 
 log = logging.getLogger(__name__)
@@ -42,7 +42,7 @@ def chunk_ranges(start: int, end: int, chunk_size: int) -> list[tuple[int, int]]
 
 def run_backfill(
     spark: SparkSession,
-    warehouse: ParquetWarehouse,
+    warehouse: Warehouse,
     client_factory: Callable[[], object],
     start_slot: int,
     end_slot: int,
@@ -86,10 +86,9 @@ def run_backfill(
             if hi > last:
                 warehouse.update_last_slot(hi)
             # documented backfill-progress key (docs/SCHEMA.md:277-279)
-            if hasattr(warehouse, "update_last_backfill_slot"):
-                prev = warehouse.get_last_backfill_slot() or 0
-                if hi > prev:
-                    warehouse.update_last_backfill_slot(hi)
+            prev = warehouse.get_last_backfill_slot() or 0
+            if hi > prev:
+                warehouse.update_last_backfill_slot(hi)
         except Exception:
             # chunk failure is logged, not fatal (reference src/backfill.rs:53-55)
             log.exception("backfill chunk %s-%s failed; continuing", lo, hi)
@@ -98,7 +97,7 @@ def run_backfill(
 
 def process_incremental(
     spark: SparkSession,
-    warehouse: ParquetWarehouse,
+    warehouse: Warehouse,
     client,
     config: Config | None = None,
 ) -> int:
@@ -123,7 +122,7 @@ def process_incremental(
 
 def run_incremental(
     spark: SparkSession,
-    warehouse: ParquetWarehouse,
+    warehouse: Warehouse,
     client,
     config: Config | None = None,
     max_iterations: int | None = None,
@@ -145,7 +144,7 @@ def run_incremental(
             sleep(config.etl.interval_seconds)
 
 
-def run_health_check(client, warehouse: ParquetWarehouse | None = None) -> bool:
+def run_health_check(client, warehouse: Warehouse | None = None) -> bool:
     """O7: source ping; warehouse ping intentionally mirrors the
     reference's skip (reference src/health.rs:22-25) unless one is
     passed explicitly."""
@@ -157,6 +156,6 @@ def run_health_check(client, warehouse: ParquetWarehouse | None = None) -> bool:
     if warehouse is not None:
         ok = ok and warehouse.health_check()
         # record the observed tip (docs/SCHEMA.md:280's chain_tip_slot)
-        if ok and hasattr(warehouse, "update_chain_tip_slot"):
+        if ok:
             warehouse.update_chain_tip_slot(int(tip))
     return ok

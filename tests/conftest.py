@@ -70,7 +70,6 @@ _SLOW_TESTS = frozenset((
     "test_streaming.py::test_incremental_clusters_unit_merge_and_compose",
     "test_streaming.py::test_retrain_ivf_recovers_recall_after_stream_drift",
     "test_streaming.py::test_semantic_index_self_heals_after_loss",
-    "test_text.py::test_hybrid_rank_indexed_identical_to_scan_form",
     "test_warehouse.py::test_compact_preserves_rows_and_reduces_files",
     "test_warehouse.py::test_jdbc_insert_roundtrip_and_idempotency",
 ))

@@ -212,7 +212,9 @@ def test_compact_lsh_index_preserves_probes(spark, tmp_path):
     assert "buckets" in summary and "excluded" in summary
     assert summary["buckets"]["after_files"] < files_before
     assert spark.read.parquet(f"{path}/buckets").count() == n_rows_before
-    # geometry meta untouched, probe verdicts identical
-    assert D.embedding_index_tables(spark, path) == 2
+    # geometry `_meta` untouched, probe verdicts identical
+    from solana_data_etl_pipeline_spark.operators.util import read_index_meta
+
+    assert read_index_meta(spark, path) == {"n_tables": 2}
     after = {r.vec_id for r in D.delta_embedding_dedup(spark, path, batch, threshold=0.99).collect()}
     assert after == before

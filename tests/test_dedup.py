@@ -1148,60 +1148,129 @@ def test_dedup_family_agreement_embedding_family(spark):
 
 def test_embedding_index_geometry_is_self_describing(spark, tmp_path):
     """The materialized embedding index defines its own probe
-    geometry: an index built at 2 tables probed with the 6-table
-    default still matches on tables 0-1 (before the meta, probe
-    tables 2-5 silently never matched and planted recall stayed at
-    the 2-table point while the docstrings promised the 6-table
-    one); a legacy index without meta infers its count from the
-    bucket rows."""
-    import shutil
+    geometry: an index built at 2 tables records it in `_meta`, and
+    both probes run at 2 tables with no geometry argument -- the
+    exposure probe counts 2 buckets per vector, and the dedup probe
+    drops exactly the batch vectors inline knn_lsh at 2 tables finds
+    a corpus neighbour for. Without `_meta` both probes raise."""
+    import os
 
-    path = str(tmp_path / "eidx")
-    emb = spark.createDataFrame(
-        [(i, [float(i == j) for j in range(8)]) for i in range(6)],
-        "vec_id long, embedding array<double>",
-    )
-    D.materialize_embedding_lsh(emb, path, n_tables=2)
-    assert D.embedding_index_tables(spark, path) == 2
-    # probe an EXACT copy of an indexed vector with the 6-table
-    # default: resolution drops to the index's 2 tables and the dup
-    # is caught (an unresolved 6-table probe would also catch it on
-    # tables 0-1, but its tables 2-5 would join nothing -- pin the
-    # resolved geometry instead of the side effect)
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from solana_data_etl_pipeline_spark.operators import similarity as V
+    from solana_data_etl_pipeline_spark.operators.util import read_index_meta
+
+    rng = np.random.RandomState(5)
+    base = rng.normal(size=(20, 8))
+    noisy = base[:10] + rng.normal(size=(10, 8)) * 0.6
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame([(i, [float(x) for x in v]) for i, v in enumerate(base)], schema)
     batch = spark.createDataFrame(
-        [(100, [1.0] + [0.0] * 7)], "vec_id long, embedding array<double>"
+        [(100 + i, [float(x) for x in v]) for i, v in enumerate(noisy)], schema
     )
-    kept = D.delta_embedding_dedup(spark, path, batch, threshold=0.99)
-    assert kept.count() == 0  # the exact twin is dropped
-    # legacy index: delete the meta, the count infers from bucket rows
-    shutil.rmtree(f"{path}/meta")
-    assert D.embedding_index_tables(spark, path) == 2
-    # nonexistent index: the default is the fallback
-    assert D.embedding_index_tables(spark, str(tmp_path / "nope")) == D.EMBED_INDEX_TABLES
+    path = str(tmp_path / "eidx")
+    D.materialize_embedding_lsh(corpus, path, n_tables=2)
+    assert read_index_meta(spark, path) == {"n_tables": 2}
+    exposure = D.delta_embedding_exposure(spark, path, batch).collect()
+    assert len(exposure) == 10 and {r.n_buckets for r in exposure} == {2}
+    q = batch.select(F.col("vec_id").alias("query_id"), "embedding")
+    hit = V.knn_lsh(corpus, q, k=50, n_tables=2).filter(F.col("cosine") >= 0.7)
+    expected = set(range(100, 110)) - {r.query_id for r in hit.collect()}
+    kept = {r.vec_id for r in D.delta_embedding_dedup(spark, path, batch, threshold=0.7).collect()}
+    assert kept == expected and kept != set(range(100, 110))  # non-vacuous
+    os.remove(f"{path}/_meta")
+    for probe in (D.delta_embedding_dedup, D.delta_embedding_exposure):
+        with pytest.raises(ValueError, match="no `_meta`"):
+            probe(spark, path, batch)
 
 
 def test_minhash_and_winnow_indexes_are_self_describing(spark, tmp_path):
-    """Every materialized index family now defines its own probe
-    geometry: a minhash index built at a non-default banding scheme
-    (8 bands x 2 rows) probed with default args resolves the INDEX's
-    scheme (default-arg probing would compute disjoint band_sigs and
-    silently match nothing); the winnow index does the same for its
-    (k, window)."""
-    docs = spark.createDataFrame(
-        [(i, f"shared words one two three four five six seven plus unique{i} filler{i}")
-         for i in range(4)],
-        "doc_id long, text string",
-    )
+    """Every materialized index family defines its own probe geometry:
+    a minhash index built at a non-default banding scheme (8 bands x
+    2 rows) records it in `_meta`, and the probe -- which takes no
+    geometry -- finds exactly the pairs the inline cross-corpus join
+    finds at that scheme (the default 4x4 scheme finds fewer on this
+    data); the winnow index does the same for its (k, window). An
+    index without `_meta` raises instead of guessing."""
+    import os
+    import random
+
+    from solana_data_etl_pipeline_spark.operators.text import winnow_overlap_pairs
+    from solana_data_etl_pipeline_spark.operators.util import read_index_meta
+
+    rnd = random.Random(3)
+    vocab = [f"w{i}" for i in range(60)]
+    base = [" ".join(rnd.choice(vocab) for _ in range(14)) for _ in range(6)]
+
+    def _edit(text, i):
+        w = text.split()
+        w[i % len(w)], w[(i * 5 + 3) % len(w)] = "zz", "yy"
+        return " ".join(w)
+
+    schema = "doc_id long, text string"
+    docs = spark.createDataFrame(list(enumerate(base)), schema)
+    delta = spark.createDataFrame([(100 + i, _edit(t, i)) for i, t in enumerate(base)], schema)
+
     mpath = str(tmp_path / "midx")
     D.materialize_minhash(docs, mpath, num_hashes=16, bands=8)
-    assert D.minhash_index_scheme(spark, mpath) == (16, 8)
-    delta = spark.createDataFrame([(100, docs.collect()[0].text)], "doc_id long, text string")
-    hits, _pairs = D.delta_match_pairs(spark, mpath, delta, threshold=0.9)
-    # the exact twin verifies against the index despite default args
-    assert {(r.delta_id, r.corpus_id) for r in hits.collect()} == {(100, 0)}
+    assert read_index_meta(spark, mpath) == {"num_hashes": 16, "bands": 8}
+    hits, _pairs = D.delta_match_pairs(spark, mpath, delta, threshold=0.3)
+    got = {(r.delta_id, r.corpus_id) for r in hits.collect()}
+
+    def _inline(bands):
+        rows = D.cross_corpus_near_dup(docs, delta, threshold=0.3, num_hashes=16, bands=bands)
+        return {(r.bench_id, r.doc_id) for r in rows.collect()}
+
+    assert got == _inline(8) and len(got) > len(_inline(D.MINHASH_BANDS))
 
     wpath = str(tmp_path / "widx")
     D.materialize_winnow(docs, wpath, k=4, window=3)
-    assert D.winnow_index_scheme(spark, wpath) == (4, 3)
-    got = D.delta_containment(spark, wpath, delta, threshold=0.9)
-    assert {(r.delta_id, r.corpus_id) for r in got.collect()} == {(100, 0)}
+    assert read_index_meta(spark, wpath) == {"k": 4, "window": 3}
+    # threshold 0: every shared-fingerprint candidate survives verify
+    got = {
+        (r.delta_id, r.corpus_id)
+        for r in D.delta_containment(spark, wpath, delta, threshold=0.0).collect()
+    }
+
+    def _overlap(k, window):
+        rows = winnow_overlap_pairs(
+            docs.unionByName(delta), min_shared=1, k=k, window=window, max_bucket=None
+        )
+        return {(r.doc_b, r.doc_a) for r in rows.collect() if r.doc_a < 100 <= r.doc_b}
+
+    assert got == _overlap(4, 3) and got != _overlap(5, 4)
+
+    os.remove(f"{mpath}/_meta")
+    os.remove(f"{wpath}/_meta")
+    for probe, path in (
+        (D.delta_match_pairs, mpath),
+        (D.delta_dedup_materialized, mpath),
+        (D.delta_containment, wpath),
+        (D.delta_containment_exposure, wpath),
+    ):
+        with pytest.raises(ValueError, match="no `_meta`"):
+            probe(spark, path, delta)
+
+
+def test_read_index_meta_runs_no_spark_job(spark, tmp_path):
+    """The geometry sidecar is read through the filesystem, not a
+    Spark read: resolving an index's geometry runs no job."""
+    from solana_data_etl_pipeline_spark.operators.util import read_index_meta
+
+    docs = spark.createDataFrame([(0, "one two three four five six")], "doc_id long, text string")
+    path = str(tmp_path / "midx")
+    D.materialize_minhash(docs, path)
+    sc = spark.sparkContext
+    sc.setJobGroup("read_index_meta", "geometry reads")
+    try:
+        for _ in range(5):
+            assert read_index_meta(spark, path) == {
+                "num_hashes": D.MINHASH_HASHES,
+                "bands": D.MINHASH_BANDS,
+            }
+        jobs = sc.statusTracker().getJobIdsForGroup("read_index_meta")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []

@@ -59,24 +59,43 @@ def test_parse_tolerates_partially_missing_fields(spark):
 
 def test_config_defaults_match_reference():
     """Reference defaults: rate 50/s, retries 5, timeout 30 s
-    (src/config.rs:41-52), batch 1000 (:64-67), checkpoint every 100
-    (:68-71), chunk 1000 (:72-75), interval 30 s (:76-79)."""
+    (src/config.rs:41-52), chunk 1000 (:72-75), interval 30 s
+    (:76-79)."""
     cfg = Config.load()
     assert cfg.rpc.rate_limit_per_second == 50
     assert cfg.rpc.max_retries == 5
     assert cfg.rpc.timeout_seconds == 30
-    assert cfg.etl.batch_size == 1000
-    assert cfg.etl.checkpoint_interval == 100
     assert cfg.etl.backfill_chunk_size == 1000
     assert cfg.etl.interval_seconds == 30
 
 
 def test_config_env_overrides(monkeypatch):
-    monkeypatch.setenv("ETL_BATCH_SIZE", "250")
+    monkeypatch.setenv("ETL_BACKFILL_CHUNK_SIZE", "250")
     monkeypatch.setenv("ALCHEMY_RATE_LIMIT", "7")
     cfg = Config.load()
-    assert cfg.etl.batch_size == 250
+    assert cfg.etl.backfill_chunk_size == 250
     assert cfg.rpc.rate_limit_per_second == 7
+
+
+def test_configure_applies_exactly_the_runtime_conf():
+    """A session created elsewhere gets every runtime SQL conf get_spark
+    sets, and nothing else: _configure applies session.RUNTIME_CONF."""
+    import __spark_entry__
+    from solana_data_etl_pipeline_spark.session import RUNTIME_CONF
+
+    class _Conf:
+        def __init__(self):
+            self.set_calls = {}
+
+        def set(self, key, value):
+            self.set_calls[key] = value
+
+    class _Session:
+        conf = _Conf()
+
+    session = _Session()
+    assert __spark_entry__._configure(session) is session
+    assert session.conf.set_calls == RUNTIME_CONF
 
 
 def test_round8_operators_on_empty_and_degenerate_input(spark):

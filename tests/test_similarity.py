@@ -171,49 +171,55 @@ def test_knn_lsh_indexed_identical_to_inline(emb, queries, tmp_path):
     )
     stored = sorted(
         (r.query_id, r.neighbor_id, r.cosine, r.rank)
-        for r in V.knn_lsh_indexed(
-            emb.sparkSession.read.parquet(path), queries, k=K
-        ).collect()
-    )
-    assert inline == stored and inline  # identical, non-vacuous
-    # the PATH form resolves geometry from the _lsh_meta sidecar and
-    # returns the same rows
-    by_path = sorted(
-        (r.query_id, r.neighbor_id, r.cosine, r.rank)
         for r in V.knn_lsh_indexed(path, queries, k=K).collect()
     )
-    assert by_path == inline
+    assert inline == stored and inline  # identical, non-vacuous
 
 
 def test_knn_lsh_indexed_pins_probe_params_to_build_params(emb, queries, tmp_path):
-    """ADVICE r12: materialize_lsh_rows writes its build parameters
-    beside the rows, and a PATH probe with conflicting explicit
-    parameters must ERROR -- a mismatched probe buckets queries in a
-    different hash space and silently returns near-empty/wrong
-    neighbor sets otherwise."""
-    import pytest as _pytest
+    """materialize_lsh_rows writes its build geometry as the index's
+    `_meta`, and the probe takes it from there: an index built at a
+    non-default table count probes exactly like the inline form at
+    that count. Without `_meta` the probe raises instead of guessing
+    (a probe in a different hash space silently returns
+    near-empty/wrong neighbor sets)."""
+    import os
 
+    from solana_data_etl_pipeline_spark.operators.util import read_index_meta
+
+    spark = emb.sparkSession
     path = str(tmp_path / "lsh_rows")
     V.materialize_lsh_rows(emb, path, n_tables=2)
-    meta = V.lsh_index_meta(emb.sparkSession, path)
-    assert meta == {"n_planes": V.LSH_PLANES, "dim": V.EMB_DIM, "n_tables": 2}
-    # matching explicit value passes; conflicting value raises
-    V.knn_lsh_indexed(path, queries, k=K, n_tables=2)
-    with _pytest.raises(ValueError, match="different hash space"):
-        V.knn_lsh_indexed(path, queries, k=K, n_tables=4)
-    with _pytest.raises(ValueError, match="n_planes"):
-        V.knn_lsh_indexed(path, queries, k=K, n_planes=V.LSH_PLANES + 1)
-    # omitted params are resolved FROM the index (probe uses 2 tables)
+    assert read_index_meta(spark, path) == {
+        "n_planes": V.LSH_PLANES,
+        "dim": V.EMB_DIM,
+        "n_tables": 2,
+    }
     resolved = V.knn_lsh_indexed(path, queries, k=K)
     two = V.knn_lsh(emb, queries, k=K, n_tables=2)
     assert sorted(map(tuple, resolved.collect())) == sorted(map(tuple, two.collect()))
-    # a pre-meta legacy index (sidecar removed) keeps caller geometry
-    import shutil
+    os.remove(f"{path}/_meta")
+    with pytest.raises(ValueError, match="no `_meta`"):
+        V.knn_lsh_indexed(path, queries, k=K)
 
-    shutil.rmtree(f"{path}/_lsh_meta")
-    assert V.lsh_index_meta(emb.sparkSession, path) is None
-    legacy = V.knn_lsh_indexed(path, queries, k=K, n_tables=2)
-    assert sorted(map(tuple, legacy.collect())) == sorted(map(tuple, two.collect()))
+
+def test_knn_lsh_indexed_prunes_and_keeps_extreme_query_ids(emb, tmp_path):
+    """The probe's partition-pruning enabler filters no query: a
+    query id at the far negative end of the long range gets the same
+    neighbours from the stored index as from inline knn_lsh, and the
+    executed plan still prunes the (table, bucket) directories."""
+    path = str(tmp_path / "lsh_rows")
+    V.materialize_lsh_rows(emb, path)
+    low = -(1 << 62) - 1
+    q = emb.filter(F.col("vec_id") == 0).select(
+        F.lit(low).cast("long").alias("query_id"), "embedding"
+    )
+    inline = sorted(map(tuple, V.knn_lsh(emb, q, k=K).collect()))
+    probe = V.knn_lsh_indexed(path, q, k=K)
+    assert sorted(map(tuple, probe.collect())) == inline
+    assert inline and all(r[0] == low for r in inline)
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    assert "dynamicpruningexpression" in plan.lower()
 
 
 def test_knn_lsh_multi_table_candidates_superset_and_dedup(emb, queries):

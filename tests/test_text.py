@@ -2032,9 +2032,7 @@ def test_hybrid_rank_indexed_identical_to_scan_form(spark, tmp_path):
     ]
     stored = [
         (r.doc_id, r.lex_rank, r.sem_rank, r.rrf_score)
-        for r in X.hybrid_rank_indexed(
-            spark, idx, spark.read.parquet(lsh_path), q, k=10
-        ).collect()
+        for r in X.hybrid_rank_indexed(spark, idx, lsh_path, q, k=10).collect()
     ]
     assert scan == stored and scan  # identical, non-vacuous
 
