@@ -499,36 +499,19 @@ def main() -> None:
     recall["semdedup_removed_frac_bits4"] = round(1 - kept_refined / n_emb, 3)
 
     # cap-coverage diagnostics for every capped LSH family (the 'no
-    # silent caps' observability frames): est_pair_coverage ~0 on a
-    # family means its registered capped pair plan is in the
-    # density-degenerate regime (simhash here, by design of the
-    # synthetic corpus -- see SCALE.md routing rule).
-    from solana_data_etl_pipeline_spark.operators.dedup import (
-        embedding_cap_stats,
-        minhash_cap_stats,
-        simhash_cap_stats,
-    )
-    from solana_data_etl_pipeline_spark.operators.text import winnow_cap_stats
-    from solana_data_etl_pipeline_spark.plans.suite import DEDUP_MAX_BUCKET
-
-    cap_coverage: dict[str, dict] = {}
-    for fam, frame in (
-        ("minhash", minhash_cap_stats(_docs_tbl, max_bucket=DEDUP_MAX_BUCKET)),
-        ("simhash", simhash_cap_stats(_docs_tbl, max_bucket=DEDUP_MAX_BUCKET)),
-        ("winnow", winnow_cap_stats(_docs_tbl, max_bucket=DEDUP_MAX_BUCKET)),
-        (
-            "embedding",
-            embedding_cap_stats(
-                load_table(spark, sf_dir, "embeddings"), max_bucket=DEDUP_MAX_BUCKET
-            ),
-        ),
-    ):
-        row = frame.collect()[0]
-        cap_coverage[fam] = {
+    # silent caps' observability frames), read from the registry's
+    # cap_guard_report: est_pair_coverage ~0 on a family means its
+    # registered capped pair plan is in the density-degenerate regime
+    # (simhash here, by design of the synthetic corpus -- see SCALE.md
+    # routing rule).
+    cap_coverage: dict[str, dict] = {
+        row["family"]: {
             "dropped_buckets": int(row["dropped_buckets"]),
             "n_buckets": int(row["n_buckets"]),
             "est_pair_coverage": float(row["est_pair_coverage"]),
         }
+        for row in full["cap_guard_report"](spark, sf_dir).collect()
+    }
 
     # planted-near-dup recall: the raw numbers above are structurally
     # bounded by the DATA (the exact top-10 of the synthetic vectors
@@ -663,14 +646,12 @@ def main() -> None:
     # SCALE.md sqrt-law dial); recorded per round so a registry or
     # num_hashes change shows up as an error shift, same contract as
     # cap_coverage for caps.
-    from solana_data_etl_pipeline_spark.operators.dedup import minhash_calibration
-
     calibration = {
         f"minhash_decile{int(r['decile'])}": {
             "n_pairs": int(r["n_pairs"]),
             "mean_abs_err_ppm": float(r["mean_abs_err_ppm"]),
         }
-        for r in minhash_calibration(_docs_tbl, max_bucket=DEDUP_MAX_BUCKET).collect()
+        for r in full["minhash_calibration"](spark, sf_dir).collect()
     }
 
     # standalone-warm medians for the heaviest window entries

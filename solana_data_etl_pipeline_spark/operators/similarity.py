@@ -43,16 +43,8 @@ def dot_raw(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def dot_expr(a: Column, b: Column) -> Column:
-    return dot_raw(_dvec(a), _dvec(b))
-
-
 def norm_expr(a: Column) -> Column:
     return F.sqrt(F.aggregate(_dvec(a), F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
 LSH_TABLES = 4

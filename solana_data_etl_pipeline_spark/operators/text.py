@@ -13,6 +13,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from solana_data_etl_pipeline_spark.operators.dedup import (
+    CAP_COVERAGE_FLOOR,
+    cap_buckets,
+    check_cap_coverage,
+    lsh_cap_stats,
+)
+
 # Tiny per-language marker lexicons for the n-gram/stopword language-ID
 # heuristic. Deliberately small + deterministic so the oracle SQL can
 # mirror them verbatim.
@@ -30,10 +37,6 @@ def tokens_col(text: str | Column = "text") -> Column:
     """Whitespace tokenization of trimmed, lowercased text."""
     c = F.col(text) if isinstance(text, str) else text
     return F.split(F.trim(F.lower(c)), r"\s+")
-
-
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("tokens", tokens_col(text_col))
 
 
 def token_counts(df: DataFrame) -> DataFrame:
@@ -917,7 +920,7 @@ def winnow_overlap_pairs(
     window: int = 4,
     max_bucket: int | None = None,
     text_col: str = "text",
-    coverage_floor: float | None = 0.5,
+    coverage_floor: float | None = CAP_COVERAGE_FLOOR,
     on_low_coverage: str = "raise",
 ) -> DataFrame:
     """Document pairs sharing >= `min_shared` winnowing fingerprints --
@@ -932,9 +935,8 @@ def winnow_overlap_pairs(
     gram -- the index is a fraction of the full n-gram join's
     (ngram_jaccard_pairs' PPJoin degenerate) and the fingerprint
     pipeline itself is zero-shuffle. `max_bucket` caps degenerate
-    fingerprint buckets (boilerplate strings) with a count window over
-    the join key, reusing the join's exchange -- the same guard as
-    every LSH plan here.
+    fingerprint buckets (boilerplate strings) through cap_buckets --
+    the same cap as every LSH plan here.
 
     COVERAGE-FLOOR GUARD (VERDICT r12 #3 -- this family is the one
     the generalization exists for: measured cap coverage on the
@@ -949,31 +951,19 @@ def winnow_overlap_pairs(
     out where measuring the refusal is the point."""
     fp = winnow_fingerprints(df, k=k, window=window, text_col=text_col)
     if max_bucket is not None and coverage_floor is not None:
-        from solana_data_etl_pipeline_spark.operators.dedup import (
-            check_cap_coverage,
-            lsh_cap_stats,
-        )
-
         check_cap_coverage(
-            df,
-            lambda: lsh_cap_stats(fp, ["fingerprint"], max_bucket),
-            (min_shared, k, window, max_bucket, text_col),
+            fp,
+            ["fingerprint"],
+            max_bucket,
             family="winnow_overlap_pairs",
             coverage_floor=coverage_floor,
             on_low_coverage=on_low_coverage,
-            max_bucket=max_bucket,
             route_hint=(
                 "probe a materialized winnowing index at delta cost "
                 "(delta_containment) or raise the cap for a bounded batch"
             ),
         )
-    if max_bucket is not None:
-        wspec = Window.partitionBy("fingerprint")
-        fp = (
-            fp.withColumn("_w", F.count(F.lit(1)).over(wspec))
-            .filter(F.col("_w") <= max_bucket)
-            .drop("_w")
-        )
+    fp = cap_buckets(fp, ["fingerprint"], max_bucket)[0]
     l, r = fp.alias("l"), fp.alias("r")
     return (
         l.join(
@@ -991,9 +981,9 @@ def winnow_overlap_pairs(
 
 def winnow_cap_stats(
     df: DataFrame,
+    max_bucket: int,
     k: int = 5,
     window: int = 4,
-    max_bucket: int = 50,
     text_col: str = "text",
 ) -> DataFrame:
     """Cap-coverage diagnostic over the winnowing fingerprint buckets
@@ -1002,8 +992,6 @@ def winnow_cap_stats(
     only misses are CAP loss (capped recall 0.926, uncapped 1.000,
     SCALE.md), so this frame is how a caller knows whether a capped
     run lost candidate mass to boilerplate buckets."""
-    from solana_data_etl_pipeline_spark.operators.dedup import lsh_cap_stats
-
     fp = winnow_fingerprints(df, k=k, window=window, text_col=text_col)
     return lsh_cap_stats(fp, ["fingerprint"], max_bucket)
 

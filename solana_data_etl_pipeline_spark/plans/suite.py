@@ -2987,15 +2987,10 @@ DIMENSION_SQL["merge_dim_wallets"] = DIMENSION_SQL["dim_wallets"]
 # cheap dedup_exact pass. The oracle SQL applies the identical cap.
 DEDUP_MAX_BUCKET = 50
 
-#: the registry-wide coverage floor the generalized guard checks
-#: (operators/dedup.py check_cap_coverage default; cap_guard_report
-#: renders the same threshold as its verdict column)
-CAP_COVERAGE_FLOOR = 0.5
-
 
 def _cap_guard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All four capped families' cap-stats rows + the coverage-floor
-    guard's verdict at the registry floor, one row per family (see
+    guard's verdict at D.CAP_COVERAGE_FLOOR, one row per family (see
     the registration comment at DEDUP_QUERIES['cap_guard_report'])."""
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -3012,7 +3007,7 @@ def _cap_guard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn(
         "guard_verdict",
         F.when(
-            F.col("est_pair_coverage") >= CAP_COVERAGE_FLOOR, F.lit("pass")
+            F.col("est_pair_coverage") >= D.CAP_COVERAGE_FLOOR, F.lit("pass")
         ).otherwise(F.lit("route")),
     ).orderBy("family")
 
@@ -4410,7 +4405,7 @@ DEDUP_SQL["cap_guard_report"] = (
     "SELECT * FROM (\n"
     + "\nUNION ALL\n".join(
         f"SELECT '{fam}' AS family, t.*, "
-        f"CASE WHEN t.est_pair_coverage >= {CAP_COVERAGE_FLOOR} "
+        f"CASE WHEN t.est_pair_coverage >= {D.CAP_COVERAGE_FLOOR} "
         f"THEN 'pass' ELSE 'route' END AS guard_verdict "
         f"FROM ({DEDUP_SQL[fam + '_cap_stats']}) t"
         for fam in ("embedding", "minhash", "simhash", "winnow")

@@ -88,59 +88,6 @@ def document_features_batch(good: DataFrame, gates: str = "simple") -> DataFrame
     )
 
 
-def split_capped_bands(
-    new_bands: DataFrame,
-    existing: DataFrame | None,
-    max_bucket: int | None,
-    keys: tuple[str, str] = ("band", "band_sig"),
-) -> tuple[DataFrame, DataFrame]:
-    """(admitted, overflow) split of index rows APPENDED to a
-    continuously-grown LSH index under materialize_minhash's
-    degenerate-bucket cap, against TOTAL bucket width (existing index
-    rows + the new rows). A batch whose rows would push a bucket (the
-    `keys` group: minhash (band, band_sig); embedding (table, bucket))
-    past the cap contributes nothing to that bucket -- mirroring the
-    build-time rule, which drops over-wide buckets entirely. The
-    OVERFLOW side is what the cap rejected: the rows future probes of
-    the capped index are blind to -- callers that route blind docs
-    persist it (the streaming semantic gate's overflow twin) and
-    callers that only log persist its distinct keys (the excluded
-    list the exposure probes read). The existing-side count is a
-    partial-agg groupBy over the index's join keys: the shuffle
-    carries at most |distinct buckets| rows per partition, and the
-    index is being scanned each batch anyway for the probe join."""
-    cols = new_bands.columns  # the equi-join reorders; appends must not
-    if max_bucket is None:
-        return new_bands, new_bands.filter(F.lit(False)).select(cols)
-    wspec = Window.partitionBy(*keys)
-    new_bands = new_bands.withColumn("_new", F.count(F.lit(1)).over(wspec))
-    if existing is not None:
-        have = existing.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias("_have")
-        )
-        new_bands = new_bands.join(have, list(keys), "left").fillna(
-            0, subset=["_have"]
-        )
-    else:
-        new_bands = new_bands.withColumn("_have", F.lit(0))
-    fits = F.col("_new") + F.col("_have") <= max_bucket
-    return (
-        new_bands.filter(fits).select(cols),
-        new_bands.filter(~fits).select(cols),
-    )
-
-
-def cap_new_bands(
-    new_bands: DataFrame,
-    existing: DataFrame | None,
-    max_bucket: int | None,
-    keys: tuple[str, str] = ("band", "band_sig"),
-) -> DataFrame:
-    """The admitted side of split_capped_bands (kept as the plain-cap
-    entry point for callers that do not track the blind spot)."""
-    return split_capped_bands(new_bands, existing, max_bucket, keys)[0]
-
-
 def index_health(
     spark: SparkSession,
     index_path: str,
@@ -606,11 +553,11 @@ def run_document_stream(
         else:
             todo = corpus_now
         geometry = _index_geometry(semantic_index, {"n_tables": D.EMBED_INDEX_TABLES})
-        rows, overflow = split_capped_bands(
+        rows, overflow = D.cap_buckets(
             _embed_bucket_rows(hash_embed(todo), geometry["n_tables"]),
-            existing,
+            ["table", "bucket"],
             semantic_max_bucket,
-            keys=("table", "bucket"),
+            existing,
         )
         overflow = overflow.localCheckpoint(eager=True)
         rows.write.mode("append").parquet(f"{semantic_index}/buckets")
@@ -619,7 +566,7 @@ def run_document_stream(
             # width here = the rejected mass when the bucket first
             # over-capped (the build-time table records total width)
             exc = overflow.groupBy("table", "bucket").agg(
-                F.count(F.lit(1)).cast("long").alias("bucket_width")
+                F.count(F.lit(1)).alias("bucket_width")
             )
             try:
                 seen_exc = spark.read.parquet(f"{semantic_index}/excluded")
@@ -656,7 +603,7 @@ def run_document_stream(
         plan would let the first append change what the second one's
         anti-join reads (lazy re-evaluation), desynchronizing the
         tables exactly when a partition re-executes. Band appends pass
-        through the accumulated-width bucket cap (cap_new_bands)."""
+        through the accumulated-width bucket cap (dedup.cap_buckets)."""
         corpus_now = spark.read.parquet(output_dir).select("doc_id", "text")
         # the index's banding scheme governs both the probe
         # (delta_match_pairs reads the same `_meta`) and every append
@@ -666,11 +613,12 @@ def run_document_stream(
         nh, nb = geometry["num_hashes"], geometry["bands"]
 
         def _build_bands(d: DataFrame, existing: DataFrame | None) -> DataFrame:
-            return cap_new_bands(
-                D._band_rows(D.minhash_signatures(d, num_hashes=nh), nb, nh // nb),
-                existing,
+            return D.cap_buckets(
+                D._minhash_bands(d, num_hashes=nh, bands=nb),
+                ["band", "band_sig"],
                 near_dup_max_bucket,
-            )
+                existing,
+            )[0]
 
         builders = {
             "bands": _build_bands,

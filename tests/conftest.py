@@ -40,7 +40,7 @@ _SLOW_TESTS = frozenset((
     "test_cli.py::test_cli_stream_corpus_semantic_route_blind",
     "test_compaction.py::test_compact_lsh_index_preserves_probes",
     "test_compaction.py::test_compact_partitioned_ivf_layout",
-    "test_dedup.py::test_connected_components_three_tiers_identical_labels",
+    "test_dedup.py::test_connected_components_three_tiers_identical_labels[300edges]",
     "test_dedup.py::test_semdedup_exact_first_absorbs_replicas",
     "test_dedup.py::test_semdedup_multiprobe_refine_keeps_identical_twins_colocated",
     "test_oracle_parity.py::test_curation_v3_epoch_branch_matches_oracle",
@@ -81,6 +81,13 @@ def pytest_configure(config):
     )
 
 
+def _explicit_markexpr(config) -> bool:
+    """Whether the command line carries a -m option. The option's value
+    cannot tell: `-m ""` and no -m both read as "", so the documented
+    `-m ""` escape must be detected from the invocation itself."""
+    return any(a.startswith("-m") for a in config.invocation_params.args)
+
+
 def pytest_collection_modifyitems(config, items):
     for item in items:
         nid = item.nodeid.removeprefix("tests/")
@@ -88,7 +95,7 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.slow)
     if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
         return
-    if config.getoption("-m"):
+    if _explicit_markexpr(config):
         return  # an explicit marker expression overrides the default
     deselected = [i for i in items if i.get_closest_marker("slow")]
     if deselected:

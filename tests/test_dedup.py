@@ -387,15 +387,21 @@ def test_simhash_near_dup_pigeonhole_complete(spark):
     assert all(h <= 3 for _, _, h in got)
 
 
-def test_connected_components_three_tiers_identical_labels(spark):
+@pytest.mark.parametrize(
+    "n_nodes,n_edges",
+    [pytest.param(40, 30, id="40nodes"), pytest.param(400, 300, id="300edges")],
+)
+def test_connected_components_three_tiers_identical_labels(spark, n_nodes, n_edges):
     """The three execution tiers (driver union-find / broadcast rounds
     / shuffle rounds) must produce IDENTICAL (id, cluster_id) maps on
     the same graph -- a seeded random graph with chains, merges, and
-    singleton pairs exercises non-trivial component structure."""
+    singleton pairs exercises non-trivial component structure. The
+    40-node graph keeps all four forms in the fast default run; the
+    300-edge graph is in the slow set."""
     import random
 
     rng = random.Random(13)
-    edges = {(rng.randrange(400), rng.randrange(400)) for _ in range(300)}
+    edges = {(rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)}
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
 
@@ -560,45 +566,72 @@ def test_coverage_floor_guard_generalizes_to_every_capped_family(spark):
     assert issubclass(D.SimhashCoverageError, D.CapCoverageError)
 
 
-def test_cap_guard_estimate_is_cached_per_plan_and_params(spark):
+def test_cap_guard_estimate_is_cached_per_plan_and_params(spark, tmp_path):
     """ADVICE r12: the guard's corpus-scale cap-stats job must run
-    once per (plan, params), not on every plan construction -- bench
-    re-invokes a registered query callable per timed sample, and the
-    eager per-call collect doubled each sample. The cache key is the
-    SEMANTIC hash of the analyzed plan: stable for file-scan-backed
-    frames (every registered query -- verified here with a rebuilt
-    parquet read), NOT for rebuilt createDataFrame LocalRelations
-    (fresh attribute ids each call), which simply re-pay the stats
-    job -- correct either way, cached where it matters."""
+    once per (bucket rows, cap), not on every plan construction --
+    bench re-invokes a registered query callable per timed sample,
+    and the eager per-call collect doubled each sample. The cache key
+    is the SEMANTIC hash of the bucket rows' analyzed plan, stable for
+    file-scan-backed frames (every registered query): for each guarded
+    family, a second construction over a REBUILT parquet read runs no
+    Spark job, and changing one bucket parameter (bands / bits / k /
+    n_tables) changes the rows plan and so adds a cache entry.
+    (Rebuilt createDataFrame LocalRelations hash fresh each call and
+    simply re-pay the job -- correct either way.)"""
+    import itertools
+    import warnings as _warnings
 
-    def fresh():
-        # parquet-backed like every registered query; the tiny cap
-        # keeps the guard on the raise path so .count() never runs
-        # the pair join itself
-        from solana_data_etl_pipeline_spark.plans.suite import load_table
+    from solana_data_etl_pipeline_spark.operators import text as X
+    from solana_data_etl_pipeline_spark.plans.suite import load_table
 
+    def docs():
         return load_table(spark, "/root/testdata/sf0.001", "documents")
 
-    before = len(D._CAP_GUARD_CACHE)
-    with pytest.raises(D.CapCoverageError):
-        D.minhash_lsh_pairs(fresh(), threshold=0.2, max_bucket=1).count()
-    after_first = len(D._CAP_GUARD_CACHE)
-    assert after_first == before + 1
-    # a REBUILT identical frame (new DataFrame object, same analyzed
-    # plan) must not add a second cache entry
-    with pytest.raises(D.CapCoverageError):
-        D.minhash_lsh_pairs(fresh(), threshold=0.2, max_bucket=1).count()
-    assert len(D._CAP_GUARD_CACHE) == after_first
-    # different params = different cache entry (whether or not the
-    # looser cap clears the floor -- only the key matters here)
-    import warnings as _warnings
+    emb_path, emb_schema = str(tmp_path / "emb"), "vec_id long, embedding array<float>"
+    spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 13 - 6) for j in range(64)]) for i in range(60)],
+        emb_schema,
+    ).write.parquet(emb_path)
+
+    def emb():
+        # a given schema: inferring it from the part files is a job
+        return spark.read.schema(emb_schema).parquet(emb_path)
+
+    # an uncommon cap, so no earlier construction in this process
+    # shares the key; "warn" keeps a below-floor family constructible
+    cap = {"max_bucket": 47, "on_low_coverage": "warn"}
+    families = [
+        (lambda **kw: D.minhash_lsh_pairs(docs(), threshold=0.2, **cap, **kw), {"bands": 8}),
+        (lambda **kw: D.simhash_near_dup_pairs(docs(), **cap, **kw), {"bits": 60}),
+        (lambda **kw: X.winnow_overlap_pairs(docs(), **cap, **kw), {"k": 6}),
+        (
+            lambda **kw: D.embedding_near_dup_lsh(emb(), threshold=0.9, **cap, **kw),
+            {"n_tables": 3},
+        ),
+    ]
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def construction_jobs(build) -> list:
+        group = f"cap_guard_cache_{next(groups)}"
+        sc.setJobGroup(group, "guarded plan construction")
+        try:
+            build()
+            return list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
 
     with _warnings.catch_warnings():
         _warnings.simplefilter("ignore")
-        D.minhash_lsh_pairs(
-            fresh(), threshold=0.2, max_bucket=2, on_low_coverage="warn"
-        )
-    assert len(D._CAP_GUARD_CACHE) == after_first + 1
+        for build, changed in families:
+            before = len(D._CAP_GUARD_CACHE)
+            assert construction_jobs(build)  # first construction pays the job
+            assert len(D._CAP_GUARD_CACHE) == before + 1
+            assert construction_jobs(build) == [], changed
+            assert len(D._CAP_GUARD_CACHE) == before + 1
+            build(**changed)
+            assert len(D._CAP_GUARD_CACHE) == before + 2, changed
 
 
 def test_decontaminate_split_is_cluster_level_not_direct_pair(spark):

@@ -332,13 +332,14 @@ def test_document_stream_near_dup_index(spark, tmp_path):
 
 
 def test_streaming_index_bucket_cap_counts_accumulated_width(spark):
-    """cap_new_bands must enforce the degenerate-bucket cap against
+    """dedup.cap_buckets must enforce the degenerate-bucket cap against
     TOTAL bucket width (index rows already present + this batch's
     rows), not per batch -- otherwise a hot bucket grows without bound
-    across batches and every future probe join goes quadratic."""
-    from solana_data_etl_pipeline_spark.streaming.corpus import cap_new_bands
+    across appends and every future probe join goes quadratic."""
+    from solana_data_etl_pipeline_spark.operators.dedup import cap_buckets
 
     schema = "doc_id long, band int, band_sig string"
+    keys = ["band", "band_sig"]
     existing = spark.createDataFrame(
         [(1, 0, "hot"), (2, 0, "hot"), (3, 1, "warm")], schema
     )
@@ -346,53 +347,58 @@ def test_streaming_index_bucket_cap_counts_accumulated_width(spark):
         [(10, 0, "hot"), (11, 1, "warm"), (12, 2, "cold"), (13, 2, "cold")], schema
     )
 
+    def kept(max_bucket, existing):
+        return {tuple(r) for r in cap_buckets(new, keys, max_bucket, existing)[0].collect()}
+
     # cap 3: bucket (0,hot) would reach 3 -> kept; every bucket fits
-    got = {tuple(r) for r in cap_new_bands(new, existing, 3).collect()}
-    assert got == {(10, 0, "hot"), (11, 1, "warm"), (12, 2, "cold"), (13, 2, "cold")}
+    assert kept(3, existing) == {(10, 0, "hot"), (11, 1, "warm"), (12, 2, "cold"), (13, 2, "cold")}
 
     # cap 2: (0,hot) total would be 3 -> new rows dropped, existing
     # untouched; (1,warm) reaches exactly 2 -> kept
-    got = {tuple(r) for r in cap_new_bands(new, existing, 2).collect()}
-    assert got == {(11, 1, "warm"), (12, 2, "cold"), (13, 2, "cold")}
+    assert kept(2, existing) == {(11, 1, "warm"), (12, 2, "cold"), (13, 2, "cold")}
 
     # first batch (no index yet): cap applies within the batch alone
-    got = {tuple(r) for r in cap_new_bands(new, None, 1).collect()}
-    assert got == {(10, 0, "hot"), (11, 1, "warm")}
+    assert kept(1, None) == {(10, 0, "hot"), (11, 1, "warm")}
 
     # uncapped passthrough
-    assert cap_new_bands(new, existing, None) is new
+    assert cap_buckets(new, keys, None, existing)[0] is new
 
 
 def test_split_capped_bands_partitions_the_batch(spark):
-    """The admitted/overflow split is a PARTITION of the new rows:
-    overflow holds exactly what the cap rejected (all-or-nothing per
-    bucket, mirroring the build-time rule), admitted == cap_new_bands,
-    and uncapped mode yields an empty overflow with the same
-    schema."""
-    from solana_data_etl_pipeline_spark.streaming.corpus import split_capped_bands
+    """dedup.cap_buckets splits bucket rows into (kept, overflow), a
+    PARTITION of the input: overflow holds exactly what the cap refused
+    (all-or-nothing per bucket), kept rows keep the input's column
+    order (callers append them), and uncapped mode returns an empty
+    overflow with the input's schema."""
+    from solana_data_etl_pipeline_spark.operators.dedup import cap_buckets
 
     schema = "doc_id long, band int, band_sig string"
+    keys = ["band", "band_sig"]
     existing = spark.createDataFrame(
         [(1, 0, "hot"), (2, 0, "hot"), (3, 1, "warm")], schema
     )
     new = spark.createDataFrame(
         [(10, 0, "hot"), (11, 1, "warm"), (12, 2, "cold"), (13, 2, "cold")], schema
     )
-    adm, over = split_capped_bands(new, existing, 2)
-    got_adm = {tuple(r) for r in adm.collect()}
-    got_over = {tuple(r) for r in over.collect()}
-    assert got_adm == {(11, 1, "warm"), (12, 2, "cold"), (13, 2, "cold")}
-    assert got_over == {(10, 0, "hot")}  # exactly the rejected rows
-    assert got_adm | got_over == {tuple(r) for r in new.collect()}
-    assert got_adm & got_over == set()
+    hot, warm, cold = {(10, 0, "hot")}, {(11, 1, "warm")}, {(12, 2, "cold"), (13, 2, "cold")}
 
+    def split(max_bucket, existing):
+        kept, over = cap_buckets(new, keys, max_bucket, existing)
+        assert kept.columns == over.columns == new.columns
+        got_kept = {tuple(r) for r in kept.collect()}
+        got_over = {tuple(r) for r in over.collect()}
+        assert got_kept | got_over == hot | warm | cold
+        assert got_kept & got_over == set()
+        return got_kept, got_over
+
+    # against the index: exactly the rejected rows overflow
+    assert split(2, existing) == (warm | cold, hot)
     # first batch, tight cap: whole over-wide buckets overflow
-    adm, over = split_capped_bands(new, None, 1)
-    assert {tuple(r) for r in over.collect()} == {(12, 2, "cold"), (13, 2, "cold")}
+    assert split(1, None) == (hot | warm, cold)
+    assert split(2, None) == (hot | warm | cold, set())
 
     # uncapped: empty overflow, schema preserved for downstream appends
-    adm, over = split_capped_bands(new, existing, None)
-    assert adm is new
+    kept, over = cap_buckets(new, keys, None, existing)
     assert over.columns == new.columns
     assert over.count() == 0
 
