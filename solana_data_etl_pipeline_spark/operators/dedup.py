@@ -24,7 +24,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from solana_data_etl_pipeline_spark.operators.util import require_index_meta, write_index_meta
+from solana_data_etl_pipeline_spark.operators.util import (
+    read_index_meta,
+    read_or_none,
+    require_index_meta,
+    unindexed,
+    write_index_meta,
+)
 
 MINHASH_HASHES = 16
 MINHASH_BANDS = 4
@@ -287,6 +293,78 @@ def cap_buckets(
         rows = rows.withColumn("_have", F.lit(0))
     fits = F.col("_new") + F.col("_have") <= max_bucket
     return rows.filter(fits).select(cols), rows.filter(~fits).select(cols)
+
+
+def _write_index(
+    df: DataFrame,
+    path: str,
+    geometry: dict[str, tuple],
+    tables: dict,
+    keys: list[str],
+    max_bucket: int | None,
+    id_col: str = "doc_id",
+    excluded: bool = True,
+) -> DataFrame:
+    """The one rule by which every materialized LSH index is written,
+    whether it is built or caught up; returns the bucket rows the cap
+    refused in this call.
+
+    `geometry` maps each geometry name to (requested value or None,
+    module default); `tables` maps each sub-table to its row function
+    `(docs, geometry) -> rows`, the FIRST being the bucket table that
+    is capped on `keys` at `max_bucket` (cap_buckets).
+
+    - No `{path}/_meta` (a build): `_meta` is written first -- None
+      values take the module default -- then every sub-table is
+      overwritten from all of `df`.
+    - `_meta` present (a catch-up): geometry comes from `_meta`, and an
+      explicit value that disagrees with it raises ValueError. Each
+      sub-table appends the rows of the `df` ids it does not hold yet
+      (its OWN ids: one shared anti-join would let the first append
+      change what the second reads), and the cap counts the bucket
+      table's existing rows too. The kept/refused split is checkpointed
+      before the first append, because it depends on the rows being
+      appended to.
+
+    With `excluded`, `{path}/excluded` records each refused bucket
+    once as (keys..., bucket_width): it is written even when empty if
+    it does not exist yet (probes read it unconditionally), and a
+    catch-up appends only buckets it does not hold. A build's
+    bucket_width is the bucket's total width; a catch-up's is the mass
+    refused by the call that first refused the bucket."""
+    spark = df.sparkSession
+    meta = read_index_meta(spark, path)
+    build = meta is None
+    if build:
+        meta = {g: default if v is None else v for g, (v, default) in geometry.items()}
+        write_index_meta(spark, path, meta)
+    else:
+        clash = {g: v for g, (v, _) in geometry.items() if v is not None and v != meta[g]}
+        if clash:
+            raise ValueError(f"{path}: {clash} disagrees with the index's `_meta` {meta}")
+    mode = "overwrite" if build else "append"
+    overflow = None
+    for sub, rows_of in tables.items():
+        have = None if build else read_or_none(spark, f"{path}/{sub}")
+        rows = rows_of(unindexed(df, have, id_col), meta)
+        if overflow is None:  # the first table: the capped bucket rows
+            rows, overflow = cap_buckets(rows, keys, max_bucket, have)
+            if have is not None:
+                # one job materializes both halves: the union's branches
+                # share (reuse) the cap plan's exchanges
+                split = rows.withColumn("_kept", F.lit(True)).unionByName(
+                    overflow.withColumn("_kept", F.lit(False))
+                ).localCheckpoint(eager=True)
+                rows, overflow = (
+                    split.filter(kept).drop("_kept") for kept in (F.col("_kept"), ~F.col("_kept"))
+                )
+            if excluded:
+                held = None if build else read_or_none(spark, f"{path}/excluded")
+                if held is None or overflow.limit(1).count():
+                    widths = overflow.groupBy(*keys).agg(F.count(F.lit(1)).alias("bucket_width"))
+                    unindexed(widths, held, keys).write.mode(mode).parquet(f"{path}/excluded")
+        rows.write.mode(mode).parquet(f"{path}/{sub}")
+    return overflow
 
 
 def lsh_cap_stats(
@@ -666,32 +744,43 @@ def materialize_minhash(
     df: DataFrame,
     path: str,
     text_col: str = "text",
-    num_hashes: int = MINHASH_HASHES,
-    bands: int = MINHASH_BANDS,
+    num_hashes: int | None = None,
+    bands: int | None = None,
     max_bucket: int | None = None,
-) -> None:
+) -> DataFrame:
     """Write the corpus near-dup index: `{path}/bands` = (doc_id, band,
     band_sig) LSH band rows, `{path}/shingles` = (doc_id, sh) shingle
     sets for exact verification. Both are pure projections of the
-    corpus (zero shuffles when uncapped), written once at
-    ingest/compaction cadence; delta batches then dedup against the
-    INDEX without ever rescanning corpus text. The dedup twin of the
-    materialized IVF layout (similarity.py materialize_ivf).
+    corpus (zero shuffles when uncapped); delta batches then dedup
+    against the INDEX without ever rescanning corpus text. The dedup
+    twin of the materialized IVF layout (similarity.py materialize_ivf).
 
-    `max_bucket` caps degenerate band buckets AT BUILD TIME (one count
-    window, amortized over every future probe): without it, a single
-    pathological bucket -- e.g. the empty-document signature -- joins
-    against every matching delta doc on every batch, forever. Same
-    recall trade as minhash_lsh_pairs' cap: exact duplicates lost to a
-    capped bucket are caught by the exact-fingerprint dedup stage that
-    runs before near-dup in every pipeline here."""
-    b = _minhash_bands(df, text_col, num_hashes, bands)
-    cap_buckets(b, ["band", "band_sig"], max_bucket)[0].write.mode("overwrite").parquet(
-        f"{path}/bands"
+    Build or catch-up is _write_index's rule: on a path that already
+    holds an index, the call appends the docs it lacks at the index's
+    banding scheme (`num_hashes`/`bands` None = the index's, else
+    MINHASH_HASHES/MINHASH_BANDS) -- the streaming corpus pipeline
+    grows its index this way. Returns the band rows the cap refused.
+
+    `max_bucket` caps degenerate band buckets (one count window,
+    amortized over every future probe; in a catch-up against the
+    bucket's accumulated width): without it, a single pathological
+    bucket -- e.g. the empty-document signature -- joins against every
+    matching delta doc on every batch, forever. Same recall trade as
+    minhash_lsh_pairs' cap: exact duplicates lost to a capped bucket
+    are caught by the exact-fingerprint dedup stage that runs before
+    near-dup in every pipeline here."""
+    return _write_index(
+        df,
+        path,
+        {"num_hashes": (num_hashes, MINHASH_HASHES), "bands": (bands, MINHASH_BANDS)},
+        {
+            "bands": lambda d, g: _minhash_bands(d, text_col, g["num_hashes"], g["bands"]),
+            "shingles": lambda d, g: _shingle_sets(d, text_col),
+        },
+        ["band", "band_sig"],
+        max_bucket,
+        excluded=False,
     )
-    _shingle_sets(df, text_col).write.mode("overwrite").parquet(f"{path}/shingles")
-    # the banding scheme defines band_sig: probes must use the index's
-    write_index_meta(df.sparkSession, path, {"num_hashes": num_hashes, "bands": bands})
 
 
 def delta_match_pairs(
@@ -1521,48 +1610,49 @@ def containment_pairs(
 def materialize_winnow(
     df: DataFrame,
     path: str,
-    k: int = 5,
-    window: int = 4,
+    k: int | None = None,
+    window: int | None = None,
     max_bucket: int | None = None,
     text_col: str = "text",
-) -> None:
+) -> DataFrame:
     """Write the corpus DECONTAMINATION index for the containment /
     winnowing family -- the substring-evidence twin of
     materialize_minhash: `{path}/fingerprints` = (doc_id, fingerprint)
     winnowing rows, `{path}/shingles` = (doc_id, sh) word-shingle sets
-    for exact containment verification. Built once at ingest/
-    compaction cadence; every future ingest batch is then checked
-    against the corpus at DELTA cost (delta_containment) instead of
-    the batch operator's full-corpus rescan.
+    for exact containment verification. Every future ingest batch is
+    then checked against the corpus at DELTA cost (delta_containment)
+    instead of the batch operator's full-corpus rescan. Build or
+    catch-up is _write_index's rule; `k`/`window` None = the index's,
+    else 5/4. Returns the fingerprint rows the cap refused.
 
     `max_bucket` caps degenerate fingerprint buckets (boilerplate
-    substrings) AT BUILD TIME through cap_buckets, amortized over
-    every probe -- same trade and same observability (winnow_cap_stats)
-    as the batch plan's cap. The over-cap fingerprints are NOT lost:
-    they are written to `{path}/excluded` as (fingerprint,
-    bucket_width) -- the IR stop-word move for substring evidence --
-    so probes can report per-batch-doc how much of their fingerprint
-    mass the index is blind to (delta_containment_exposure), turning
-    build-time cap loss into per-document routing signal instead of a
-    corpus-level aggregate. (The build evaluates the windowed count
-    twice -- once per output -- which is fine at index-build cadence;
-    the alternative, checkpointing the corpus-fingerprint frame, costs
-    more than it saves.)"""
+    substrings) through cap_buckets, amortized over every probe --
+    same trade and same observability (winnow_cap_stats) as the batch
+    plan's cap. The over-cap fingerprints are NOT lost: they are
+    written to `{path}/excluded` as (fingerprint, bucket_width) -- the
+    IR stop-word move for substring evidence -- so probes can report
+    per-batch-doc how much of their fingerprint mass the index is
+    blind to (delta_containment_exposure), turning cap loss into
+    per-document routing signal instead of a corpus-level aggregate.
+    (A build evaluates the windowed count twice -- once per output --
+    which is fine at index-build cadence; the alternative,
+    checkpointing the corpus-fingerprint frame, costs more than it
+    saves.)"""
     from solana_data_etl_pipeline_spark.operators.text import winnow_fingerprints
 
-    fp, overflow = cap_buckets(
-        winnow_fingerprints(df, k=k, window=window, text_col=text_col),
+    return _write_index(
+        df,
+        path,
+        {"k": (k, 5), "window": (window, 4)},
+        {
+            "fingerprints": lambda d, g: winnow_fingerprints(
+                d, k=g["k"], window=g["window"], text_col=text_col
+            ),
+            "shingles": lambda d, g: _shingle_sets(d, text_col),
+        },
         ["fingerprint"],
         max_bucket,
     )
-    excluded = overflow.groupBy("fingerprint").agg(
-        F.count(F.lit(1)).alias("bucket_width")
-    )
-    excluded.write.mode("overwrite").parquet(f"{path}/excluded")
-    fp.write.mode("overwrite").parquet(f"{path}/fingerprints")
-    _shingle_sets(df, text_col).write.mode("overwrite").parquet(f"{path}/shingles")
-    # (k, window) define the fingerprints: probes must use the index's
-    write_index_meta(df.sparkSession, path, {"k": k, "window": window})
 
 
 def delta_containment(
@@ -1913,40 +2003,50 @@ EMBED_INDEX_TABLES = 6
 def materialize_embedding_lsh(
     emb_df: DataFrame,
     path: str,
-    n_tables: int = EMBED_INDEX_TABLES,
+    n_tables: int | None = None,
     max_bucket: int | None = None,
-) -> None:
+) -> DataFrame:
     """Write the corpus EMBEDDING near-dup index -- the vector twin of
     materialize_minhash/materialize_winnow, completing the
     materialized-index story across all three dedup families:
-    `{path}/buckets` = (vec_id, table, bucket, v, n) hyperplane-LSH
+    `{path}/buckets` = (vec_id, v, n, table, bucket) hyperplane-LSH
     bucket rows carrying the normalized vector payload, so probes
     verify exact cosine FROM THE INDEX without rereading embeddings.
-    `max_bucket` caps degenerate (table, bucket) groups at build time
-    (cap_buckets, amortized over every probe) -- the production
-    shape, since the bucket domain is constant (2^planes values) and
-    widths grow with the corpus."""
+    Build or catch-up is _write_index's rule; `n_tables` None = the
+    index's, else EMBED_INDEX_TABLES. Returns the bucket rows the cap
+    refused (the streaming pipeline's overflow twin holds them).
+
+    `max_bucket` caps degenerate (table, bucket) groups (cap_buckets,
+    amortized over every probe) -- the production shape, since the
+    bucket domain is constant (2^planes values) and widths grow with
+    the corpus. Over-cap buckets are not silently lost: like
+    materialize_winnow's, `{path}/excluded` lists them, and probes
+    read it to report per-vector blindness (delta_embedding_exposure).
+
+    A catch-up anti-joins on vec_id AFTER the vectors are bucketed, and
+    Spark does not push that anti-join below an embedding projection
+    such as hash_embed: pass vectors of the unindexed documents only
+    (operators/util.py unindexed)."""
     from solana_data_etl_pipeline_spark.operators.similarity import (
         LSH_PLANES,
         lsh_bucket_rows,
     )
 
-    # Arrow/numpy bucket-kernel build pass (bit-identical rows; the
-    # former HOF projection's dots/norms dominated the build cost)
-    v = lsh_bucket_rows(
-        emb_df, LSH_PLANES, n_tables=n_tables, vec_out="v", norm_out="n"
-    ).select("vec_id", "v", "n", "table", "bucket")
-    v, overflow = cap_buckets(v, ["table", "bucket"], max_bucket)
-    excluded = overflow.groupBy("table", "bucket").agg(
-        F.count(F.lit(1)).alias("bucket_width")
+    # Arrow/numpy bucket-kernel pass (bit-identical rows; the former
+    # HOF projection's dots/norms dominated the build cost)
+    return _write_index(
+        emb_df,
+        path,
+        {"n_tables": (n_tables, EMBED_INDEX_TABLES)},
+        {
+            "buckets": lambda d, g: lsh_bucket_rows(
+                d, LSH_PLANES, n_tables=g["n_tables"], vec_out="v", norm_out="n"
+            ).select("vec_id", "v", "n", "table", "bucket"),
+        },
+        ["table", "bucket"],
+        max_bucket,
+        id_col="vec_id",
     )
-    # over-cap buckets are not silently lost: like materialize_winnow's
-    # excluded-fingerprint table, probes read this to report per-vector
-    # blindness (delta_embedding_exposure)
-    excluded.write.mode("overwrite").parquet(f"{path}/excluded")
-    v.write.mode("overwrite").parquet(f"{path}/buckets")
-    # probe tables beyond the index's would silently never match
-    write_index_meta(emb_df.sparkSession, path, {"n_tables": n_tables})
 
 
 def delta_embedding_exposure(

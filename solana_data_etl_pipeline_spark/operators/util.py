@@ -5,6 +5,37 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame
+from pyspark.sql.utils import AnalysisException
+
+
+def read_or_none(spark, path: str) -> DataFrame | None:
+    """The parquet table at `path`, or None when it does not exist yet.
+    Only this path-probing read may mean "absent": a failure in a plan
+    built on the returned frame must still propagate, so callers never
+    wrap more than this call."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException:
+        return None
+
+
+def unindexed(
+    df: DataFrame,
+    index_rows: DataFrame | None,
+    on: str | list[str] = "doc_id",
+    index_id: str | None = None,
+) -> DataFrame:
+    """The rows of `df` whose key `on` (a column or a list of them) is
+    not among the keys of `index_rows`, where a single key may be named
+    `index_id` instead; all of `df` while the index table does not
+    exist yet (None). This is the anti-join by which an index or an
+    append-only log learns which rows are new."""
+    if index_rows is None:
+        return df
+    if index_id is not None:
+        index_rows = index_rows.withColumnRenamed(index_id, on)
+    on = [on] if isinstance(on, str) else on
+    return df.join(index_rows.select(*on).distinct(), on, "left_anti")
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -5584,39 +5584,9 @@ def all_oracle_sql() -> dict[str, str]:
 #     repeat_buyers / segment_order_stats vs the kept agg+join set);
 #   - rotation history: every rotated-out entry stays DuckDB-swept by
 #     tests/test_oracle_parity on every test run.
-# STANDING RULE (VERDICT r11 #2): the stale-green re-verdict robin
-# returns the longest-out greens each round alongside never-verdicted
-# registrants -- SUSPENDED for the optimization rounds (r13-r14), see
-# the freeze note below; resume at the next build round with the
-# widened 12-18/round cadence VERDICT r12 #2 asked for (the r11-era
-# "3-5/round, ~6 rounds" arithmetic could never converge on the 84
-# <=r8 backlog).
-#
-# OPTIMIZATION-ROUND FREEZE (r13): rounds 13-14 are PERFORMANCE
-# rounds graded on BENCH_r13-vs-BENCH_r12 per-query deltas, and their
-# contract forbids removing or renaming any declared query: a window
-# rotation here would (a) make the 5 heaviest r12 entries
-# "disappear" from the bench -- indistinguishable from gaming the
-# total -- and (b) destroy cross-round comparability of every
-# rotated slot. The mid-build r13 rotation (A7/A10/A12 robin + the
-# 15-entry r2/r3 relational cohort in, the 5 heaviest r12 greens +
-# 13 light greens out) was therefore BACKED OUT at the start of r13;
-# DRIVER_ORDER below is byte-identical to the r12 window
-# (CORRECTNESS_r12.json / BENCH_r12.json keys). The rotation's
-# registrant (cap_guard_report) and every rotated-out entry stay
-# DuckDB-swept on every test run by tests/test_oracle_parity.py.
-# DEFERRED ROTATION PLAN (execute at the next BUILD round): rotate IN
-# cap_guard_report + the A7/A10/A12 robin (token_transfer_stats /
-# top_errors / top_wallets; reference
-# src/analytics.rs:406-438,536-549,619-633) + the r2/r3 relational
-# cohort (big_spenders, customer_order_ranks, daily_purchase_vs_error,
-# late_shipment_priority, nation_revenue_share, price_percentiles,
-# repeat_buyers, revenue_change, segment_order_stats,
-# shipping_priority, user_sessions, lineitem_measures_unpivot,
-# price_tier_distribution, region_revenue, small_quantity_revenue);
-# rotate OUT the heaviest freshly-verdicted entries by solo weight,
-# keeping exactly ONE of the semdedup pair in-window (VERDICT r12 #5)
-# and the window at exactly 50.
+# The order is fixed this round so BENCH deltas stay comparable across
+# changes; every registry entry, listed here or not, stays DuckDB-swept
+# by tests/test_oracle_parity.py.
 DRIVER_ORDER = [
     "semdedup_exact_first",
     "hybrid_rank_indexed",

@@ -29,7 +29,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
+
+from solana_data_etl_pipeline_spark.operators.util import read_or_none
 
 
 def _dir_bytes(path: str) -> int:
@@ -200,10 +201,10 @@ def compact_lsh_index(
         sub_path = os.path.join(index_path, sub)
         if not os.path.isdir(sub_path) or "._compact_" in sub:
             continue
-        try:
-            cols = set(spark.read.parquet(sub_path).columns)
-        except AnalysisException:
+        table = read_or_none(spark, sub_path)
+        if table is None:
             continue  # non-parquet artifacts (markers, logs)
+        cols = set(table.columns)
         sort_by = next(
             (k for k in _INDEX_CLUSTERING if set(k) <= cols), None
         )

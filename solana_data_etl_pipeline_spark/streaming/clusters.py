@@ -68,18 +68,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from solana_data_etl_pipeline_spark.operators.dedup import connected_components
+from solana_data_etl_pipeline_spark.operators.util import read_or_none
 
 _REMAPS_SCHEMA = "old_root long, new_root long"
-
-
-def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        return None
 
 
 def _overwrite_swapped(df: DataFrame, path: str) -> None:
@@ -142,7 +135,7 @@ def _pending_pairs(spark: SparkSession, index_path: str, last: int) -> DataFrame
     the scan prunes processed epochs at the file source -- at scale
     the catch-up touches only the unprocessed tail, never the whole
     log (partition-pruning pinned by test)."""
-    all_pairs = _read_or_none(spark, f"{index_path}/pairs")
+    all_pairs = read_or_none(spark, f"{index_path}/pairs")
     if all_pairs is None:
         return None
     return all_pairs.filter(F.col("epoch") > F.lit(int(last)))
@@ -164,7 +157,7 @@ def catch_up_clusters(spark: SparkSession, index_path: str) -> None:
 
     recover_swap(f"{index_path}/remaps")
     recover_swap(f"{index_path}/pairs_done")
-    marker = _read_or_none(spark, f"{index_path}/pairs_done")
+    marker = read_or_none(spark, f"{index_path}/pairs_done")
     last = marker.agg(F.max("epoch")).collect()[0][0] if marker is not None else -1
     pending = _pending_pairs(spark, index_path, last)
     if pending is None:
@@ -174,8 +167,8 @@ def catch_up_clusters(spark: SparkSession, index_path: str) -> None:
         return
     pending = pending.select("doc_a", "doc_b").distinct().localCheckpoint(eager=True)
 
-    clusters = _read_or_none(spark, f"{index_path}/clusters")
-    remaps = _read_or_none(spark, f"{index_path}/remaps")
+    clusters = read_or_none(spark, f"{index_path}/clusters")
+    remaps = read_or_none(spark, f"{index_path}/remaps")
     if clusters is not None:
         resolved = _resolve(clusters, remaps)
     else:
@@ -282,10 +275,10 @@ def streamed_clusters(spark: SparkSession, index_path: str) -> DataFrame:
     pure keep/drop stream loses. One broadcast join against the tiny
     resolved remap table; the per-doc table itself is never rewritten
     between compactions."""
-    clusters = _read_or_none(spark, f"{index_path}/clusters")
+    clusters = read_or_none(spark, f"{index_path}/clusters")
     if clusters is None:
         return spark.createDataFrame([], "doc_id long, cluster_id long")
-    return _resolve(clusters, _read_or_none(spark, f"{index_path}/remaps"))
+    return _resolve(clusters, read_or_none(spark, f"{index_path}/remaps"))
 
 
 def compact_clusters(spark: SparkSession, index_path: str) -> None:
@@ -293,8 +286,8 @@ def compact_clusters(spark: SparkSession, index_path: str) -> None:
     the swap protocol) and reset the log, restoring the empty-remap
     fast path. Run at compaction cadence alongside the parquet
     compaction -- never per batch."""
-    clusters = _read_or_none(spark, f"{index_path}/clusters")
-    remaps = _read_or_none(spark, f"{index_path}/remaps")
+    clusters = read_or_none(spark, f"{index_path}/clusters")
+    remaps = read_or_none(spark, f"{index_path}/remaps")
     if clusters is None or remaps is None or not remaps.limit(1).count():
         return
     # _overwrite_swapped writes the derived frame to a temp sibling

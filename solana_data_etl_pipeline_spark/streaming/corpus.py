@@ -22,10 +22,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from solana_data_etl_pipeline_spark.operators import text as X
-from solana_data_etl_pipeline_spark.operators.util import read_index_meta, write_index_meta
+from solana_data_etl_pipeline_spark.operators.util import (
+    read_index_meta,
+    read_or_none,
+    unindexed,
+    write_index_meta,
+)
 from solana_data_etl_pipeline_spark.plans.corpus import (
     MIN_ALPHA_RATIO,
     MIN_TOKENS,
@@ -196,25 +200,24 @@ def run_document_stream(
     deployment with a learned encoder swaps the vector source,
     nothing else changes) and probed against a continuously-grown
     embedding-LSH index via delta_embedding_dedup's drop rule, at
-    delta cost; the index is caught up after each corpus write with
-    the same self-healing doc_id anti-join as the near-dup index,
-    appends passing the accumulated-width bucket cap
-    (`semantic_max_bucket`) on (table, bucket). Runs AFTER exact and
-    near-dup dedup so only novel content pays embedding cost; it
-    catches what they miss (bag-of-words twins: permuted or
-    re-ordered content).
+    delta cost; after each corpus write the index is caught up by its
+    batch writer, materialize_embedding_lsh, at `semantic_max_bucket`
+    (which docs are appended, the accumulated-width cap, `_meta` and
+    `excluded` are its rule), over the hash-embedded vectors of only
+    the corpus docs the index lacks. Runs AFTER exact and near-dup
+    dedup so only novel content pays embedding cost; it catches what
+    they miss (bag-of-words twins: permuted or re-ordered content).
 
     The semantic cap's blind spot is OBSERVED and optionally ACTED on,
-    mirroring the decontamination family: the catch-up records every
-    (table, bucket) the cap rejected rows from as
-    `{semantic_index}/excluded` (bounded by the bucket DOMAIN --
-    n_tables x 2^planes -- so maintenance is trivially cheap), and
-    docs whose probe routes are measurably blind -- >=
+    mirroring the decontamination family: the writer records every
+    (table, bucket) the cap refused as `{semantic_index}/excluded`
+    (bounded by the bucket DOMAIN -- n_tables x 2^planes), and docs
+    whose probe routes are measurably blind -- >=
     `semantic_blind_bp` basis points of their buckets on that list
     (delta_embedding_exposure) -- are logged to
     `{output_dir}_semantic_blind` before the corpus commit. With
     `semantic_route_blind=True` the routing ACTS in-stream: the
-    catch-up ALSO persists the rejected rows themselves as an
+    rows the writer refused are ALSO appended to an
     OVERFLOW twin (`{semantic_index}_overflow`, exactly the
     hot-bucket tail the capped index refuses), and measurably-blind
     docs take a second probe against it -- fallback hits drop before
@@ -267,25 +270,17 @@ def run_document_stream(
     (operators/dedup.py materialize_minhash /
     delta_dedup_materialized): the batch probes the index -- O(batch)
     work, the corpus is never rescanned -- and after the corpus write
-    the index is caught up to corpus \\ index (doc_id anti-join). That
-    catch-up form makes index maintenance SELF-HEALING: a crash
-    between the corpus write and the index append leaves the index
-    behind the corpus, and the next batch's catch-up repairs it;
-    replays add nothing because the fingerprint anti-join empties the
-    batch first. Near-dup runs after exact dedup, so only novel
-    content pays signature cost.
-
-    `near_dup_max_bucket` applies materialize_minhash's degenerate-
-    bucket cap to the CONTINUOUSLY-GROWN index: without it, band
-    buckets accumulate across batches unchecked, and one pathological
-    bucket (e.g. a boilerplate band signature) makes every future
-    batch probe quadratic, forever. The cap is enforced against the
-    bucket's TOTAL width (existing index rows + this batch's rows):
-    a batch whose rows would push a bucket past the cap contributes
-    nothing to that bucket -- mirroring the build-time rule, which
-    drops over-wide buckets entirely. Recall note is the same as
-    materialize_minhash's: exact duplicates lost to a capped bucket
-    were already caught by the exact-fingerprint stage.
+    materialize_minhash, called on the whole corpus, catches the index
+    up to the docs it lacks at `near_dup_max_bucket` (its catch-up
+    rule: per-sub-table anti-join, cap against the bucket's
+    accumulated width). That form makes index maintenance
+    SELF-HEALING: a crash between the corpus write and the index
+    append leaves the index behind the corpus, and the next batch's
+    catch-up repairs it; replays add nothing because the fingerprint
+    anti-join empties the batch first. Near-dup runs after exact
+    dedup, so only novel content pays signature cost. Without the cap
+    one pathological band bucket (e.g. a boilerplate signature) would
+    make every future batch probe quadratic, forever.
 
     Streaming CURATION POLICIES (the streaming half of the composed
     corpus_curation plan) are applied per batch, after dedup:
@@ -391,15 +386,16 @@ def run_document_stream(
         catch_up_clusters,
     )
 
-    def _index_geometry(path: str, default: dict) -> dict:
-        """The geometry of the stream-maintained index at `path`; an
-        index without `_meta` gets `default` written BEFORE any row is
-        appended, so a crash can never leave rows without geometry."""
-        meta = read_index_meta(spark, path)
-        if meta is None:
-            meta = default
-            write_index_meta(spark, path, meta)
-        return meta
+    def _epoch_logged(path: str, epoch: int) -> bool:
+        """Whether the write-once-per-epoch log at `path` already holds
+        `epoch` (False before the log's first write)."""
+        log = read_or_none(spark, path)
+        return log is not None and bool(log.filter(F.col("epoch") == epoch).limit(1).count())
+
+    def _unlogged(rows: DataFrame, path: str, key: str | list[str]) -> DataFrame:
+        """`rows` whose `key` the append-only log at `path` does not
+        hold yet: the replay guard of every idempotent append here."""
+        return unindexed(rows, read_or_none(spark, path), key)
 
     def _near_dup_matches(kept):
         """(corpus_hits, delta_pairs) of `kept` against the index --
@@ -407,9 +403,7 @@ def run_document_stream(
         keep/drop decision AND the cluster pair log. Falls back to
         batch-internal pairs only before the index exists (narrow
         probe: only the path-probing read may mean "first batch")."""
-        try:
-            spark.read.parquet(f"{near_dup_index}/bands")
-        except AnalysisException:
+        if read_or_none(spark, f"{near_dup_index}/bands") is None:
             pairs = D.minhash_lsh_pairs(kept, threshold=near_dup_threshold)
             return None, pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
         hits, dpairs = D.delta_match_pairs(
@@ -432,27 +426,6 @@ def run_document_stream(
             F.broadcast(dropped.distinct()), "doc_id", "left_anti"
         )
 
-    def _embed_bucket_rows(vecs: DataFrame, n_tables: int) -> DataFrame:
-        """materialize_embedding_lsh's index-row projection over
-        hashed document vectors: (vec_id, v, n, table, bucket).
-        `n_tables` is the INDEX's geometry (its `_meta`): appends at
-        any other count would leave older vectors reachable through
-        fewer tables."""
-        from solana_data_etl_pipeline_spark.operators.similarity import (
-            LSH_PLANES,
-            _dvec,
-            norm_expr,
-            table_bucket_col,
-        )
-
-        buckets = table_bucket_col("embedding", LSH_PLANES, n_tables)
-        return vecs.select(
-            F.col("vec_id"),
-            _dvec(F.col("embedding")).alias("v"),
-            norm_expr(F.col("embedding")).alias("n"),
-            F.posexplode(buckets).alias("table", "bucket"),
-        )
-
     def _semantic_keep_ids(kept: DataFrame) -> DataFrame:
         """doc_ids of `kept` that survive SEMANTIC dedup: the batch is
         hash-embedded (the model-free encoder; a deployment with a
@@ -465,9 +438,7 @@ def run_document_stream(
         from solana_data_etl_pipeline_spark.operators.text import hash_embed
 
         vecs = hash_embed(kept)
-        try:
-            spark.read.parquet(f"{semantic_index}/buckets")
-        except AnalysisException:
+        if read_or_none(spark, f"{semantic_index}/buckets") is None:
             # first batch: batch-internal pairs at the SAME table count
             # as the maintained index/gate (2-table recall 0.72 is not
             # a shippable drop gate -- the EMBED_INDEX_TABLES rationale)
@@ -498,10 +469,10 @@ def run_document_stream(
             # and fallback hits drop here, before the corpus commit.
             # Both reads are narrow path probes: no excluded list /
             # no overflow means nothing has ever over-capped.
-            try:
-                spark.read.parquet(f"{semantic_index}/excluded")
-                spark.read.parquet(f"{semantic_index}_overflow/buckets")
-            except AnalysisException:
+            if (
+                read_or_none(spark, f"{semantic_index}/excluded") is None
+                or read_or_none(spark, f"{semantic_index}_overflow/buckets") is None
+            ):
                 return survivors.select(F.col("vec_id").alias("doc_id"))
             blind = (
                 D.delta_embedding_exposure(spark, semantic_index, vecs)
@@ -527,114 +498,17 @@ def run_document_stream(
             )
         return survivors.select(F.col("vec_id").alias("doc_id"))
 
-    def _catch_up_semantic():
-        """Append embedding-LSH index rows for corpus docs the
-        semantic index does not know yet -- the vector twin of
-        _catch_up_index, same self-healing doc_id anti-join form,
-        appends passing through the accumulated-width bucket cap on
-        the index's (table, bucket) keys. The cap's rejects feed the
-        blind-spot machinery (docstring): their distinct (table,
-        bucket) keys append to the excluded list the exposure probe
-        reads, and -- when routing is on -- the rejected rows
-        themselves append to the overflow twin the blind fallback
-        probes. Both frames are eagerly checkpointed before any
-        append so one append cannot change what a later one's
-        anti-join reads (the _catch_up_index desync lesson)."""
-        from solana_data_etl_pipeline_spark.operators.text import hash_embed
-
-        corpus_now = spark.read.parquet(output_dir).select("doc_id", "text")
-        try:
-            existing = spark.read.parquet(f"{semantic_index}/buckets")
-        except AnalysisException:
-            existing = None
-        if existing is not None:
-            have = existing.select(F.col("vec_id").alias("doc_id")).distinct()
-            todo = corpus_now.join(have, "doc_id", "left_anti")
-        else:
-            todo = corpus_now
-        geometry = _index_geometry(semantic_index, {"n_tables": D.EMBED_INDEX_TABLES})
-        rows, overflow = D.cap_buckets(
-            _embed_bucket_rows(hash_embed(todo), geometry["n_tables"]),
-            ["table", "bucket"],
-            semantic_max_bucket,
-            existing,
-        )
-        overflow = overflow.localCheckpoint(eager=True)
-        rows.write.mode("append").parquet(f"{semantic_index}/buckets")
-        if overflow.limit(1).count():
-            # same shape as materialize_embedding_lsh's excluded table;
-            # width here = the rejected mass when the bucket first
-            # over-capped (the build-time table records total width)
-            exc = overflow.groupBy("table", "bucket").agg(
-                F.count(F.lit(1)).alias("bucket_width")
-            )
-            try:
-                seen_exc = spark.read.parquet(f"{semantic_index}/excluded")
-            except AnalysisException:
-                seen_exc = None
-            if seen_exc is not None:
-                exc = exc.join(seen_exc, ["table", "bucket"], "left_anti")
-            exc.write.mode("append").parquet(f"{semantic_index}/excluded")
-            if semantic_route_blind:
-                over_path = f"{semantic_index}_overflow"
-                # the overflow twin shares the capped index's geometry
-                # (a probe at any other table count would silently
-                # miss its rows)
-                _index_geometry(over_path, geometry)
-                try:
-                    seen_over = spark.read.parquet(f"{over_path}/buckets")
-                except AnalysisException:
-                    seen_over = None
-                new_over = overflow
-                if seen_over is not None:
-                    new_over = overflow.join(
-                        seen_over.select("vec_id", "table", "bucket").distinct(),
-                        ["vec_id", "table", "bucket"],
-                        "left_anti",
-                    )
-                new_over.write.mode("append").parquet(f"{over_path}/buckets")
-
-    def _catch_up_index():
-        """Append band rows + shingles for corpus docs the index does
-        not know yet (doc_id anti-join): batch-sized in steady state,
-        and it REPAIRS the index after a crash that committed the
-        corpus but not the index. Each index table catches itself up
-        against its OWN doc_ids -- tying both appends to one shared
-        plan would let the first append change what the second one's
-        anti-join reads (lazy re-evaluation), desynchronizing the
-        tables exactly when a partition re-executes. Band appends pass
-        through the accumulated-width bucket cap (dedup.cap_buckets)."""
-        corpus_now = spark.read.parquet(output_dir).select("doc_id", "text")
-        # the index's banding scheme governs both the probe
-        # (delta_match_pairs reads the same `_meta`) and every append
-        geometry = _index_geometry(
-            near_dup_index, {"num_hashes": D.MINHASH_HASHES, "bands": D.MINHASH_BANDS}
-        )
-        nh, nb = geometry["num_hashes"], geometry["bands"]
-
-        def _build_bands(d: DataFrame, existing: DataFrame | None) -> DataFrame:
-            return D.cap_buckets(
-                D._minhash_bands(d, num_hashes=nh, bands=nb),
-                ["band", "band_sig"],
-                near_dup_max_bucket,
-                existing,
-            )[0]
-
-        builders = {
-            "bands": _build_bands,
-            "shingles": lambda d, _existing: D._shingle_sets(d),
-        }
-        for sub, build in builders.items():
-            try:
-                existing = spark.read.parquet(f"{near_dup_index}/{sub}")
-            except AnalysisException:
-                existing = None
-            if existing is not None:
-                have = existing.select("doc_id").distinct()
-                todo = corpus_now.join(have, "doc_id", "left_anti")
-            else:
-                todo = corpus_now
-            build(todo, existing).write.mode("append").parquet(f"{near_dup_index}/{sub}")
+    def _append_overflow(refused: DataFrame) -> None:
+        """Append the rows the semantic index's cap refused to its
+        overflow twin, which shares the capped index's `_meta`."""
+        if not refused.limit(1).count():
+            return
+        over_path = f"{semantic_index}_overflow"
+        if read_index_meta(spark, over_path) is None:
+            write_index_meta(spark, over_path, read_index_meta(spark, semantic_index))
+        _unlogged(refused, f"{over_path}/buckets", ["vec_id", "table", "bucket"]).write.mode(
+            "append"
+        ).parquet(f"{over_path}/buckets")
 
     def _apply_policies(kept: DataFrame, seen: DataFrame | None, batch_id: int) -> DataFrame:
         """Streaming curation policies over one batch (see docstring):
@@ -665,20 +539,14 @@ def run_document_stream(
             rates = temperature_rates(counts, temperature_tau, target_frac).localCheckpoint(
                 eager=True
             )
-            if policy_log_dir is not None and batch_nonempty:
-                try:
-                    logged = (
-                        spark.read.parquet(policy_log_dir)
-                        .filter(F.col("epoch") == batch_id)
-                        .limit(1)
-                        .count()
-                    )
-                except AnalysisException:
-                    logged = 0
-                if not logged:
-                    rates.withColumn("epoch", F.lit(int(batch_id))).write.mode(
-                        "append"
-                    ).parquet(policy_log_dir)
+            if (
+                policy_log_dir is not None
+                and batch_nonempty
+                and not _epoch_logged(policy_log_dir, batch_id)
+            ):
+                rates.withColumn("epoch", F.lit(int(batch_id))).write.mode(
+                    "append"
+                ).parquet(policy_log_dir)
             bucket = (
                 F.conv(
                     F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
@@ -764,13 +632,9 @@ def run_document_stream(
     decon_index = None
     decon_uncapped = None
     if decontaminate_bench is not None:
-        import solana_data_etl_pipeline_spark.operators.dedup as DD
-
         decon_index = f"{output_dir}_decon_index"
-        try:
-            spark.read.parquet(f"{decon_index}/fingerprints")
-        except AnalysisException:
-            DD.materialize_winnow(
+        if read_or_none(spark, f"{decon_index}/fingerprints") is None:
+            D.materialize_winnow(
                 spark.read.parquet(decontaminate_bench).select("doc_id", "text"),
                 decon_index,
                 max_bucket=near_dup_max_bucket,
@@ -780,10 +644,8 @@ def run_document_stream(
             # so its hot buckets cost full width exactly where the
             # capped verdict is hollow and nowhere else
             decon_uncapped = f"{decon_index}_full"
-            try:
-                spark.read.parquet(f"{decon_uncapped}/fingerprints")
-            except AnalysisException:
-                DD.materialize_winnow(
+            if read_or_none(spark, f"{decon_uncapped}/fingerprints") is None:
+                D.materialize_winnow(
                     spark.read.parquet(decontaminate_bench).select("doc_id", "text"),
                     decon_uncapped,
                     max_bucket=None,
@@ -869,16 +731,7 @@ def run_document_stream(
         if not probed.limit(1).count():
             return None
         health_dir = f"{output_dir}_media_health"
-        try:
-            logged = (
-                spark.read.parquet(health_dir)
-                .filter(F.col("epoch") == batch_id)
-                .limit(1)
-                .count()
-            )
-        except AnalysisException:
-            logged = 0
-        if not logged:
+        if not _epoch_logged(health_dir, batch_id):
             probed.groupBy("modality").agg(
                 F.sum("ok").cast("long").alias("n_ok"),
                 F.sum(1 - F.col("ok")).cast("long").alias("n_bad"),
@@ -890,12 +743,7 @@ def run_document_stream(
             "doc_id", "modality", "error", F.lit(int(batch_id)).alias("epoch")
         )
         mq_dir = f"{output_dir}_media_quarantine"
-        try:
-            seen_mq = spark.read.parquet(mq_dir)
-        except AnalysisException:
-            seen_mq = None
-        if seen_mq is not None:
-            bad = bad.join(seen_mq.select("doc_id").distinct(), "doc_id", "left_anti")
+        bad = _unlogged(bad, mq_dir, "doc_id")
         if bad.limit(1).count():
             bad.write.mode("append").parquet(mq_dir)
         return probed
@@ -926,25 +774,17 @@ def run_document_stream(
                 ).select("doc_id", "n_frames", F.round("rms", 4).alias("rms"))
                 gated = gated.localCheckpoint(eager=True)
                 gate_dir = f"{output_dir}_media_gated"
-                try:
-                    seen_g = spark.read.parquet(gate_dir)
-                except AnalysisException:
-                    seen_g = None
-                log_rows = gated.withColumn("epoch", F.lit(int(batch_id)))
-                if seen_g is not None:
-                    log_rows = log_rows.join(
-                        seen_g.select("doc_id").distinct(), "doc_id", "left_anti"
-                    )
+                log_rows = _unlogged(
+                    gated.withColumn("epoch", F.lit(int(batch_id))), gate_dir, "doc_id"
+                )
                 if log_rows.limit(1).count():
                     log_rows.write.mode("append").parquet(gate_dir)
                 kept = kept.join(
                     F.broadcast(gated.select("doc_id")), "doc_id", "left_anti"
                 )
             if decon_index is not None:
-                import solana_data_etl_pipeline_spark.operators.dedup as DD
-
                 contaminated = (
-                    DD.delta_containment(
+                    D.delta_containment(
                         spark, decon_index, kept, threshold=decon_threshold
                     )
                     .select(F.col("delta_id").alias("doc_id"))
@@ -956,7 +796,7 @@ def run_document_stream(
                     # is measurably blind to take the UNCAPPED check;
                     # fallback hits drop here, before dedup/policies
                     exposed = (
-                        DD.delta_containment_exposure(spark, decon_index, kept)
+                        D.delta_containment_exposure(spark, decon_index, kept)
                         .filter(F.col("exposure_bp") >= decon_blind_bp)
                         .select(F.col("delta_id").alias("doc_id"))
                     )
@@ -964,7 +804,7 @@ def run_document_stream(
                         F.broadcast(exposed), "doc_id", "left_semi"
                     )
                     caught = (
-                        DD.delta_containment(
+                        D.delta_containment(
                             spark,
                             decon_uncapped,
                             blind_docs,
@@ -977,10 +817,7 @@ def run_document_stream(
             # cross-batch dedup: drop content already in the corpus
             # (narrow try: only the path-probing read may mean "first
             # batch" -- a failure in the join itself must propagate)
-            try:
-                seen = spark.read.parquet(output_dir)
-            except AnalysisException:
-                seen = None  # first batch: corpus does not exist yet
+            seen = read_or_none(spark, output_dir)  # None: first batch
             if seen is not None:
                 kept = kept.join(
                     seen.select("fingerprint").distinct(), "fingerprint", "left_anti"
@@ -1022,57 +859,33 @@ def run_document_stream(
                 # emptied by the fingerprint anti-join and the rows
                 # would be unrecoverable); doc_id anti-join guards the
                 # retry-after-log-commit case
-                import solana_data_etl_pipeline_spark.operators.dedup as DD
-
                 blind_dir = f"{output_dir}_decon_blind"
-                blind = DD.delta_containment_exposure(
+                blind = D.delta_containment_exposure(
                     spark, decon_index, kept
                 ).filter(F.col("exposure_bp") >= decon_blind_bp)
-                try:
-                    seen_blind = spark.read.parquet(blind_dir)
-                except AnalysisException:
-                    seen_blind = None  # first batch: log does not exist yet
-                if seen_blind is not None:
-                    blind = blind.join(
-                        seen_blind.select(F.col("delta_id")).distinct(),
-                        "delta_id",
-                        "left_anti",
-                    )
-                blind.write.mode("append").parquet(blind_dir)
+                _unlogged(blind, blind_dir, "delta_id").write.mode("append").parquet(
+                    blind_dir
+                )
             if semantic_index:
                 # the embedding family's blind-spot log, same stance
                 # as the decon one above: docs being ADMITTED whose
                 # semantic-dedup verdict the cap hollowed out, written
                 # before the corpus commit. In routed mode fallback
                 # catches were already dropped from `kept`, so the log
-                # records only docs the fallback verified clean. The
-                # narrow try: no excluded list means nothing has ever
-                # over-capped.
+                # records only docs the fallback verified clean. A
+                # missing or empty excluded list (an index build writes
+                # it even when empty) means nothing has ever over-capped.
                 from solana_data_etl_pipeline_spark.operators.text import hash_embed
 
-                try:
-                    spark.read.parquet(f"{semantic_index}/excluded")
-                    have_excluded = True
-                except AnalysisException:
-                    have_excluded = False
-                if have_excluded:
+                excluded = read_or_none(spark, f"{semantic_index}/excluded")
+                if excluded is not None and excluded.limit(1).count():
                     sem_blind_dir = f"{output_dir}_semantic_blind"
-                    import solana_data_etl_pipeline_spark.operators.dedup as DD
-
-                    sem_blind = DD.delta_embedding_exposure(
+                    sem_blind = D.delta_embedding_exposure(
                         spark, semantic_index, hash_embed(kept)
                     ).filter(F.col("exposure_bp") >= semantic_blind_bp)
-                    try:
-                        seen_sb = spark.read.parquet(sem_blind_dir)
-                    except AnalysisException:
-                        seen_sb = None
-                    if seen_sb is not None:
-                        sem_blind = sem_blind.join(
-                            seen_sb.select("delta_id").distinct(),
-                            "delta_id",
-                            "left_anti",
-                        )
-                    sem_blind.write.mode("append").parquet(sem_blind_dir)
+                    _unlogged(sem_blind, sem_blind_dir, "delta_id").write.mode(
+                        "append"
+                    ).parquet(sem_blind_dir)
             if drift_report and seen is not None:
                 # the streaming twin of corpus_drift (operators/
                 # text.py): per batch, the top-k tokens whose share of
@@ -1092,22 +905,13 @@ def run_document_stream(
                 )
 
                 drift_dir = f"{output_dir}_drift"
-                try:
-                    logged_d = (
-                        spark.read.parquet(drift_dir)
-                        .filter(F.col("epoch") == batch_id)
-                        .limit(1)
-                        .count()
-                    )
-                except AnalysisException:
-                    logged_d = 0
                 # Empty admitted set => no snapshot-1 mass, so there is
                 # nothing to drift FROM: without this gate count_new
                 # floors _tot_new to 1 and every corpus token logs
                 # drift_bp = -share_old_bp, reading as "the entire
                 # vocabulary vanished" (ADVICE r10). Mirrors the
                 # first-batch no-baseline rule on the other side.
-                if not logged_d and kept.limit(1).count():
+                if not _epoch_logged(drift_dir, batch_id) and kept.limit(1).count():
                     both = seen.select(
                         F.lit(0).alias("snapshot"), "text"
                     ).unionByName(kept.select(F.lit(1).alias("snapshot"), "text"))
@@ -1133,24 +937,36 @@ def run_document_stream(
             # treatment on its deterministic error_id so a batch that
             # failed between this append and the checkpoint commit
             # doesn't re-append the same error rows on retry
-            try:
-                seen_err = spark.read.parquet(quarantine_dir)
-            except AnalysisException:
-                seen_err = None  # first batch: quarantine does not exist yet
-            if seen_err is not None:
-                quarantine = quarantine.join(
-                    seen_err.select("error_id").distinct(), "error_id", "left_anti"
-                )
+            quarantine = _unlogged(quarantine, quarantine_dir, "error_id")
             if quarantine.limit(1).count():
                 quarantine.write.mode("append").parquet(quarantine_dir)
             if semantic_index:
                 # AFTER the corpus write (same reasoning as the
-                # near-dup catch-up below)
-                _catch_up_semantic()
+                # near-dup catch-up below). Only the docs the index
+                # lacks are embedded: Spark does not push the writer's
+                # vec_id anti-join below hash_embed's projection.
+                from solana_data_etl_pipeline_spark.operators.text import hash_embed
+
+                todo = unindexed(
+                    spark.read.parquet(output_dir).select("doc_id", "text"),
+                    read_or_none(spark, f"{semantic_index}/buckets"),
+                    "doc_id",
+                    "vec_id",
+                )
+                refused = D.materialize_embedding_lsh(
+                    hash_embed(todo), semantic_index, max_bucket=semantic_max_bucket
+                )
+                if semantic_route_blind:
+                    _append_overflow(refused)
             if near_dup_index:
                 # AFTER the corpus write, so the dedup above never sees
-                # this batch's own docs in the index
-                _catch_up_index()
+                # this batch's own docs in the index; the writer appends
+                # only the corpus docs the index lacks
+                D.materialize_minhash(
+                    spark.read.parquet(output_dir).select("doc_id", "text"),
+                    near_dup_index,
+                    max_bucket=near_dup_max_bucket,
+                )
                 # fold the pair log into cluster ids (idempotent,
                 # marker-driven -- repairs any previously crashed
                 # catch-up before advancing)

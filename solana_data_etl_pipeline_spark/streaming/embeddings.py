@@ -36,13 +36,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from solana_data_etl_pipeline_spark.operators.similarity import (
     EMB_DIM,
     assign_cells,
     materialize_ivf,
 )
+from solana_data_etl_pipeline_spark.operators.util import read_or_none, unindexed
 
 #: JSONL landing-zone shape for embedding vectors.
 EMB_LANDING_SCHEMA = (
@@ -117,24 +117,15 @@ def run_embedding_stream(
             # cross-batch: vec_ids already in the layout never re-enter
             # (same narrow-try rule: only the path-probing read may be
             # treated as "first batch")
-            try:
-                have = spark.read.parquet(f"{layout_path}/corpus")
-            except AnalysisException:
-                have = None  # first batch: layout does not exist yet
-            if have is not None:
-                good = good.join(
-                    have.select("vec_id").distinct(), "vec_id", "left_anti"
-                )
-            new = good.select("vec_id", "embedding")
+            new = unindexed(
+                good, read_or_none(spark, f"{layout_path}/corpus"), "vec_id"
+            ).select("vec_id", "embedding")
             # ONLY the centroids read is allowed to mean "first batch":
             # materialize_ivf overwrites the corpus, so an
             # AnalysisException escaping from assign_cells or the
             # append (schema drift, bad layout) must PROPAGATE, not
             # silently replace the accumulated corpus with one batch.
-            try:
-                cents = spark.read.parquet(f"{layout_path}/centroids")
-            except AnalysisException:
-                cents = None  # first batch: layout does not exist yet
+            cents = read_or_none(spark, f"{layout_path}/centroids")
             if cents is not None:
                 assigned = assign_cells(new, cents)
                 (
@@ -147,15 +138,9 @@ def run_embedding_stream(
                 # first batch trains the quantizer and creates the layout
                 materialize_ivf(new, layout_path, n_cells=n_cells)
             if quarantine.limit(1).count():
-                try:
-                    seen = spark.read.parquet(quarantine_dir)
-                except AnalysisException:
-                    seen = None  # quarantine dir does not exist yet
-                if seen is not None:
-                    quarantine = quarantine.join(
-                        seen.select("error_id").distinct(), "error_id", "left_anti"
-                    )
-                quarantine.write.mode("append").parquet(quarantine_dir)
+                unindexed(
+                    quarantine, read_or_none(spark, quarantine_dir), "error_id"
+                ).write.mode("append").parquet(quarantine_dir)
         finally:
             batch_df.unpersist()
 

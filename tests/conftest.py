@@ -59,6 +59,7 @@ _SLOW_TESTS = frozenset((
     "test_similarity.py::test_reconstructed_pq_residual_determinism_cells_and_quality",
     "test_similarity.py::test_reconstructed_pq_shape_determinism_and_quality",
     "test_streaming.py::test_document_stream_decon_blind_routing_catches_hollow_verdict",
+    "test_streaming.py::test_document_stream_indexes_equal_batch_build",
     "test_streaming.py::test_document_stream_ingest_decontamination",
     "test_streaming.py::test_document_stream_maintains_clusters",
     "test_streaming.py::test_document_stream_near_dup_index",
@@ -74,10 +75,42 @@ _SLOW_TESTS = frozenset((
     "test_warehouse.py::test_jdbc_insert_roundtrip_and_idempotency",
 ))
 
+# The set a change to an index writer or the document stream must pass
+# (`pytest tests -m stream -q`): every document-stream test, the CLI's
+# blind-routing streams, the delta-dedup property and the compacted
+# index probe. Marking does not change the default run's selection.
+_STREAM_TESTS = frozenset((
+    "test_cli.py::test_cli_stream_corpus_decon_route_blind",
+    "test_cli.py::test_cli_stream_corpus_semantic_route_blind",
+    "test_compaction.py::test_compact_lsh_index_preserves_probes",
+    "test_properties.py::test_delta_dedup_matches_python_model",
+    "test_streaming.py::test_document_stream_decon_blind_log",
+    "test_streaming.py::test_document_stream_decon_blind_routing_catches_hollow_verdict",
+    "test_streaming.py::test_document_stream_drift_report_per_batch",
+    "test_streaming.py::test_document_stream_gates_dedups_and_quarantines",
+    "test_streaming.py::test_document_stream_indexes_equal_batch_build",
+    "test_streaming.py::test_document_stream_ingest_decontamination",
+    "test_streaming.py::test_document_stream_maintains_clusters",
+    "test_streaming.py::test_document_stream_media_gate_applies_v4_bounds",
+    "test_streaming.py::test_document_stream_media_sidecar",
+    "test_streaming.py::test_document_stream_near_dup_index",
+    "test_streaming.py::test_document_stream_published_gates",
+    "test_streaming.py::test_document_stream_semantic_blind_log",
+    "test_streaming.py::test_document_stream_semantic_blind_routing_catches_hollow_verdict",
+    "test_streaming.py::test_document_stream_semantic_dedup",
+    "test_streaming.py::test_document_stream_temperature_policy",
+    "test_streaming.py::test_document_stream_token_budget",
+    "test_streaming.py::test_document_stream_waterfill_budget",
+    "test_streaming.py::test_semantic_index_self_heals_after_loss",
+))
+
 
 def pytest_configure(config):
     config.addinivalue_line(
         "markers", "slow: heavy e2e/streaming/recall tests, deselected by default"
+    )
+    config.addinivalue_line(
+        "markers", "stream: the index-writer / document-stream verification set"
     )
 
 
@@ -93,6 +126,8 @@ def pytest_collection_modifyitems(config, items):
         nid = item.nodeid.removeprefix("tests/")
         if nid in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+        if nid in _STREAM_TESTS:
+            item.add_marker(pytest.mark.stream)
     if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
         return
     if _explicit_markexpr(config):

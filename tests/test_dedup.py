@@ -1307,3 +1307,115 @@ def test_read_index_meta_runs_no_spark_job(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert jobs == []
+
+
+# -- one index writer: build and catch-up are the same rule ----------
+
+#: family -> (writer, id column, capped table, cap keys, geometry that
+#: disagrees with the writer's default)
+_WRITERS = {
+    "minhash": (D.materialize_minhash, "doc_id", "bands", ["band", "band_sig"], {"bands": 8}),
+    "winnow": (D.materialize_winnow, "doc_id", "fingerprints", ["fingerprint"], {"k": 4}),
+    "embedding": (D.materialize_embedding_lsh, "vec_id", "buckets", ["table", "bucket"], {"n_tables": 2}),
+}
+
+
+def _writer_input(spark, family):
+    """12 rows, ids 0..11; rows 0-3 are identical (one hot bucket in
+    every LSH table), the rest are distinct."""
+    import random
+
+    rnd = random.Random(11)
+    if family == "embedding":
+        vecs = [[rnd.uniform(-1, 1) for _ in range(64)] for _ in range(9)]
+        vecs = vecs[:1] * 3 + vecs
+        return spark.createDataFrame(list(enumerate(vecs)), "vec_id long, embedding array<double>")
+    vocab = ["".join(rnd.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(7)) for _ in range(200)]
+    hot = " ".join(rnd.choice(vocab) for _ in range(16))
+    texts = [hot] * 4 + [" ".join(rnd.choice(vocab) for _ in range(16)) for _ in range(8)]
+    return spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+
+def _index_snapshot(spark, path):
+    """{sub-table: (schema, sorted rows)} of the index at `path`, plus its `_meta`."""
+    import os
+
+    from solana_data_etl_pipeline_spark.operators.util import read_index_meta
+
+    snap = {"_meta": read_index_meta(spark, path)}
+    for sub in sorted(os.listdir(path)):
+        if os.path.isdir(os.path.join(path, sub)):
+            df = spark.read.parquet(os.path.join(path, sub))
+            snap[sub] = (df.schema.simpleString(), sorted(tuple(r) for r in df.collect()))
+    return snap
+
+
+@pytest.mark.parametrize("family", sorted(_WRITERS))
+def test_index_writer_catch_up_equals_build(spark, tmp_path, family):
+    """Uncapped, an index built from half the rows and then caught up
+    by a second writer call on all of them equals the index built in
+    one call: every sub-table's sorted rows and schema, and `_meta`."""
+    from pyspark.sql import functions as F
+
+    write, id_col = _WRITERS[family][:2]
+    rows = _writer_input(spark, family)
+    whole, grown = str(tmp_path / "whole"), str(tmp_path / "grown")
+    write(rows, whole)
+    write(rows.filter(F.col(id_col) % 2 == 0), grown)
+    assert write(rows, grown).count() == 0
+    assert _index_snapshot(spark, grown) == _index_snapshot(spark, whole)
+
+
+@pytest.mark.parametrize("family", sorted(_WRITERS))
+def test_index_writer_catch_up_caps_accumulated_width(spark, tmp_path, family):
+    """Capped, a catch-up appends exactly cap_buckets(new rows, keys,
+    cap, existing rows)[0]: the hot bucket holds 2 rows after the first
+    call (at the cap) and the second call's 2 more push it past, so
+    they are refused. `excluded` records each refused bucket once, and
+    the returned overflow is exactly the refused rows -- materialized
+    before the append, so it survives the index's files being replaced
+    after the call (as compaction does)."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    write, id_col, table, keys, _ = _WRITERS[family]
+    rows = _writer_input(spark, family)
+    path, full = str(tmp_path / "idx"), str(tmp_path / "full")
+    write(rows.filter(F.col(id_col) % 2 == 0), path, max_bucket=2)
+    before = _index_snapshot(spark, path)
+    write(rows, full)  # uncapped: every row the catch-up could append
+    new = spark.read.parquet(f"{full}/{table}").filter(F.col(id_col) % 2 == 1)
+    existing = spark.createDataFrame(before[table][1], new.schema)
+    kept, refused = (
+        sorted(tuple(r) for r in df.collect())
+        for df in D.cap_buckets(new, keys, 2, existing)
+    )
+    # a real split: the hot bucket's new rows are refused, others kept
+    assert kept and {r[0] for r in refused} >= {1, 3}
+
+    overflow = write(rows, path, max_bucket=2)
+    after = _index_snapshot(spark, path)
+    assert after[table][1] == sorted(before[table][1] + kept)
+    if "excluded" in after:
+        exc_keys = [r[: len(keys)] for r in after["excluded"][1]]
+        assert len(exc_keys) == len(set(exc_keys))
+        assert set(exc_keys) == {r[: len(keys)] for r in before["excluded"][1]} | {
+            tuple(r[overflow.columns.index(k)] for k in keys) for r in refused
+        }
+    shutil.rmtree(path)
+    assert sorted(tuple(r) for r in overflow.collect()) == refused
+
+
+@pytest.mark.parametrize("family", sorted(_WRITERS))
+def test_index_writer_refuses_disagreeing_geometry(spark, tmp_path, family):
+    """A catch-up takes its geometry from `_meta`; an explicit value
+    that disagrees raises ValueError before anything is written."""
+    write, _, _, _, other = _WRITERS[family]
+    rows = _writer_input(spark, family)
+    path = str(tmp_path / "idx")
+    write(rows.limit(4), path)
+    before = _index_snapshot(spark, path)
+    with pytest.raises(ValueError, match="disagrees with the index's `_meta`"):
+        write(rows, path, **other)
+    assert _index_snapshot(spark, path) == before

@@ -1295,6 +1295,54 @@ def test_semantic_index_self_heals_after_loss(spark, tmp_path):
     assert {r.vec_id for r in spark.read.parquet(f"{sem}/buckets").collect()} == final
 
 
+def test_document_stream_indexes_equal_batch_build(spark, tmp_path):
+    """The stream grows its near-dup and semantic indexes through the
+    batch writers, so with both caps off, two streamed batches leave
+    exactly the rows a fresh build over the final corpus writes:
+    `{semantic_index}/buckets` = materialize_embedding_lsh(hash_embed(
+    corpus)), `{near_dup_index}/bands` and `/shingles` =
+    materialize_minhash(corpus)."""
+    from solana_data_etl_pipeline_spark.operators import dedup as D
+    from solana_data_etl_pipeline_spark.operators.text import hash_embed
+    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+
+    land = str(tmp_path / "docs_in")
+    out = str(tmp_path / "corpus")
+    idx, sem = str(tmp_path / "nd_idx"), str(tmp_path / "sem_index")
+    os.makedirs(land, exist_ok=True)
+
+    def _doc(i, text):
+        return json.dumps(
+            {"doc_id": i, "text": text, "lang": "en", "source": "s1",
+             "ingest_time": "2024-01-01T00:00:00"}
+        )
+
+    topics = ["parquet row groups", "shuffle partitions", "broadcast joins",
+              "window functions", "adaptive execution", "columnar caching"]
+    for name, ids in (("a.jsonl", range(1, 4)), ("b.jsonl", range(4, 7))):
+        with open(os.path.join(land, name), "w") as f:
+            for i in ids:
+                f.write(_doc(i, f"document {i} explains {topics[i - 1]} with worked examples and measured numbers") + "\n")
+        run_document_stream(
+            spark, land, out, str(tmp_path / "doc_quar"), str(tmp_path / "doc_ckpt"),
+            near_dup_index=idx, near_dup_max_bucket=None,
+            semantic_index=sem, semantic_max_bucket=None,
+        )
+    corpus = spark.read.parquet(out).select("doc_id", "text")
+    assert corpus.count() == 6  # both batches streamed, nothing deduplicated
+    batch_nd, batch_sem = str(tmp_path / "batch_nd"), str(tmp_path / "batch_sem")
+    D.materialize_minhash(corpus, batch_nd)
+    D.materialize_embedding_lsh(hash_embed(corpus), batch_sem)
+
+    def rows(path):
+        df = spark.read.parquet(path)
+        return df.schema.simpleString(), sorted(tuple(r) for r in df.collect())
+
+    assert rows(f"{sem}/buckets") == rows(f"{batch_sem}/buckets")
+    for sub in ("bands", "shingles"):
+        assert rows(f"{idx}/{sub}") == rows(f"{batch_nd}/{sub}")
+
+
 def test_document_stream_media_sidecar(spark, tmp_path):
     """media_health=True probes base64 payloads through the REAL codec
     registry at ingest: valid WAV/BMP containers count ok, a corrupt
