@@ -35,10 +35,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator family from SURVEY.md
-    section 2: the curated 50-slot driver registry (the full registry
-    in plans/suite.py:all_queries() is additionally oracle-checked by
-    tests/test_oracle_parity.py on every test run)."""
+    """The curated 50-slot driver registry (plans/suite.py
+    DRIVER_ORDER); every other entry of plans/suite.py:all_queries()
+    is oracle-checked by tests/test_oracle_parity.py on every test
+    run."""
     from solana_data_etl_pipeline_spark.plans.suite import driver_queries
 
     qs = driver_queries()

@@ -586,44 +586,11 @@ def knn_bruteforce_pandas(corpus: DataFrame, queries: DataFrame, k: int = 10) ->
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def quantize_embeddings(emb_df: DataFrame) -> DataFrame:
-    """Symmetric per-vector int8 quantization: scale = max|x| / 127,
-    q[i] = round(x[i] / scale). Cuts embedding storage 4x (float32 ->
-    int8) at a bounded reconstruction error -- the standard first
-    compression step before IVF/PQ indexing at corpus scale. Pure
-    per-row projection (zero shuffle); emits the max absolute
-    reconstruction error so the quality loss is measurable per vector.
-    """
-    dv = _dvec(F.col("embedding"))
-    absmax = F.aggregate(dv, F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x)))
-    base = emb_df.select("vec_id", dv.alias("_v"), F.greatest(absmax, F.lit(1e-12)).alias("_amax"))
-    scale = (F.col("_amax") / F.lit(127.0)).alias("scale")
-    q = F.transform(F.col("_v"), lambda x: F.round(x / (F.col("_amax") / F.lit(127.0)), 0).cast("int"))
-    withq = base.select("vec_id", scale, q.alias("q8"), "_v", "_amax")
-    err = F.aggregate(
-        F.zip_with(
-            F.col("_v"),
-            F.col("q8"),
-            lambda x, qi: F.abs(x - qi.cast("double") * (F.col("_amax") / F.lit(127.0))),
-        ),
-        F.lit(0.0),
-        lambda acc, e: F.greatest(acc, e),
-    )
-    return withq.select(
-        "vec_id",
-        F.round("scale", 6).alias("scale"),
-        F.element_at("q8", 1).alias("q0"),
-        F.element_at("q8", 2).alias("q1"),
-        F.round(err, 6).alias("max_abs_err"),
-    )
-
-
 def reconstructed_int8(emb_df: DataFrame) -> DataFrame:
     """(vec_id, embedding) with every vector round-tripped through the
-    symmetric int8 quantization (quantize_embeddings' math: scale =
-    max|x|/127, q = round(x/scale), x_hat = q * scale) -- the
-    INDEX-side vector a memory-bound deployment actually stores (4x
-    smaller than float32). Probing with reconstructed corpus vectors
+    symmetric int8 quantization (scale = max|x|/127, q = round(x/scale),
+    x_hat = q * scale) -- the INDEX-side vector a memory-bound
+    deployment actually stores (4x smaller than float32). Probing with reconstructed corpus vectors
     against full-precision queries measures exactly the recall the
     compression costs; the registered knn_ivf_int8 plan builds its
     quantizer AND scores from these, so nothing in the index path
@@ -780,15 +747,6 @@ def reconstructed_pq_residual(
         F.zip_with(F.col("_c"), code, lambda c, r: c + r).alias("embedding"),
         "cell",
     )
-
-
-def label_centroids(emb_df: DataFrame) -> DataFrame:
-    """Per-label centroid of embeddings (IVF coarse-quantizer training
-    analog): element-wise mean via posexplode + group-by -- shuffles
-    (label, dim, value) cells once; output is one row per centroid
-    cell, which keeps the result scalar-typed (engine-portable)."""
-    exploded = emb_df.select("label", F.posexplode(_dvec(F.col("embedding"))).alias("dim", "val"))
-    return exploded.groupBy("label", "dim").agg(F.round(F.avg("val"), 6).alias("centroid_val"))
 
 
 def kmeans_cells(

@@ -75,9 +75,9 @@ def salted_session_stats(
     gap_minutes: int = 30,
     bucket_hours: int = 24,
 ) -> DataFrame:
-    """Skew-safe gap-sessionization: result-identical to
-    ``groupBy(key, session_window(ts, gap))`` (the plan
-    plans/temporal.py:session_window_stats runs) but the heavy event
+    """Skew-safe gap-sessionization: result-identical to the built-in
+    ``groupBy(key, session_window(ts, gap))`` form (tests/test_skew.py
+    pins the two equal) but the heavy event
     shuffle partitions on (key, time-bucket) instead of key alone, so
     one user with millions of events -- the SCALE.md-named failure mode
     -- spreads across reducers instead of serializing on one.

@@ -140,19 +140,6 @@ def language_id(df: DataFrame) -> DataFrame:
     return scored.select("doc_id", F.col("lang").alias("labeled_lang"), pred.alias("predicted_lang"))
 
 
-def language_stats(df: DataFrame) -> DataFrame:
-    """Corpus stats per labeled language (one partial+final agg)."""
-    return (
-        df.groupBy("lang")
-        .agg(
-            F.count("*").alias("doc_count"),
-            F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-            F.sum(F.size(tokens_col())).cast("long").alias("total_tokens"),
-            F.count_distinct("source").alias("sources"),
-        )
-    )
-
-
 def consistent_sample(df: DataFrame, pct: int, id_col: str = "doc_id") -> DataFrame:
     """Deterministic hash-mod sampling: keep rows whose md5-derived
     bucket (0-99) is < pct. Unlike rand()-based sampling this is

@@ -3,8 +3,8 @@
 The reference's only documented join is `fact LEFT JOIN dim_programs`
 (reference docs/SCHEMA.md:362-370); its schema is explicitly designed
 to minimize joins. For a complete engine we implement the full
-relational operator surface -- multi-way joins, semi/anti joins,
-windows, having-filters, top-k -- as declarative plans over the
+relational operator surface -- multi-way and outer joins, windows,
+having-filters, grouping sets, top-k -- as declarative plans over the
 TPC-H-style testdata tables.
 
 Scale notes: dimension tables (region/nation/customer/supplier/part)
@@ -76,39 +76,6 @@ def region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6-style: pure filter + scalar aggregate (pushdown showcase)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"))
-    )
-
-
-def late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4-style: semi-join (EXISTS) + group-by priority.
-
-    Adapted to this schema: an order is 'late' if any of its lineitems
-    shipped more than 90 days after the order date.
-    """
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    late = li.filter(F.col("l_shipdate").isNotNull()).select("l_orderkey", "l_shipdate")
-    late_orders = (
-        orders.join(late, (orders.o_orderkey == late.l_orderkey), "inner")
-        .filter(F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 90))
-        .select("o_orderkey", "o_orderpriority")
-        .distinct()
-    )
-    return late_orders.groupBy("o_orderpriority").agg(F.count("*").alias("late_order_count"))
-
-
 def segment_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documented-join parity: fact LEFT JOIN dim -> per-segment stats
     (reference docs/SCHEMA.md:362-370's fact->dim left join shape)."""
@@ -147,62 +114,6 @@ def big_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(20)
-    )
-
-
-def customer_order_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window-function surface: top-3 orders per customer by price
-    (row_number over partitioned window -- beyond the reference, which
-    has no window functions, SURVEY.md section 2.6)."""
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        orders.withColumn("rank_in_customer", F.row_number().over(w))
-        .filter(F.col("rank_in_customer") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rank_in_customer")
-    )
-
-
-def lineitem_measures_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNPIVOT (melt) surface: the lineitem money/quantity measures
-    reshaped wide -> long, then aggregated per measure. unpivot is a
-    per-row Expand (no shuffle); the single shuffle is the final
-    3-group aggregate."""
-    li = load_table(spark, sf_dir, "lineitem")
-    long = li.unpivot(
-        ids=["l_orderkey"],
-        values=["l_quantity", "l_extendedprice", "l_discount"],
-        variableColumnName="measure",
-        valueColumnName="val",
-    )
-    return long.groupBy("measure").agg(
-        F.count("*").alias("n_values"),
-        F.round(F.sum("val"), 2).alias("total"),
-        F.round(F.avg("val"), 6).alias("mean"),
-    )
-
-
-HIGH_VALUE_ORDER = 300_000.0
-
-
-def inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti-join surface: customers with no high-value (>300k) orders,
-    per segment. The filter is pushed below the anti-join so the right
-    side shrinks before the shuffle; Catalyst plans
-    BroadcastHashJoin(LeftAnti) when the filtered side fits."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_totalprice") > HIGH_VALUE_ORDER)
-        .select("o_custkey")
-    )
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("inactive_customers"),
-            F.round(F.avg("c_acctbal"), 4).alias("avg_acctbal"),
-        )
     )
 
 
@@ -254,112 +165,6 @@ def order_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PRICE_TIERS: list[tuple[str, float, float]] = [
-    ("bronze", 0.0, 100_000.0),
-    ("silver", 100_000.0, 200_000.0),
-    ("gold", 200_000.0, 350_000.0),
-    ("platinum", 350_000.0, 1e12),
-]
-
-
-def price_tier_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range (non-equi band) join: orders banded into price tiers with
-    `lo <= o_totalprice < hi`. The tier table is tiny and broadcast, so
-    Catalyst plans BroadcastNestedLoopJoin -- the fact side streams
-    without a shuffle; the join itself never materializes more than
-    |facts| x |tiers| comparisons map-side."""
-    orders = load_table(spark, sf_dir, "orders")
-    tiers = spark.createDataFrame(PRICE_TIERS, "tier string, lo double, hi double")
-    return (
-        orders.join(
-            F.broadcast(tiers),
-            (F.col("o_totalprice") >= F.col("lo")) & (F.col("o_totalprice") < F.col("hi")),
-        )
-        .groupBy("tier")
-        .agg(
-            F.count("*").alias("order_count"),
-            F.round(F.avg("o_totalprice"), 4).alias("avg_price"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-        )
-    )
-
-
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-
-
-def priority_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIVOT surface: order counts per (year x priority) as columns.
-    Explicit pivot values keep the plan single-pass (no extra job to
-    discover the domain) and the output schema static."""
-    orders = load_table(spark, sf_dir, "orders")
-    piv = (
-        orders.select(F.year("o_orderdate").cast("bigint").alias("order_year"), "o_orderpriority")
-        .groupBy("order_year")
-        .pivot("o_orderpriority", PRIORITIES)
-        .agg(F.count(F.lit(1)))
-    )
-    renames = {p: "p" + p.split("-")[0] for p in PRIORITIES}
-    cols = [F.col("order_year")] + [
-        F.coalesce(F.col(f"`{p}`"), F.lit(0)).cast("bigint").alias(renames[p]) for p in PRIORITIES
-    ]
-    return piv.select(*cols)
-
-
-def price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered-set aggregate surface: EXACT interpolated percentiles
-    (median / p90) of order value per priority. Exact `percentile`
-    collects the group's values into the aggregation buffer -- correct
-    but memory-bound per group at scale; approx_percentile is the
-    bounded-memory trade when cross-engine exactness is not required."""
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.groupBy("o_orderpriority").agg(
-        F.round(F.expr("percentile(o_totalprice, 0.5)"), 4).alias("median_price"),
-        F.round(F.expr("percentile(o_totalprice, 0.9)"), 4).alias("p90_price"),
-        F.count("*").alias("order_count"),
-    )
-
-
-def repeat_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set-operation surface: INTERSECT / EXCEPT of customer key sets
-    from two order-year snapshots (returning buyers vs churned buyers).
-    Both set ops are distinct-based -- one shuffle each on the key."""
-    orders = load_table(spark, sf_dir, "orders")
-    y1996 = orders.filter(F.year("o_orderdate") == 1996).select("o_custkey")
-    y1997 = orders.filter(F.year("o_orderdate") == 1997).select("o_custkey")
-    both = y1996.intersect(y1997).select(F.lit("retained").alias("cohort"), "o_custkey")
-    churned = y1996.subtract(y1997).select(F.lit("churned").alias("cohort"), "o_custkey")
-    return (
-        both.unionByName(churned)
-        .groupBy("cohort")
-        .agg(F.count("*").alias("customers"))
-    )
-
-
-def nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-join + conditional agg: per-nation supplier vs customer
-    account balances (set-op flavored union of two dim scans)."""
-    cust = load_table(spark, sf_dir, "customer")
-    supp = load_table(spark, sf_dir, "supplier")
-    nation = load_table(spark, sf_dir, "nation")
-    c = cust.groupBy("c_nationkey").agg(
-        F.count("*").alias("customers"), F.round(F.sum("c_acctbal"), 2).alias("customer_balance")
-    )
-    s = supp.groupBy("s_nationkey").agg(
-        F.count("*").alias("suppliers"), F.round(F.sum("s_acctbal"), 2).alias("supplier_balance")
-    )
-    return (
-        nation.join(F.broadcast(c), nation.n_nationkey == c.c_nationkey, "left")
-        .join(F.broadcast(s), nation.n_nationkey == s.s_nationkey, "left")
-        .select(
-            "n_name",
-            F.coalesce("customers", F.lit(0)).alias("customers"),
-            F.coalesce("customer_balance", F.lit(0.0)).alias("customer_balance"),
-            F.coalesce("suppliers", F.lit(0)).alias("suppliers"),
-            F.coalesce("supplier_balance", F.lit(0.0)).alias("supplier_balance"),
-        )
-    )
-
-
 def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17-style correlated scalar subquery, decorrelated: revenue
     from below-average-quantity lineitems of one brand/type. The
@@ -382,46 +187,6 @@ def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly"),
             F.count("*").alias("qualifying_lineitems"),
         )
-    )
-
-
-def daily_purchase_vs_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL OUTER join: daily purchase volume vs daily error volume,
-    keeping days where either side is absent (coalesced to zero). Both
-    sides are day-grain aggregates, so the outer join is tiny however
-    large the fact table -- aggregate first, join after."""
-    ev = load_table(spark, sf_dir, "events")
-    day = F.to_date("ts").alias("day")
-    p = ev.filter(F.col("event_type") == "purchase").groupBy(day).agg(F.count("*").alias("purchases"))
-    e = ev.filter(F.col("event_type") == "error").groupBy(day).agg(F.count("*").alias("errors"))
-    return p.join(e, "day", "full").select(
-        "day",
-        F.coalesce("purchases", F.lit(0)).alias("purchases"),
-        F.coalesce("errors", F.lit(0)).alias("errors"),
-    )
-
-
-def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncorrelated scalar subquery (share-of-total): per-nation revenue
-    as a fraction of the grand total. The total comes from an
-    unpartitioned window over the already-aggregated per-nation rows
-    (25 rows), not a second scan of the fact table."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    rev = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"))
-    )
-    total = Window.partitionBy()
-    return rev.select(
-        "n_name",
-        F.round("rev", 2).alias("revenue"),
-        F.round(F.col("rev") / F.sum("rev").over(total), 6).alias("revenue_share"),
     )
 
 

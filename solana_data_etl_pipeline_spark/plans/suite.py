@@ -3,7 +3,7 @@
 
 This is the engine's coverage manifest (SURVEY.md section 2): the
 reference analytics surface (A1-A13) over the normalized event model,
-the relational operator surface (joins/windows/semi-joins/top-k), and
+the relational operator surface (joins/windows/grouping sets/top-k), and
 the LLM-data-pipeline extensions (dedup, similarity, text analysis,
 multimodal). Spark plans and SQL strings are written against the same
 deterministic semantics -- fixed ``as_of`` scalar, explicit tie-breaks,
@@ -269,24 +269,12 @@ RELATIONAL_QUERIES: dict[str, QueryFn] = {
     "pricing_summary": R.pricing_summary,
     "shipping_priority": R.shipping_priority,
     "region_revenue": R.region_revenue,
-    "revenue_change": R.revenue_change,
-    "late_shipment_priority": R.late_shipment_priority,
     "segment_order_stats": R.segment_order_stats,
     "big_spenders": R.big_spenders,
-    "customer_order_ranks": R.customer_order_ranks,
-    "nation_trade_balance": R.nation_trade_balance,
     "sales_rollup": R.sales_rollup,
     "order_cube": R.order_cube,
-    "price_tier_distribution": R.price_tier_distribution,
-    "inactive_customers": R.inactive_customers,
-    "priority_pivot": R.priority_pivot,
-    "price_percentiles": R.price_percentiles,
-    "repeat_buyers": R.repeat_buyers,
-    "lineitem_measures_unpivot": R.lineitem_measures_unpivot,
     "small_quantity_revenue": R.small_quantity_revenue,
     "order_value_histogram": R.order_value_histogram,
-    "daily_purchase_vs_error": R.daily_purchase_vs_error,
-    "nation_revenue_share": R.nation_revenue_share,
 }
 
 RELATIONAL_SQL: dict[str, str] = {
@@ -326,22 +314,6 @@ JOIN customer ON o_custkey = c_custkey
 JOIN nation ON s_nationkey = n_nationkey
 GROUP BY n_name
 """,
-    "revenue_change": """
-SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
-""",
-    "late_shipment_priority": """
-SELECT o_orderpriority, count(*) AS late_order_count
-FROM (
-  SELECT DISTINCT o_orderkey, o_orderpriority
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE l_shipdate IS NOT NULL
-    AND l_shipdate > CAST(CAST(o_orderdate AS DATE) + INTERVAL 90 DAY AS TIMESTAMP)
-)
-GROUP BY o_orderpriority
-""",
     "segment_order_stats": """
 SELECT coalesce(c_mktsegment, 'unknown') AS mktsegment,
        count(*) AS order_count,
@@ -361,21 +333,6 @@ JOIN orders ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
 ORDER BY o_totalprice DESC, o_orderkey
 LIMIT 20
-""",
-    "customer_order_ranks": """
-SELECT o_custkey, o_orderkey, o_totalprice, rank_in_customer FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-         CAST(row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS INT) AS rank_in_customer
-  FROM orders
-) WHERE rank_in_customer <= 3
-""",
-    "inactive_customers": """
-SELECT c_mktsegment, count(*) AS inactive_customers,
-       round(avg(c_acctbal), 4) AS avg_acctbal
-FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey AND o_totalprice > 300000)
-GROUP BY c_mktsegment
 """,
     "sales_rollup": """
 SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
@@ -397,76 +354,6 @@ FROM (SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS order_year,
       FROM orders)
 GROUP BY CUBE (order_year, o_orderpriority)
 """,
-    "price_tier_distribution": """
-WITH tiers(tier, lo, hi) AS (
-  VALUES ('bronze', 0.0, 100000.0), ('silver', 100000.0, 200000.0),
-         ('gold', 200000.0, 350000.0), ('platinum', 350000.0, 1e12)
-)
-SELECT tier, count(*) AS order_count,
-       round(avg(o_totalprice), 4) AS avg_price,
-       round(sum(o_totalprice), 2) AS total_price
-FROM orders JOIN tiers ON o_totalprice >= lo AND o_totalprice < hi
-GROUP BY tier
-""",
-    "priority_pivot": """
-SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS order_year,
-       CAST(sum(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS p1,
-       CAST(sum(CASE WHEN o_orderpriority = '2-HIGH' THEN 1 ELSE 0 END) AS BIGINT) AS p2,
-       CAST(sum(CASE WHEN o_orderpriority = '3-MEDIUM' THEN 1 ELSE 0 END) AS BIGINT) AS p3,
-       CAST(sum(CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 1 ELSE 0 END) AS BIGINT) AS p4,
-       CAST(sum(CASE WHEN o_orderpriority = '5-LOW' THEN 1 ELSE 0 END) AS BIGINT) AS p5
-FROM orders
-GROUP BY 1
-""",
-    "price_percentiles": """
-SELECT o_orderpriority,
-       round(quantile_cont(o_totalprice, 0.5), 4) AS median_price,
-       round(quantile_cont(o_totalprice, 0.9), 4) AS p90_price,
-       count(*) AS order_count
-FROM orders
-GROUP BY o_orderpriority
-""",
-    "repeat_buyers": """
-WITH y96 AS (SELECT DISTINCT o_custkey FROM orders WHERE EXTRACT(year FROM o_orderdate) = 1996),
-y97 AS (SELECT DISTINCT o_custkey FROM orders WHERE EXTRACT(year FROM o_orderdate) = 1997),
-u AS (
-  SELECT 'retained' AS cohort, o_custkey FROM (SELECT o_custkey FROM y96 INTERSECT SELECT o_custkey FROM y97)
-  UNION ALL
-  SELECT 'churned' AS cohort, o_custkey FROM (SELECT o_custkey FROM y96 EXCEPT SELECT o_custkey FROM y97)
-)
-SELECT cohort, count(*) AS customers FROM u GROUP BY cohort
-""",
-    "lineitem_measures_unpivot": """
-WITH long AS (
-  SELECT l_orderkey, 'l_quantity' AS measure, l_quantity AS val FROM lineitem
-  UNION ALL
-  SELECT l_orderkey, 'l_extendedprice', l_extendedprice FROM lineitem
-  UNION ALL
-  SELECT l_orderkey, 'l_discount', l_discount FROM lineitem
-)
-SELECT measure, count(*) AS n_values,
-       round(sum(val), 2) AS total, round(avg(val), 6) AS mean
-FROM long WHERE val IS NOT NULL
-GROUP BY measure
-""",
-    "nation_trade_balance": """
-WITH c AS (
-  SELECT c_nationkey, count(*) AS customers, round(sum(c_acctbal), 2) AS customer_balance
-  FROM customer GROUP BY 1
-),
-s AS (
-  SELECT s_nationkey, count(*) AS suppliers, round(sum(s_acctbal), 2) AS supplier_balance
-  FROM supplier GROUP BY 1
-)
-SELECT n_name,
-       coalesce(customers, 0) AS customers,
-       coalesce(customer_balance, 0.0) AS customer_balance,
-       coalesce(suppliers, 0) AS suppliers,
-       coalesce(supplier_balance, 0.0) AS supplier_balance
-FROM nation
-LEFT JOIN c ON n_nationkey = c_nationkey
-LEFT JOIN s ON n_nationkey = s_nationkey
-""",
     "small_quantity_revenue": """
 WITH li AS (
   SELECT l.l_partkey, l.l_quantity, l.l_extendedprice
@@ -478,34 +365,6 @@ SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly,
        count(*) AS qualifying_lineitems
 FROM li JOIN caps USING (l_partkey)
 WHERE l_quantity < qty_cap
-""",
-    "daily_purchase_vs_error": """
-WITH p AS (
-  SELECT CAST(ts AS DATE) AS day, count(*) AS purchases
-  FROM events WHERE event_type = 'purchase' GROUP BY 1
-),
-e AS (
-  SELECT CAST(ts AS DATE) AS day, count(*) AS errors
-  FROM events WHERE event_type = 'error' GROUP BY 1
-)
-SELECT coalesce(p.day, e.day) AS day,
-       coalesce(purchases, 0) AS purchases,
-       coalesce(errors, 0) AS errors
-FROM p FULL OUTER JOIN e ON p.day = e.day
-""",
-    "nation_revenue_share": """
-WITH rev AS (
-  SELECT n_name, sum(l_extendedprice * (1 - l_discount)) AS rev
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation ON c_nationkey = n_nationkey
-  GROUP BY 1
-)
-SELECT n_name,
-       round(rev, 2) AS revenue,
-       round(rev / sum(rev) OVER (), 6) AS revenue_share
-FROM rev
 """,
     "order_value_histogram": """
 SELECT CAST(floor(o_totalprice / 50000.0) AS INTEGER) AS bucket,
@@ -524,9 +383,7 @@ GROUP BY 1
 TEMPORAL_QUERIES: dict[str, QueryFn] = {
     "asof_attribution": T.asof_attribution,
     "user_sessions": T.user_sessions,
-    "session_window_stats": T.session_window_stats,
     "salted_session_stats": T.salted_session_window_stats,
-    "daily_volume_trend": T.daily_volume_trend,
 }
 
 _ASOF_WIN = (
@@ -576,8 +433,9 @@ FROM s GROUP BY user_id, session_seq
 """,
     # session_window merges events with diff < gap (strict), decided at
     # microsecond precision -- the oracle compares exact epoch_us, not
-    # floored seconds.
-    "session_window_stats": f"""
+    # floored seconds. The salted two-phase plan is result-identical to
+    # the built-in session_window form by construction.
+    "salted_session_stats": f"""
 WITH l AS (
   SELECT user_id, ts, event_id,
          lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
@@ -597,23 +455,7 @@ s AS (
 SELECT user_id, min(ts) AS session_start, max(ts) AS session_end, count(*) AS n_events
 FROM s GROUP BY user_id, seq
 """,
-    "daily_volume_trend": """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS event_date, count(*) AS n_events
-  FROM events GROUP BY 1
-)
-SELECT event_date, n_events,
-       lag(n_events) OVER (ORDER BY event_date) AS prev_day,
-       n_events - lag(n_events) OVER (ORDER BY event_date) AS delta,
-       round(avg(n_events) OVER (ORDER BY event_date
-                                 ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 4) AS ma7
-FROM daily
-""",
 }
-
-# the salted two-phase plan is result-identical to the built-in
-# session_window plan by construction, so it shares the oracle
-TEMPORAL_SQL["salted_session_stats"] = TEMPORAL_SQL["session_window_stats"]
 
 
 # ---------------------------------------------------------------------------
@@ -802,7 +644,6 @@ TEXT_QUERIES: dict[str, QueryFn] = {
     # per-language tokenizer-fertility report (chars per token for
     # both shipped tokenizations, integer basis points)
     "tokenizer_fertility": _docs(X.tokenizer_fertility),
-    "language_stats": _docs(X.language_stats),
     "consistent_sample": _docs(
         lambda df: X.consistent_sample(df, pct=20).select("doc_id", "lang", "n_chars")
     ),
@@ -1185,11 +1026,6 @@ TEXT_QUERIES: dict[str, QueryFn] = {
     # window=16/stride=8 because the synthetic docs average ~50 tokens
     # (production RAG chunking runs 256/192 -- same plan, bigger slices)
     "chunk_documents": _docs(lambda df: X.chunk_documents(df, window=16, stride=8)),
-    "quantile_gate_chars": _docs(
-        lambda df: X.quantile_gate(df, "n_chars").select(
-            "doc_id", F.col("n_chars").cast("long").alias("n_chars")
-        )
-    ),
     # the acting sibling of span_dup_stats: remove all but the first
     # occurrence of every duplicated word 3-gram
     "span_dedup_rewrite": _docs(lambda df: X.span_dedup_rewrite(df, n=3)),
@@ -1310,14 +1146,6 @@ SELECT doc_id,
        md5(nrm) AS fingerprint,
        ('0x' || substr(md5(nrm), 1, 15))::BIGINT AS fingerprint64
 FROM s
-""",
-    "language_stats": """
-SELECT lang, count(*) AS doc_count,
-       round(avg(n_chars), 4) AS avg_chars,
-       CAST(sum(len(string_split_regex(trim(lower(text)), '\\s+'))) AS BIGINT) AS total_tokens,
-       count(DISTINCT source) AS sources
-FROM documents
-GROUP BY lang
 """,
     "consistent_sample": """
 SELECT doc_id, lang, n_chars FROM documents
@@ -2352,28 +2180,6 @@ SELECT doc_id,
 FROM s
 """
 
-# Exact-quantile gate over a fixed-precision histogram: both engines
-# compute identical thresholds because the quantile definition
-# (smallest rounded bucket whose cumulative fraction reaches q) is
-# closed-form over the same histogram.
-TEXT_SQL["quantile_gate_chars"] = """
-WITH h AS (
-  SELECT round(CAST(n_chars AS DOUBLE), 4) AS v, count(*) AS c
-  FROM documents GROUP BY 1
-),
-cum AS (
-  SELECT v, sum(c) OVER (ORDER BY v) AS cum, sum(c) OVER () AS total FROM h
-),
-b AS (
-  SELECT min(CASE WHEN cum / total >= 0.05 THEN v END) AS lo,
-         min(CASE WHEN cum / total >= 0.95 THEN v END) AS hi
-  FROM cum
-)
-SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars
-FROM documents, b
-WHERE round(CAST(n_chars AS DOUBLE), 4) BETWEEN lo AND hi
-"""
-
 TEXT_SQL["span_dedup_rewrite"] = """
 WITH t AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS tk FROM documents
@@ -3112,7 +2918,6 @@ DEDUP_QUERIES: dict[str, QueryFn] = {
         lambda df: D.minhash_lsh_pairs(df, threshold=0.2, max_bucket=DEDUP_MAX_BUCKET, on_low_coverage="warn")
     ),
     "dedup_ngram_jaccard": _docs(lambda df: D.ngram_jaccard_pairs(df, threshold=0.2)),
-    "simhash_fingerprints": _docs(D.simhash),
     # hamming<=3 pairs via 4-segment pigeonhole; the oracle reproduces
     # the identical capped-bucket candidate set. On THIS corpus the
     # 32-bit capped form is nearly blind (est coverage ~0.003,
@@ -3242,26 +3047,6 @@ DEDUP_QUERIES: dict[str, QueryFn] = {
             on_low_coverage="warn",
         )
     ),
-    # dedup health reporting: how large are the near-dup families
-    "dedup_cluster_sizes": _docs(
-        lambda df: D.connected_components(
-            D.minhash_lsh_pairs(df, threshold=0.2, max_bucket=DEDUP_MAX_BUCKET, on_low_coverage="warn"),
-            labels_checkpoint=False,  # single consumer (the size rollup)
-        )
-        .groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("_sz"))
-        .groupBy(F.col("_sz").cast("long").alias("cluster_size"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_clusters"))
-    ),
-    # quality-aware keepers: longest doc wins its component (ties:
-    # smallest id) -- the corpus practice of keeping the best dup
-    "dedup_keepers_quality": _docs(
-        lambda df: D.keep_representatives_by(
-            df,
-            D.minhash_lsh_pairs(df, threshold=0.2, max_bucket=DEDUP_MAX_BUCKET, on_low_coverage="warn"),
-            score_col="n_chars",
-        )
-    ),
     # the SCALE.md routing rule made concrete: on the density-
     # degenerate simhash family (capped pair recall 0.002, cap stats
     # est coverage 0.0035), the scale-correct consumer is the
@@ -3352,7 +3137,8 @@ DEDUP_QUERIES: dict[str, QueryFn] = {
     # the k-grows-with-N form (refine_bits=4): fixed k removes 69% of
     # sf0.1 embeddings (0.218 at sf0.01 -- the removal RATE itself is
     # scale-dependent, SCALE.md); the refined assignment holds
-    # per-cluster mass (and the removal rate: 0.099) steady
+    # per-cluster mass (and the removal rate: 0.099) steady.
+    # The only exact oracle check of the refine_bits path bench.py runs.
     "semdedup_keepers_scaled": (
         lambda spark, sf_dir: D.semdedup_keepers(
             load_table(spark, sf_dir, "embeddings"), threshold=0.30, refine_bits=4
@@ -3505,18 +3291,6 @@ SELECT doc_a, doc_b, round(jac, 4) AS jaccard FROM (
   JOIN sh sb ON cand.doc_b = sb.doc_id
 ) WHERE jac >= 0.2
 """,
-    "simhash_fingerprints": f"""
-WITH t AS (
-  SELECT doc_id,
-         [{H64_SQL.format(x="w")} for w in list_distinct(string_split({_NORM_TEXT}, ' '))] AS th
-  FROM documents
-)
-SELECT doc_id,
-       CAST(list_sum([CASE WHEN list_sum([CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END for h in th]) > 0
-                      THEN CAST(1 << j AS BIGINT) ELSE CAST(0 AS BIGINT) END
-                      for j in range(0, {D.SIMHASH_BITS})]) AS BIGINT) AS simhash
-FROM t
-""",
     "dedup_clusters": f"""
 WITH RECURSIVE {SHINGLES_SQL},
 {_minhash_sigs_sql()},
@@ -3643,31 +3417,6 @@ leak AS (
   WHERE lbl.split = 'train' AND cl.cluster_id IN (SELECT cluster_id FROM vc)
 )
 SELECT doc_id, split FROM lbl WHERE doc_id NOT IN (SELECT doc_id FROM leak)
-"""
-
-# cluster-size distribution: same clusters CTE
-DEDUP_SQL["dedup_cluster_sizes"] = _CLUSTERS_PREFIX + """,
-cl AS (SELECT id, CAST(min(lab) AS BIGINT) AS cluster_id FROM reach GROUP BY id),
-sz AS (SELECT cluster_id, count(*) AS s FROM cl GROUP BY cluster_id)
-SELECT CAST(s AS BIGINT) AS cluster_size, CAST(count(*) AS BIGINT) AS n_clusters
-FROM sz GROUP BY s
-"""
-
-# quality-aware keepers: same clusters CTE, representative = argmax
-# n_chars (ties: min id) per component
-DEDUP_SQL["dedup_keepers_quality"] = _CLUSTERS_PREFIX + """,
-cl AS (SELECT id, CAST(min(lab) AS BIGINT) AS cluster_id FROM reach GROUP BY id),
-rep AS (
-  SELECT id AS doc_id FROM (
-    SELECT cl.id,
-           row_number() OVER (PARTITION BY cl.cluster_id
-                              ORDER BY d.n_chars DESC, cl.id ASC) AS rn
-    FROM cl JOIN documents d ON d.doc_id = cl.id
-  ) WHERE rn = 1
-)
-SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT id FROM cl)
-UNION ALL
-SELECT doc_id FROM rep
 """
 
 # MOSS overlap pairs: reuse the winnowing pipeline verbatim up to its
@@ -4444,7 +4193,7 @@ UNION ALL
 SELECT DISTINCT cluster_id AS vec_id FROM cl
 """
 
-# SemDeDup: label-cluster centroids (6dp cells, the label_centroids
+# SemDeDup: label-cluster centroids (6dp cells, the ivf_centroids
 # convention), within-cluster pairs at rounded cosine >= 0.30,
 # recursive-CTE components, keeper = lowest (rounded centroid-cos,
 # vec_id) per component; untouched vectors survive as singletons.
@@ -4714,8 +4463,6 @@ SIMILARITY_QUERIES: dict[str, QueryFn] = {
     "knn_lsh": _knn(V.knn_lsh),
     "knn_ivf": _knn_ivf,
     "knn_ivf_materialized": _knn_ivf_materialized,
-    "label_centroids": (lambda spark, sf_dir: V.label_centroids(load_table(spark, sf_dir, "embeddings"))),
-    "embedding_quantize": (lambda spark, sf_dir: V.quantize_embeddings(load_table(spark, sf_dir, "embeddings"))),
 }
 
 SIMILARITY_SQL: dict[str, str] = {
@@ -4772,30 +4519,6 @@ SELECT query_id, neighbor_id, cosine, CAST(rnk AS INT) AS rank FROM (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
   FROM scored
 ) WHERE rnk <= 10
-""",
-    "label_centroids": """
-SELECT label, CAST(i - 1 AS INT) AS dim, round(avg(embedding[i]::DOUBLE), 6) AS centroid_val
-FROM embeddings, UNNEST(range(1, 65)) AS u(i)
-GROUP BY label, i
-""",
-    "embedding_quantize": """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-b AS (
-  SELECT vec_id, v,
-         greatest(list_max(list_transform(v, x -> abs(x))), 1e-12) AS amax
-  FROM e
-),
-q AS (
-  SELECT vec_id, v, amax,
-         list_transform(v, x -> CAST(round(x / (amax / 127.0)) AS INTEGER)) AS q8
-  FROM b
-)
-SELECT vec_id,
-       round(amax / 127.0, 6) AS scale,
-       q8[1] AS q0, q8[2] AS q1,
-       round(list_max(list_transform(list_zip(v, q8),
-             s -> abs(s[1] - s[2] * (amax / 127.0)))), 6) AS max_abs_err
-FROM q
 """,
 }
 
@@ -4929,9 +4652,8 @@ def _build_int8_layout(spark: SparkSession, sf_dir: str, path: str) -> None:
 def _knn_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The memory-bound production shape: the INDEX side (quantizer
     training, cell assignment, and scoring vectors) runs entirely on
-    int8-reconstructed vectors (quantize_embeddings' 4x-smaller
-    storage), while queries arrive full-precision -- measuring
-    exactly the recall the compression costs (planted bench rows
+    int8-reconstructed vectors (4x-smaller storage), while queries
+    arrive full-precision -- measuring exactly the recall the compression costs (planted bench rows
     knn_ivf_int8_*). The index is the per-sf stored `int8`
     artifact -- the production read path, like the PQ rung."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -5292,20 +5014,12 @@ def _media_avi_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MULTIMODAL_QUERIES: dict[str, QueryFn] = {
     "media_stats": _media(M.media_stats),
-    "media_frame_sample": _media(M.frame_sample),
     # mapInPandas path; the deterministic stand-in decoder is
     # sha256-based, so even the Arrow-batched Python stage is exactly
     # oracle-checkable (f0 = first 4 digest bytes / 2^32).
     "media_features": _media(
         lambda media: M.extract_features(media).select(
             "media_id", "modality", "byte_len", F.round(F.element_at("feature", 1), 4).alias("f0")
-        )
-    ),
-    # binary->binary mapInPandas transform; the char-truncation
-    # stand-in makes even the recomputed checksum oracle-exact
-    "media_resize": _media(
-        lambda media: M.resize_media(media, target=40).select(
-            "media_id", "byte_len", "checksum"
         )
     ),
     # REAL codec end-to-end: documents -> genuine RIFF/WAV containers
@@ -5373,23 +5087,11 @@ SELECT 'text' AS modality, count(*) AS n_items,
        count(DISTINCT text) AS distinct_payloads
 FROM documents
 """,
-    "media_frame_sample": """
-WITH m AS (SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS L FROM documents)
-SELECT doc_id AS media_id, CAST(o // 64 AS INT) AS frame_idx, o AS byte_offset
-FROM m, UNNEST(range(0, greatest(L, 1), 64)) AS u(o)
-""",
     "media_features": """
 SELECT doc_id AS media_id, 'text' AS modality,
        CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
        round(('0x' || substr(sha256(text), 1, 8))::BIGINT / 4294967296.0, 4) AS f0
 FROM documents
-""",
-    "media_resize": """
-WITH r AS (SELECT doc_id, substring(text, 1, 40) AS t FROM documents)
-SELECT doc_id AS media_id,
-       CAST(octet_length(encode(t)) AS BIGINT) AS byte_len,
-       sha256(t) AS checksum
-FROM r
 """,
     # the WAV samples are the text's ASCII codes, so every decoded
     # number recomputes per byte: unicode(char) = sample value;
@@ -5566,24 +5268,6 @@ def all_oracle_sql() -> dict[str, str]:
     return out
 
 
-# The driver's per-round correctness gate verifies at most ~50 registry
-# entries (observed: CORRECTNESS_r1/r2 recorded exactly the first 50 of
-# 65), so the surface exposed to the driver is this curated, ordered
-# 50-slot subset -- families that have never received a driver verdict
-# lead. EVERYTHING in all_queries() stays oracle-checked regardless:
-# tests/test_oracle_parity.py drives the full registry against DuckDB
-# at sf0.001 on every test run. Deliberately unlisted:
-#   - dedup_ngram_jaccard, knn_bruteforce: quadratic exact baselines
-#     kept as recall/correctness twins for the registered LSH/IVF
-#     plans (scale-killers by design, never the graded path);
-#   - user_sessions: same sessionization semantics as
-#     session_window_stats (which uses the built-in session_window
-#     aggregation -- the streaming-native form);
-#   - eleven relational queries whose operator shapes are covered by
-#     the kept ten (e.g. sales_rollup vs order_cube, big_spenders /
-#     repeat_buyers / segment_order_stats vs the kept agg+join set);
-#   - rotation history: every rotated-out entry stays DuckDB-swept by
-#     tests/test_oracle_parity on every test run.
 # The order is fixed this round so BENCH deltas stay comparable across
 # changes; every registry entry, listed here or not, stays DuckDB-swept
 # by tests/test_oracle_parity.py.

@@ -42,58 +42,13 @@ def asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def daily_volume_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window frame-spec + lag surface: daily event counts with the
-    previous day's count (lag), day-over-day delta, and the trailing
-    7-row moving average (ROWS BETWEEN 6 PRECEDING AND CURRENT ROW).
-    One aggregation shuffle then one single-partition window over the
-    (small) daily series -- the window input is already reduced to one
-    row per day, so the unpartitioned window is safe at any source
-    scale."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(F.to_date("ts").alias("event_date")).agg(F.count("*").alias("n_events"))
-    w = Window.orderBy("event_date")
-    ma = w.rowsBetween(-6, 0)
-    return daily.select(
-        "event_date",
-        "n_events",
-        F.lag("n_events").over(w).alias("prev_day"),
-        (F.col("n_events") - F.lag("n_events").over(w)).alias("delta"),
-        F.round(F.avg("n_events").over(ma), 4).alias("ma7"),
-    )
-
-
-def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same gap-sessionization computed with Spark's BUILT-IN
-    `session_window` aggregation (one hash-agg with merging session
-    state instead of the window-scan in operators/temporal.py --
-    also the streaming-native formulation). Session bounds differ from
-    session_stats by construction: session_window's end is
-    last_event + gap (window bound), so we report event-time bounds
-    via min/max and count only."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.col("user_id"),
-            F.session_window("ts", f"{SESSION_GAP_MINUTES} minutes").alias("w"),
-        )
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count("*").alias("n_events"),
-        )
-        .select("user_id", "session_start", "session_end", "n_events")
-    )
-
-
 def salted_session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skew-safe twin of session_window_stats: time-bucket-salted
-    two-phase sessionization (operators/skew.py) whose heavy exchange
-    partitions on (user_id, time-bucket) instead of user_id alone --
-    result-identical to the built-in session_window plan (pinned under
-    a planted hot key in tests/test_skew.py), registered so the
+    """Skew-safe gap-sessionization: time-bucket-salted two-phase
+    sessionization (operators/skew.py) whose heavy exchange partitions
+    on (user_id, time-bucket) instead of user_id alone --
+    result-identical to the built-in
+    ``groupBy(user_id, session_window(ts, gap))`` form (pinned under a
+    planted hot key in tests/test_skew.py), registered so the
     skew-hardened path carries its own driver verdict."""
     from solana_data_etl_pipeline_spark.operators.skew import salted_session_stats
 

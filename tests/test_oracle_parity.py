@@ -2,10 +2,10 @@
 plans.suite.all_queries() -- INCLUDING entries not exposed through the
 curated 50-slot driver registry (__spark_entry__.queries()) -- is
 checked against its DuckDB oracle twin on row count, column names, and
-order-insensitive value multiset. This is what keeps the trimmed
-relational/text/temporal queries and the deliberately-unregistered
-quadratic baselines (dedup_ngram_jaccard, knn_bruteforce) verified
-after the driver surface was capped at 50 entries."""
+order-insensitive value multiset. This is what keeps every entry
+outside DRIVER_ORDER -- including the quadratic exact baselines
+(dedup_ngram_jaccard, knn_bruteforce) -- verified while the driver
+surface is capped at 50 entries."""
 
 import importlib.util
 import pathlib
@@ -35,8 +35,8 @@ def test_driver_registry_is_within_budget_and_consistent():
     assert set(all_queries()) - set(all_oracle_sql()) == {"sketch_rollup"}
     # COVERAGE.md's "Registry note" states these counts; update BOTH
     # when registering a query (ADVICE r10: the doc drifted twice)
-    assert len(all_queries()) == 176
-    assert len(all_oracle_sql()) == 175
+    assert len(all_queries()) == 153
+    assert len(all_oracle_sql()) == 152
 
 
 def test_full_registry_matches_oracle(spark):
