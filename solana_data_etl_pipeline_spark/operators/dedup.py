@@ -2023,6 +2023,10 @@ def materialize_embedding_lsh(
     materialize_winnow's, `{path}/excluded` lists them, and probes
     read it to report per-vector blindness (delta_embedding_exposure).
 
+    Uncapped at knn_lsh's table count (LSH_TABLES) it is also the ANN
+    index similarity.knn_lsh_indexed probes, row-identical to inline
+    knn_lsh.
+
     A catch-up anti-joins on vec_id AFTER the vectors are bucketed, and
     Spark does not push that anti-join below an embedding projection
     such as hash_embed: pass vectors of the unindexed documents only
@@ -2047,6 +2051,17 @@ def materialize_embedding_lsh(
         max_bucket,
         id_col="vec_id",
     )
+
+
+def embedding_index(spark, index_path: str) -> tuple[int, DataFrame]:
+    """(n_tables, bucket rows) of a materialize_embedding_lsh index: the
+    table count from its `_meta` (ValueError without one) and its
+    (vec_id, v, n, table, bucket) sub-table, read at the writer's fixed
+    layout -- no footer inference."""
+    n_tables = require_index_meta(spark, index_path)["n_tables"]
+    return n_tables, spark.read.schema(
+        "vec_id long, v array<double>, n double, table int, bucket long"
+    ).parquet(f"{index_path}/buckets")
 
 
 def delta_embedding_exposure(
@@ -2144,8 +2159,7 @@ def delta_embedding_dedup(
         table_bucket_col,
     )
 
-    n_tables = require_index_meta(spark, index_path)["n_tables"]
-    idx = spark.read.parquet(f"{index_path}/buckets")
+    n_tables, idx = embedding_index(spark, index_path)
     buckets = table_bucket_col("embedding", LSH_PLANES, n_tables)
     d = delta.select(
         F.col("vec_id"),

@@ -28,8 +28,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from solana_data_etl_pipeline_spark.operators.util import require_index_meta, write_index_meta
-
 LSH_PLANES = 8
 EMB_DIM = 64
 
@@ -321,8 +319,6 @@ def knn_lsh(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    n_planes: int = LSH_PLANES,
-    dim: int = EMB_DIM,
     n_tables: int = LSH_TABLES,
 ) -> DataFrame:
     """ANN top-k with MULTI-TABLE random-hyperplane LSH: candidates are
@@ -351,114 +347,45 @@ def knn_lsh(
     # corpus side: the Arrow/numpy bucket kernel (bit-identical to the
     # former HOF projection -- see lsh_bucket_rows; the corpus-side
     # hyperplane dots and norms were this plan's dominant per-call
-    # cost). Query side stays the HOF projection: bounded rows, and
-    # the broadcast side must not grow a Python stage.
-    buckets = table_bucket_col("embedding", n_planes, n_tables, dim)
-    c = lsh_bucket_rows(
-        corpus, n_planes, dim, n_tables, id_out="neighbor_id"
-    )
-    q = queries.select(
-        F.col("query_id"),
-        _dvec(F.col("embedding")).alias("q_emb"),
-        norm_expr(F.col("embedding")).alias("q_norm"),
-        F.posexplode(buckets).alias("table", "bucket"),
-    )
-    cos = dot_raw(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm"))
-    scored = (
-        c.join(F.broadcast(q), ["table", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.round(cos, 4).alias("cosine"))
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def materialize_lsh_rows(
-    emb_df: DataFrame,
-    path: str,
-    n_planes: int = LSH_PLANES,
-    dim: int = EMB_DIM,
-    n_tables: int = LSH_TABLES,
-) -> str:
-    """Write knn_lsh's corpus side as a STORED bucket index: the
-    exploded (vec_id, c_emb, c_norm, table, bucket) rows, i.e. the
-    classic LSH table layout (bucket -> member vectors) every
-    production ANN stack materializes at ingest. knn_lsh_indexed then
-    probes it without recomputing the corpus-side hyperplane dots and
-    norms per query -- those are the dominant per-call cost once the
-    corpus outweighs the candidate set. The double vector and its
-    norm are stored parquet-exact, so the probe is value-identical to
-    the inline form (pinned by test).
-
-    The build geometry (n_planes, dim, n_tables) is the index's
-    `_meta` (operators/util.py write_index_meta), written after the
-    root overwrite that would otherwise delete it: the index defines
-    the hash space queries are bucketed in."""
-    rows = lsh_bucket_rows(emb_df, n_planes, dim, n_tables)
-    # The classic bucket DIRECTORY (r14, VERDICT r13 #4 / guide §6):
-    # the index is PARTITIONED by (table, bucket), so a probe's
-    # broadcast join on those columns triggers dynamic partition
-    # pruning -- the scan reads only the |queries| x n_tables probed
-    # bucket directories instead of the whole index (verified:
-    # `dynamicpruningexpression(table IN ...)` in PartitionFilters of
-    # the knn_lsh_indexed probe plan). The pre-write repartition
-    # clusters each (table, bucket) into one task so every directory
-    # holds one file, bounding file count at the bucket DOMAIN
-    # (n_tables x 2^n_planes), not tasks x domain.
-    rows.repartition("table", "bucket").write.mode("overwrite").partitionBy(
-        "table", "bucket"
-    ).parquet(path)
-    write_index_meta(
-        emb_df.sparkSession, path, {"n_planes": n_planes, "dim": dim, "n_tables": n_tables}
-    )
-    return path
+    # cost)
+    c = lsh_bucket_rows(corpus, LSH_PLANES, n_tables=n_tables, id_out="neighbor_id")
+    return _bucketed_top_k(c, queries, n_tables, k)
 
 
 def knn_lsh_indexed(index_path: str, queries: DataFrame, k: int = 10) -> DataFrame:
-    """knn_lsh's probe against the stored bucket index
-    (materialize_lsh_rows): queries compute their own buckets from
-    the SAME fixed plane matrices (deterministic, so candidates are
-    identical to the inline form), the corpus side is a pruned read
-    of already-bucketed rows, and the rerank tail is unchanged.
-    Result-identical to knn_lsh on the same corpus (shared oracle /
-    row-identity test contract).
+    """knn_lsh's probe against a stored embedding bucket index
+    (dedup.materialize_embedding_lsh): queries compute their own
+    buckets from the SAME fixed plane matrices, the corpus side is the
+    index's already-bucketed rows, and the rerank tail is knn_lsh's.
+    Result-identical to knn_lsh at the index's table count (parquet
+    stores the vectors and norms exactly; pinned by test).
 
-    The probe geometry (n_planes, dim, n_tables) is the index's
-    `_meta`, never a caller's: a probe in a different hash space
-    silently returns near-empty/wrong neighbor sets, so a path
-    without `_meta` raises ValueError instead of guessing.
+    The table count is the index's `_meta`, never a caller's: a probe
+    in a different hash space silently returns near-empty/wrong
+    neighbor sets, so a path without `_meta` raises ValueError.
 
-    Scale shape: query cost is the index rows in the probed buckets
-    (|queries| x n_tables bucket keys broadcast onto the index read)
-    -- the corpus-side hyperplane dots, norms, and explode moved to
-    ingest cadence."""
-    spark = queries.sparkSession
-    meta = require_index_meta(spark, index_path)
-    # fixed layout (materialize_lsh_rows' own casts) -- no footer inference
-    index_rows = spark.read.schema(
-        "vec_id long, c_emb array<double>, c_norm double, table int, bucket long"
-    ).parquet(index_path)
-    buckets = table_bucket_col("embedding", meta["n_planes"], meta["n_tables"], meta["dim"])
-    # dynamic-partition-pruning enabler (r14): the stored index is
-    # partitioned by (table, bucket), and Spark's PartitionPruning
-    # rule only injects the pruning subquery when the probe side
-    # carries a likely-selective predicate -- literal query frames
-    # (hybrid/text_knn build theirs from the query terms) have none.
-    # `query_id >= Long.MIN_VALUE` holds for every non-null long (a
-    # NULL query_id row can never produce output: the self-match
-    # filter already drops it), so it is result-neutral, yet it turns
-    # the probe scan into a `dynamicpruningexpression(...)`
-    # partition-pruned read of only the probed bucket directories.
-    queries = queries.filter(F.col("query_id") >= F.lit(-(1 << 63)))
+    Scale shape: the corpus-side hyperplane dots, norms and explode
+    moved to ingest cadence; the probe is one index scan joined to the
+    broadcast |queries| x n_tables bucket rows."""
+    from solana_data_etl_pipeline_spark.operators.dedup import embedding_index
+
+    n_tables, rows = embedding_index(queries.sparkSession, index_path)
+    c = rows.toDF("neighbor_id", "c_emb", "c_norm", "table", "bucket")
+    return _bucketed_top_k(c, queries, n_tables, k)
+
+
+def _bucketed_top_k(c: DataFrame, queries: DataFrame, n_tables: int, k: int) -> DataFrame:
+    """knn_lsh's query side and tail over corpus bucket rows
+    `c` = (neighbor_id, c_emb, c_norm, table, bucket): the queries
+    bucket with the HOF projection (bounded rows, and the broadcast
+    side must not grow a Python stage), join on (table, bucket), then
+    exact cosine, candidate dedup and per-query top-k."""
+    buckets = table_bucket_col("embedding", LSH_PLANES, n_tables)
     q = queries.select(
         F.col("query_id"),
         _dvec(F.col("embedding")).alias("q_emb"),
         norm_expr(F.col("embedding")).alias("q_norm"),
         F.posexplode(buckets).alias("table", "bucket"),
-    )
-    c = index_rows.select(
-        F.col("vec_id").alias("neighbor_id"), "c_emb", "c_norm", "table", "bucket"
     )
     cos = dot_raw(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm"))
     scored = (

@@ -536,25 +536,19 @@ def hybrid_rank(
         "doc_id", F.col("rank").alias("lex_rank")
     )
     enc = hash_embed(df, text_col=text_col).localCheckpoint(eager=False)
-    sem = _semantic_rank(enc, query_terms, k)
+    sem = _semantic_rank(df.sparkSession, query_terms, lambda q: knn_lsh(enc, q, k=k))
     return _rrf_fuse(lex, sem, k, rrf_k)
 
 
-def _semantic_rank(corpus_vecs: DataFrame, query_terms: list[str], k: int) -> DataFrame:
+def _semantic_rank(spark, query_terms: list[str], knn) -> DataFrame:
     """The semantic member route shared by hybrid_rank and its indexed
     form: encode the query text with the registered hash_embed
     encoder (query_id -1, so no corpus doc is self-excluded) and
-    probe the corpus vectors with the bucketed knn_lsh plan. Returns
-    (doc_id, sem_rank)."""
-    from solana_data_etl_pipeline_spark.operators.similarity import knn_lsh
-
-    qdf = corpus_vecs.sparkSession.createDataFrame(
-        [(-1, " ".join(query_terms))], "doc_id long, text string"
-    )
-    qvec = hash_embed(qdf).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return knn_lsh(corpus_vecs, qvec, k=k).select(
+    probe it with `knn` (query vectors -> knn_lsh-shaped top-k).
+    Returns (doc_id, sem_rank)."""
+    qdf = spark.createDataFrame([(-1, " ".join(query_terms))], "doc_id long, text string")
+    qvec = hash_embed(qdf).select(F.col("vec_id").alias("query_id"), "embedding")
+    return knn(qvec).select(
         F.col("neighbor_id").alias("doc_id"), F.col("rank").alias("sem_rank")
     )
 
@@ -592,9 +586,9 @@ def hybrid_rank_indexed(
     pinned identical to the scan form through the shared oracle) and
     the semantic member probes a stored LSH bucket index over the
     hash_embed corpus vectors (`lsh_index`: the PATH
-    similarity.materialize_lsh_rows writes once at ingest cadence;
-    its `_meta` defines the probe geometry) instead of re-encoding
-    and re-bucketing the corpus per query.
+    dedup.materialize_embedding_lsh writes at ingest cadence, uncapped
+    at knn_lsh's table count; its `_meta` holds the table count)
+    instead of re-encoding and re-bucketing the corpus per query.
     Result-identical to hybrid_rank on the same corpus: parquet
     stores the encoder's doubles and norms exactly, the query side
     buckets with the same fixed plane matrices, BM25's integer-ppm
@@ -610,15 +604,7 @@ def hybrid_rank_indexed(
     lex = bm25_rank_indexed(spark, index_path, query_terms, top_k=k).select(
         "doc_id", F.col("rank").alias("lex_rank")
     )
-    qdf = spark.createDataFrame(
-        [(-1, " ".join(query_terms))], "doc_id long, text string"
-    )
-    qvec = hash_embed(qdf).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    sem = knn_lsh_indexed(lsh_index, qvec, k=k).select(
-        F.col("neighbor_id").alias("doc_id"), F.col("rank").alias("sem_rank")
-    )
+    sem = _semantic_rank(spark, query_terms, lambda q: knn_lsh_indexed(lsh_index, q, k=k))
     return _rrf_fuse(lex, sem, k, rrf_k)
 
 

@@ -70,9 +70,9 @@ def write_index_meta(spark, path: str, geometry: dict) -> None:
     JSON object (e.g. {"num_hashes": 16, "bands": 4}).
 
     Every ingest-time index (minhash bands, winnow fingerprints,
-    embedding buckets, text-LSH bucket rows) defines the geometry it
-    is probed with: a probe at any other geometry hashes into a
-    different space and silently matches nothing. So the index, not
+    embedding buckets) defines the geometry it is probed with: a
+    probe at any other geometry hashes into a different space and
+    silently matches nothing. So the index, not
     the caller, owns it -- probes read it back with read_index_meta
     and take no geometry parameters. The leading underscore keeps the
     file out of parquet scans of `path`. A driver-side filesystem

@@ -604,17 +604,19 @@ def _build_bm25_index(spark: SparkSession, sf_dir: str, path: str) -> None:
 
 
 #: stored text-corpus LSH bucket index -- hash_embed run once over the
-#: documents, then the exploded (vec_id, c_emb, c_norm, table, bucket)
-#: rows written as a parquet side table (similarity.materialize_lsh_rows:
-#: the classic bucket->members LSH table layout). The `cluster_fit`
-#: stance: encoding AND bucketing are ingest-time artifacts;
-#: hybrid_rank_indexed's semantic member probes the index instead of
-#: re-encoding and re-bucketing the corpus per query -- VERDICT r11
-#: #4. Parquet stores the doubles exactly, so the probe is
+#: documents, then bucketed by the embedding index writer
+#: (dedup.materialize_embedding_lsh) uncapped at knn_lsh's table count:
+#: one plain `buckets` sub-table of (vec_id, v, n, table, bucket) rows.
+#: The `cluster_fit` stance: encoding AND bucketing are ingest-time
+#: artifacts; hybrid_rank_indexed's semantic member probes the index
+#: instead of re-encoding and re-bucketing the corpus per query --
+#: VERDICT r11 #4. Parquet stores the doubles exactly, so the probe is
 #: value-identical to the inline knn_lsh form.
 @artifact("lsh_index")
 def _build_text_lsh_index(spark: SparkSession, sf_dir: str, path: str) -> None:
-    V.materialize_lsh_rows(X.hash_embed(load_table(spark, sf_dir, "documents")), path)
+    D.materialize_embedding_lsh(
+        X.hash_embed(load_table(spark, sf_dir, "documents")), path, n_tables=V.LSH_TABLES
+    )
 
 
 #: trained-BPE artifact -- merges/ (the learned merge table,

@@ -28,8 +28,9 @@ def spark():
 # deliberately NOT in the list below: it is the gate that keeps every
 # trimmed registry entry verified). Run everything with
 # SPARK_GRAFT_FULL_TESTS=1 or an explicit -m option (e.g. -m "slow" or
-# -m ""); CI/driver invocations of `pytest tests/ -x -q` get the fast
-# set and complete well inside the budget.
+# -m ""); a slow test named by node id on the command line runs too.
+# Plain invocations of `pytest tests/ -x -q` get the fast set and
+# complete well inside the budget.
 _SLOW_TESTS = frozenset((
     "test_approx.py::test_approx_count_distinct_within_5pct_of_exact",
     "test_canonical.py::test_all_analytics_tables_materialize",
@@ -121,6 +122,19 @@ def _explicit_markexpr(config) -> bool:
     return any(a.startswith("-m") for a in config.invocation_params.args)
 
 
+def _named_node_ids(config) -> set[str]:
+    """The node ids (relative to the rootdir) that the command line
+    names with `path::name`: a slow test named this way is asked for,
+    so the default deselection must not drop it."""
+    named = set()
+    for arg in config.invocation_params.args:
+        path, sep, rest = str(arg).partition("::")
+        full = (config.invocation_params.dir / path).resolve()
+        if sep and full.is_relative_to(config.rootpath):
+            named.add(f"{full.relative_to(config.rootpath).as_posix()}::{rest}")
+    return named
+
+
 def pytest_collection_modifyitems(config, items):
     for item in items:
         nid = item.nodeid.removeprefix("tests/")
@@ -132,7 +146,14 @@ def pytest_collection_modifyitems(config, items):
         return
     if _explicit_markexpr(config):
         return  # an explicit marker expression overrides the default
-    deselected = [i for i in items if i.get_closest_marker("slow")]
+    named = _named_node_ids(config)
+    deselected = [
+        i
+        for i in items
+        if i.get_closest_marker("slow")
+        and i.nodeid not in named
+        and i.nodeid.partition("[")[0] not in named
+    ]
     if deselected:
         config.hook.pytest_deselected(items=deselected)
-        items[:] = [i for i in items if not i.get_closest_marker("slow")]
+        items[:] = [i for i in items if i not in deselected]

@@ -181,6 +181,7 @@ def test_compact_lsh_index_preserves_probes(spark, tmp_path):
     from solana_data_etl_pipeline_spark.operators.similarity import (
         LSH_PLANES,
         _dvec,
+        knn_lsh_indexed,
         norm_expr,
         table_bucket_col,
     )
@@ -203,6 +204,9 @@ def test_compact_lsh_index_preserves_probes(spark, tmp_path):
         "vec_id long, embedding array<double>",
     )
     before = {r.vec_id for r in D.delta_embedding_dedup(spark, path, batch, threshold=0.99).collect()}
+    queries = batch.select(F.col("vec_id").alias("query_id"), "embedding")
+    knn_before = sorted(map(tuple, knn_lsh_indexed(path, queries, k=5).collect()))
+    assert knn_before  # non-vacuous
     n_rows_before = spark.read.parquet(f"{path}/buckets").count()
     files_before = sum(
         1 for _r, _d, fs in os.walk(f"{path}/buckets") for f in fs if f.endswith(".parquet")
@@ -218,3 +222,4 @@ def test_compact_lsh_index_preserves_probes(spark, tmp_path):
     assert read_index_meta(spark, path) == {"n_tables": 2}
     after = {r.vec_id for r in D.delta_embedding_dedup(spark, path, batch, threshold=0.99).collect()}
     assert after == before
+    assert sorted(map(tuple, knn_lsh_indexed(path, queries, k=5).collect())) == knn_before

@@ -9,6 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from solana_data_etl_pipeline_spark.operators import dedup as D
 from solana_data_etl_pipeline_spark.operators import similarity as V
 
 DIM = 8
@@ -133,8 +134,6 @@ def test_multi_table_lsh_beats_single_table_on_planted_near_dups(spark):
     candidate pairs, never lose them."""
     import numpy as np
 
-    from solana_data_etl_pipeline_spark.operators import dedup as D
-
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     base = emb.limit(30).collect()
     rng = np.random.RandomState(1)
@@ -158,13 +157,14 @@ def test_multi_table_lsh_beats_single_table_on_planted_near_dups(spark):
 
 
 def test_knn_lsh_indexed_identical_to_inline(emb, queries, tmp_path):
-    """The stored bucket index (materialize_lsh_rows) probed by
-    knn_lsh_indexed returns EXACTLY the inline knn_lsh rows: the
-    query side buckets with the same fixed plane matrices and parquet
-    stores the corpus vectors/norms exactly, so moving the corpus-side
-    encode+bucket work to ingest changes no values."""
+    """The embedding index (materialize_embedding_lsh, uncapped at
+    knn_lsh's table count) probed by knn_lsh_indexed returns EXACTLY
+    the inline knn_lsh rows: the query side buckets with the same
+    fixed plane matrices and parquet stores the corpus vectors/norms
+    exactly, so moving the corpus-side encode+bucket work to ingest
+    changes no values."""
     path = str(tmp_path / "lsh_rows")
-    V.materialize_lsh_rows(emb, path)
+    D.materialize_embedding_lsh(emb, path, n_tables=V.LSH_TABLES)
     inline = sorted(
         (r.query_id, r.neighbor_id, r.cosine, r.rank)
         for r in V.knn_lsh(emb, queries, k=K).collect()
@@ -176,8 +176,24 @@ def test_knn_lsh_indexed_identical_to_inline(emb, queries, tmp_path):
     assert inline == stored and inline  # identical, non-vacuous
 
 
+def test_knn_lsh_indexed_equals_inline_after_catch_up(emb, tmp_path):
+    """An index built on half the corpus and caught up by a second
+    writer call on all of it probes exactly like inline knn_lsh over
+    the whole corpus: the catch-up appends only the missing vectors,
+    once each."""
+    path = str(tmp_path / "lsh_rows")
+    D.materialize_embedding_lsh(emb.filter(F.col("vec_id") % 2 == 0), path, n_tables=V.LSH_TABLES)
+    D.materialize_embedding_lsh(emb, path)
+    q = emb.filter(F.col("vec_id") % 7 == 1).select(F.col("vec_id").alias("query_id"), "embedding")
+    inline = sorted(map(tuple, V.knn_lsh(emb, q, k=K).collect()))
+    assert sorted(map(tuple, V.knn_lsh_indexed(path, q, k=K).collect())) == inline and inline
+    rows = emb.sparkSession.read.parquet(f"{path}/buckets")
+    assert rows.count() == N * V.LSH_TABLES
+    assert rows.select("vec_id").distinct().count() == N
+
+
 def test_knn_lsh_indexed_pins_probe_params_to_build_params(emb, queries, tmp_path):
-    """materialize_lsh_rows writes its build geometry as the index's
+    """materialize_embedding_lsh writes its table count as the index's
     `_meta`, and the probe takes it from there: an index built at a
     non-default table count probes exactly like the inline form at
     that count. Without `_meta` the probe raises instead of guessing
@@ -189,12 +205,8 @@ def test_knn_lsh_indexed_pins_probe_params_to_build_params(emb, queries, tmp_pat
 
     spark = emb.sparkSession
     path = str(tmp_path / "lsh_rows")
-    V.materialize_lsh_rows(emb, path, n_tables=2)
-    assert read_index_meta(spark, path) == {
-        "n_planes": V.LSH_PLANES,
-        "dim": V.EMB_DIM,
-        "n_tables": 2,
-    }
+    D.materialize_embedding_lsh(emb, path, n_tables=2)
+    assert read_index_meta(spark, path) == {"n_tables": 2}
     resolved = V.knn_lsh_indexed(path, queries, k=K)
     two = V.knn_lsh(emb, queries, k=K, n_tables=2)
     assert sorted(map(tuple, resolved.collect())) == sorted(map(tuple, two.collect()))
@@ -204,12 +216,11 @@ def test_knn_lsh_indexed_pins_probe_params_to_build_params(emb, queries, tmp_pat
 
 
 def test_knn_lsh_indexed_prunes_and_keeps_extreme_query_ids(emb, tmp_path):
-    """The probe's partition-pruning enabler filters no query: a
-    query id at the far negative end of the long range gets the same
-    neighbours from the stored index as from inline knn_lsh, and the
-    executed plan still prunes the (table, bucket) directories."""
+    """The probe filters no query: a query id at the far negative end
+    of the long range gets the same neighbours from the stored index
+    as from inline knn_lsh."""
     path = str(tmp_path / "lsh_rows")
-    V.materialize_lsh_rows(emb, path)
+    D.materialize_embedding_lsh(emb, path, n_tables=V.LSH_TABLES)
     low = -(1 << 62) - 1
     q = emb.filter(F.col("vec_id") == 0).select(
         F.lit(low).cast("long").alias("query_id"), "embedding"
@@ -218,8 +229,6 @@ def test_knn_lsh_indexed_prunes_and_keeps_extreme_query_ids(emb, tmp_path):
     probe = V.knn_lsh_indexed(path, q, k=K)
     assert sorted(map(tuple, probe.collect())) == inline
     assert inline and all(r[0] == low for r in inline)
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruningexpression" in plan.lower()
 
 
 def test_knn_lsh_multi_table_candidates_superset_and_dedup(emb, queries):

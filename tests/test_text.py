@@ -2002,16 +2002,15 @@ def test_bm25_indexed_identical_to_scan_form(spark, tmp_path):
 
 
 def test_hybrid_rank_indexed_identical_to_scan_form(spark, tmp_path):
-    """The stored-artifact fusion (pruned bm25 postings + a written
-    LSH bucket index over the hash_embed vectors) returns EXACTLY the
+    """The stored-artifact fusion (pruned bm25 postings + the embedding
+    LSH index over the hash_embed vectors) returns EXACTLY the
     scan-form hybrid_rank rows: parquet stores the encoder's doubles
     and norms exactly, the query buckets with the same fixed plane
     matrices, and BM25's integer-ppm scores are order-free, so
     amortizing the corpus-side work changes no values (VERDICT r11
     #4)."""
-    from solana_data_etl_pipeline_spark.operators.similarity import (
-        materialize_lsh_rows,
-    )
+    from solana_data_etl_pipeline_spark.operators.dedup import materialize_embedding_lsh
+    from solana_data_etl_pipeline_spark.operators.similarity import LSH_TABLES
 
     rows = []
     for i in range(40):
@@ -2025,7 +2024,7 @@ def test_hybrid_rank_indexed_identical_to_scan_form(spark, tmp_path):
     idx = str(tmp_path / "inv")
     X.materialize_inverted_index(docs, idx)
     lsh_path = str(tmp_path / "lsh")
-    materialize_lsh_rows(X.hash_embed(docs), lsh_path)
+    materialize_embedding_lsh(X.hash_embed(docs), lsh_path, n_tables=LSH_TABLES)
     scan = [
         (r.doc_id, r.lex_rank, r.sem_rank, r.rrf_score)
         for r in X.hybrid_rank(docs, q, k=10).collect()
