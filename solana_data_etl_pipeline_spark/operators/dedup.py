@@ -239,14 +239,9 @@ def _embedding_buckets(emb_df: DataFrame, n_tables: int) -> DataFrame:
     payload: the bucket-only kernel pass (include_vec=False), so a cap
     report or guard ships nothing but ids and keys through Arrow.
     Bit-identical to the buckets of the full pass."""
-    from solana_data_etl_pipeline_spark.operators.similarity import (
-        LSH_PLANES,
-        lsh_bucket_rows,
-    )
+    from solana_data_etl_pipeline_spark.operators.similarity import lsh_bucket_rows
 
-    return lsh_bucket_rows(
-        emb_df, LSH_PLANES, n_tables=n_tables, include_vec=False
-    ).select("vec_id", "table", "bucket")
+    return lsh_bucket_rows(emb_df, n_tables=n_tables, include_vec=False)
 
 
 # -- the bucket cap: one policy for every capped LSH family ----------
@@ -1944,7 +1939,6 @@ def embedding_near_dup_lsh(
     UNDER SCALE").
     """
     from solana_data_etl_pipeline_spark.operators.similarity import (
-        LSH_PLANES,
         dot_raw,
         lsh_bucket_rows,
     )
@@ -1970,9 +1964,7 @@ def embedding_near_dup_lsh(
     # (bit-identical to the former HOF projection -- see
     # similarity.lsh_bucket_rows: the per-vector hyperplane dots and
     # norms were this plan's dominant per-call cost, guide §4.2)
-    v = lsh_bucket_rows(
-        emb_df, LSH_PLANES, n_tables=n_tables, vec_out="v", norm_out="n"
-    )
+    v = lsh_bucket_rows(emb_df, n_tables=n_tables, vec_out="v", norm_out="n")
     v = cap_buckets(v, keys, max_bucket)[0]
     a, b = v.alias("a"), v.alias("b")
     cos = dot_raw(F.col("a.v"), F.col("b.v")) / (F.col("a.n") * F.col("b.n"))
@@ -2031,10 +2023,7 @@ def materialize_embedding_lsh(
     Spark does not push that anti-join below an embedding projection
     such as hash_embed: pass vectors of the unindexed documents only
     (operators/util.py unindexed)."""
-    from solana_data_etl_pipeline_spark.operators.similarity import (
-        LSH_PLANES,
-        lsh_bucket_rows,
-    )
+    from solana_data_etl_pipeline_spark.operators.similarity import lsh_bucket_rows
 
     # Arrow/numpy bucket-kernel pass (bit-identical rows; the former
     # HOF projection's dots/norms dominated the build cost)
@@ -2044,8 +2033,8 @@ def materialize_embedding_lsh(
         {"n_tables": (n_tables, EMBED_INDEX_TABLES)},
         {
             "buckets": lambda d, g: lsh_bucket_rows(
-                d, LSH_PLANES, n_tables=g["n_tables"], vec_out="v", norm_out="n"
-            ).select("vec_id", "v", "n", "table", "bucket"),
+                d, n_tables=g["n_tables"], vec_out="v", norm_out="n"
+            ),
         },
         ["table", "bucket"],
         max_bucket,
@@ -2086,18 +2075,11 @@ def delta_embedding_exposure(
     winnow's content-grown list) so the join is trivially cheap; the
     batch side is broadcast for symmetry with the winnow probe. Zero
     corpus shuffles."""
-    from solana_data_etl_pipeline_spark.operators.similarity import (
-        LSH_PLANES,
-        table_bucket_col,
-    )
+    from solana_data_etl_pipeline_spark.operators.similarity import lsh_bucket_rows
 
     n_tables = require_index_meta(spark, index_path)["n_tables"]
     excluded = spark.read.parquet(f"{index_path}/excluded")
-    buckets = table_bucket_col("embedding", LSH_PLANES, n_tables)
-    d = delta.select(
-        F.col("vec_id").alias("delta_id"),
-        F.posexplode(buckets).alias("table", "bucket"),
-    )
+    d = lsh_bucket_rows(delta, n_tables=n_tables, id_out="delta_id", include_vec=False)
     totals = d.groupBy("delta_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_buckets")
     )
@@ -2152,21 +2134,12 @@ def delta_embedding_dedup(
     never shuffles and nothing unbounded is ever broadcast; the
     batch-internal join is delta x delta, broadcast likewise."""
     from solana_data_etl_pipeline_spark.operators.similarity import (
-        LSH_PLANES,
-        _dvec,
         dot_raw,
-        norm_expr,
-        table_bucket_col,
+        lsh_bucket_rows,
     )
 
     n_tables, idx = embedding_index(spark, index_path)
-    buckets = table_bucket_col("embedding", LSH_PLANES, n_tables)
-    d = delta.select(
-        F.col("vec_id"),
-        _dvec(F.col("embedding")).alias("v"),
-        norm_expr(F.col("embedding")).alias("n"),
-        F.posexplode(buckets).alias("table", "bucket"),
-    )
+    d = lsh_bucket_rows(delta, n_tables=n_tables, vec_out="v", norm_out="n")
     cos_ic = dot_raw(F.col("c.v"), F.col("d.v")) / (F.col("c.n") * F.col("d.n"))
     corpus_dropped = (
         idx.alias("c")

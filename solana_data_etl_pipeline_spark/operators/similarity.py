@@ -15,8 +15,10 @@ Two plans:
   literals so the plan is reproducible across engines (the DuckDB
   oracle uses the same matrix).
 
-All arithmetic is built-in higher-order functions on double-cast
-arrays (JVM-side); no Python UDFs in the scoring path.
+Scoring arithmetic is built-in higher-order functions on double-cast
+arrays (JVM-side). Every LSH side -- corpus, stored index and query --
+buckets through ONE Arrow-batched kernel, `lsh_bucket_rows`, which
+refuses a vector that is NULL, holds a NULL or is not `EMB_DIM` wide.
 """
 
 from __future__ import annotations
@@ -66,15 +68,16 @@ def lsh_planes(n_planes: int = LSH_PLANES, dim: int = EMB_DIM, table: int = 0) -
     return planes
 
 
-def bucket_expr(emb: Column | str, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id: bit p set iff dot(plane_p, emb) >= 0.
+def bucket_expr(emb: str, planes: list[list[float]]) -> Column:
+    """Sign-bit bucket id of the bound column `emb`: bit p set iff
+    dot(plane_p, emb) >= 0.
 
     The plane matrix is a single nested-array literal and the dot
     products run inside one `transform`, keeping the expression tree
     (and generated code) O(planes) instead of O(planes * dim). The
-    matrix is built with ONE parsed SQL literal rather than
-    planes*dim `F.lit` calls: each F.lit is a py4j round-trip, and at
-    8x64 doubles per table the former loop cost ~0.5 s of pure
+    WHOLE expression is ONE parsed SQL string rather than planes*dim
+    `F.lit` calls and DSL lambdas: each is a py4j round-trip, and at
+    8x64 doubles per table the former form cost ~0.5 s of pure
     plan-CONSTRUCTION time per table per query call (measured r13;
     guide §7.3's planning-time trap, driver-side). `repr(float)` is
     round-trip exact and Spark's double-literal parser is correctly
@@ -88,31 +91,16 @@ def bucket_expr(emb: Column | str, planes: list[list[float]]) -> Column:
         + ")"
     )
     powers_sql = "array(" + ",".join(f"{2**p}L" for p in range(len(planes))) + ")"
-    if isinstance(emb, str):
-        # bound-column-name fast path: the WHOLE bucket expression as
-        # one parsed SQL string -- the DSL form costs dozens of py4j
-        # round-trips per table per call (HOF lambda plumbing), pure
-        # plan-construction time (r13, guide §7.3). Semantically
-        # identical tree (same functions, same coercions).
-        dvec_sql = f"transform({emb}, x -> cast(x as double))"
-        dots_sql = (
-            f"transform({planes_sql}, row -> aggregate(zip_with(row, {dvec_sql}, "
-            f"(x, y) -> x * y), 0.0D, (acc, x) -> acc + x))"
-        )
-        return F.expr(
-            f"aggregate(zip_with({dots_sql}, {powers_sql}, "
-            f"(d, pw) -> case when d >= 0 then pw else 0L end), "
-            f"0L, (acc, x) -> acc + x)"
-        )
-    planes_col = F.expr(planes_sql)
-    powers = F.expr(powers_sql)
-    dvec = _dvec(emb)
-    dots = F.transform(
-        planes_col,
-        lambda row: F.aggregate(F.zip_with(row, dvec, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x),
+    dvec_sql = f"transform({emb}, x -> cast(x as double))"
+    dots_sql = (
+        f"transform({planes_sql}, row -> aggregate(zip_with(row, {dvec_sql}, "
+        f"(x, y) -> x * y), 0.0D, (acc, x) -> acc + x))"
     )
-    bits = F.zip_with(dots, powers, lambda d, pw: F.when(d >= 0, pw).otherwise(F.lit(0).cast("long")))
-    return F.aggregate(bits, F.lit(0).cast("long"), lambda acc, x: acc + x)
+    return F.expr(
+        f"aggregate(zip_with({dots_sql}, {powers_sql}, "
+        f"(d, pw) -> case when d >= 0 then pw else 0L end), "
+        f"0L, (acc, x) -> acc + x)"
+    )
 
 
 def knn_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
@@ -145,19 +133,8 @@ def knn_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFr
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def table_bucket_col(emb: Column | str, n_planes: int, n_tables: int, dim: int = EMB_DIM) -> Column:
-    """Array of per-table LSH bucket ids (one sign-bit bucket per hash
-    table, independent plane sets). Pass the bound column's NAME for
-    the single-parse construction fast path (see bucket_expr)."""
-    return F.array(
-        *[bucket_expr(emb, lsh_planes(n_planes, dim, table=t)) for t in range(n_tables)]
-    )
-
-
 def lsh_bucket_rows(
     emb_df: DataFrame,
-    n_planes: int = LSH_PLANES,
-    dim: int = EMB_DIM,
     n_tables: int = LSH_TABLES,
     id_col: str = "vec_id",
     id_out: str | None = None,
@@ -165,39 +142,42 @@ def lsh_bucket_rows(
     norm_out: str = "c_norm",
     include_vec: bool = True,
 ) -> DataFrame:
-    """The exploded corpus side every multi-table LSH plan shuffles or
-    stores -- (id, double vector, L2 norm, table, bucket), one row per
-    (vector, hash table) -- computed in ONE Arrow-batched numpy kernel
-    instead of the interpreted higher-order-function expressions
-    (guide §4.2: HOFs evaluate interpreted with no codegen, so the
-    n_tables*n_planes*dim multiply-adds per vector dominated every
-    corpus-side pass; the batch kernel does the same arithmetic
-    vectorized).
+    """The exploded bucket rows of every multi-table LSH plan --
+    (id, double vector, L2 norm, table, bucket), one row per (vector,
+    hash table) over `n_tables` independent LSH_PLANES-plane tables --
+    computed in ONE Arrow-batched numpy kernel instead of interpreted
+    higher-order-function expressions (guide §4.2: HOFs evaluate
+    interpreted with no codegen, so the n_tables*n_planes*dim
+    multiply-adds per vector dominated every corpus-side pass; the
+    batch kernel does the same arithmetic vectorized). It is the only
+    embedding bucketer: corpus, stored-index and query sides all call
+    it, so they hash in one space by construction.
 
-    BIT-IDENTICAL to the former projection `select(id, _dvec(emb),
-    norm_expr(emb), posexplode(table_bucket_col(emb, ...)))`, pinned
-    by test (tests/test_similarity.py): the per-(vector, plane) dot
-    and the squared norm accumulate with one IEEE float64 add per
-    dimension in ascending-dimension order -- exactly `F.aggregate`'s
-    left fold -- so every dot, norm, sign bit and bucket id matches
-    the HOF form to the last bit (products are order-free, adds are
-    sequenced identically, np.sqrt and Math.sqrt are both correctly
-    rounded). Query sides keep the HOF form: they are bounded (a
-    handful of probe rows), and the broadcast-join shape must not
-    grow a Python stage.
+    BIT-IDENTICAL to the HOF form -- `_dvec`, `norm_expr` and one
+    `bucket_expr(emb, lsh_planes(table=t))` per table, exploded --
+    pinned by test (tests/test_similarity.py): the per-(vector,
+    plane) dot and the squared norm accumulate with one IEEE float64
+    add per dimension in ascending-dimension order -- exactly
+    `F.aggregate`'s left fold -- so every dot, norm, sign bit and
+    bucket id matches the HOF form to the last bit (products are
+    order-free, adds are sequenced identically, np.sqrt and Math.sqrt
+    are both correctly rounded).
+
+    Every vector must be EMB_DIM (the planes' width) non-NULL values.
+    A NULL vector, a NULL element or any other width has no sign-bit
+    bucket, so the kernel raises ValueError naming the id and the
+    width it got (the job fails with it) instead of bucketing the row.
 
     `include_vec=False` drops the vector/norm columns for bucket-only
-    consumers (cap stats), halving what crosses the Arrow boundary."""
+    consumers (cap stats, exposure), halving what crosses the Arrow
+    boundary."""
     import pyspark.sql.types as T
 
     id_out = id_out or id_col
-    planes_np = [
-        row for t in range(n_tables) for row in lsh_planes(n_planes, dim, table=t)
-    ]
+    n_planes, dim = LSH_PLANES, EMB_DIM
+    planes_np = [row for t in range(n_tables) for row in lsh_planes(table=t)]
 
     def gen(batches):
-        import math as _math
-
         import numpy as np
         import pyarrow as pa
 
@@ -209,95 +189,46 @@ def lsh_bucket_rows(
             n = len(ids)
             if n == 0:
                 continue
-            # Uniformity must hold PER ROW, not just in aggregate: a
-            # batch of mixed-length vectors whose lengths sum to n*dim
-            # would reshape misaligned and silently emit wrong buckets
-            # (ADVICE r13). Validate every list length from the offsets
-            # and flatten() (which honors a nonzero slice offset, where
-            # .values does not) before taking the vectorized path.
-            try:
-                uniform = embcol.null_count == 0 and bool(
-                    np.all(
-                        np.diff(
-                            embcol.offsets.to_numpy(zero_copy_only=False).astype(
-                                np.int64
-                            )
+            # every ROW must be dim wide, not just the batch in
+            # aggregate: mixed lengths summing to n*dim would reshape
+            # misaligned (ADVICE r13). flatten() honors a nonzero
+            # slice offset, where .values does not.
+            flat = embcol.flatten()
+            widths = np.diff(embcol.offsets.to_numpy(zero_copy_only=False))
+            if embcol.null_count or flat.null_count or np.any(widths != dim):
+                for i, vec in enumerate(embcol.to_pylist()):
+                    if vec is None or len(vec) != dim or None in vec:
+                        got = "a NULL vector" if vec is None else f"width {len(vec)}"
+                        if vec is not None and None in vec:
+                            got += " with a NULL element"
+                        raise ValueError(
+                            f"LSH bucketing needs EMB_DIM = {dim} non-NULL values "
+                            f"per vector; {id_col} {ids[i].as_py()} has {got}"
                         )
-                        == dim
-                    )
-                )
-            except (AttributeError, pa.ArrowInvalid):
-                uniform = False
-            if uniform:
-                flat = embcol.flatten()
-                uniform = flat.null_count == 0 and len(flat) == n * dim
-            if uniform:
-                V = np.asarray(flat, dtype=np.float64).reshape(n, dim)
-                # EXACT left fold over dimensions (see docstring)
-                dots = np.zeros((n, P.shape[0]), dtype=np.float64)
-                sq = np.zeros(n, dtype=np.float64)
-                for d in range(dim):
-                    dots += V[:, d, None] * P[None, :, d]
-                    sq += V[:, d] * V[:, d]
-                norms = np.sqrt(sq)
-                bits = dots >= 0.0
-                buckets = [
-                    (bits[:, t * n_planes : (t + 1) * n_planes] * powers).sum(axis=1)
-                    for t in range(n_tables)
-                ]
-                norms_out = pa.array(np.tile(norms, n_tables))
-                buckets_arr = pa.array(np.concatenate(buckets).astype(np.int64))
-            else:
-                # EDGE fallback replicating the HOF form's semantics
-                # exactly for malformed rows (wrong length / null
-                # elements / null vector): zip_with pads the shorter
-                # side with NULL, so any mismatch or null makes every
-                # plane dot NULL, whose sign test fails -> bucket 0;
-                # the norm fold goes NULL through any null element.
-                # Registered frames never hit this path (vectors are
-                # uniform `dim`-wide, non-null); mixed test fixtures do.
-                rows = embcol.to_pylist()
-                bks, nrm = [], []
-                for vec in rows:
-                    if vec is None or len(vec) != dim or any(v is None for v in vec):
-                        bks.append([0] * n_tables)
-                    else:
-                        bk = []
-                        for t in range(n_tables):
-                            b = 0
-                            for p in range(n_planes):
-                                acc = 0.0
-                                row = planes_np[t * n_planes + p]
-                                for d2 in range(dim):
-                                    acc += row[d2] * vec[d2]
-                                if acc >= 0.0:
-                                    b += 1 << p
-                            bk.append(b)
-                        bks.append(bk)
-                    if vec is None or any(v is None for v in vec):
-                        nrm.append(None)
-                    else:
-                        acc = 0.0
-                        for v in vec:
-                            acc += v * v
-                        nrm.append(_math.sqrt(acc))
-                norms_out = pa.array(nrm * n_tables, type=pa.float64())
-                buckets_arr = pa.array(
-                    [bks[i][t] for t in range(n_tables) for i in range(n)],
-                    type=pa.int64(),
-                )
-            cols = [pa.concat_arrays([ids.combine_chunks() if hasattr(ids, "combine_chunks") else ids] * n_tables)]
+            V = np.asarray(flat, dtype=np.float64).reshape(n, dim)
+            # EXACT left fold over dimensions (see docstring)
+            dots = np.zeros((n, P.shape[0]), dtype=np.float64)
+            sq = np.zeros(n, dtype=np.float64)
+            for d in range(dim):
+                dots += V[:, d, None] * P[None, :, d]
+                sq += V[:, d] * V[:, d]
+            bits = dots >= 0.0
+            buckets = [
+                (bits[:, t * n_planes : (t + 1) * n_planes] * powers).sum(axis=1)
+                for t in range(n_tables)
+            ]
+            cols = [pa.concat_arrays([ids] * n_tables)]
             names = [id_out]
             if include_vec:
                 cols.append(pa.concat_arrays([embcol] * n_tables))
                 names.append(vec_out)
-                cols.append(norms_out)
+                cols.append(pa.array(np.tile(np.sqrt(sq), n_tables)))
                 names.append(norm_out)
             cols.append(
                 pa.array(np.repeat(np.arange(n_tables, dtype=np.int32), n), type=pa.int32())
             )
             names.append("table")
-            cols.append(buckets_arr)
+            cols.append(pa.array(np.concatenate(buckets).astype(np.int64)))
             names.append("bucket")
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
@@ -330,8 +261,8 @@ def knn_lsh(
     percent of the corpus). Recall < 1 by design; deterministic given
     the fixed plane matrices, so still exactly oracle-checkable.
 
-    Scale shape: bucket arrays are projections; posexplode emits
-    n_tables rows per vector carrying only (table, bucket, id, vec);
+    Scale shape: the bucket kernel (lsh_bucket_rows) emits n_tables
+    rows per vector carrying only (id, vec, norm, table, bucket);
     the join key is (table, bucket); candidates are deduped BEFORE
     rank (a neighbor found by several tables scores once).
 
@@ -344,11 +275,7 @@ def knn_lsh(
     across alternating runs). The kept plan scores-then-distincts: the
     shuffle stays narrow, and multiplicity only approaches L for pairs
     already so close they are few."""
-    # corpus side: the Arrow/numpy bucket kernel (bit-identical to the
-    # former HOF projection -- see lsh_bucket_rows; the corpus-side
-    # hyperplane dots and norms were this plan's dominant per-call
-    # cost)
-    c = lsh_bucket_rows(corpus, LSH_PLANES, n_tables=n_tables, id_out="neighbor_id")
+    c = lsh_bucket_rows(corpus, n_tables=n_tables, id_out="neighbor_id")
     return _bucketed_top_k(c, queries, n_tables, k)
 
 
@@ -377,15 +304,11 @@ def knn_lsh_indexed(index_path: str, queries: DataFrame, k: int = 10) -> DataFra
 def _bucketed_top_k(c: DataFrame, queries: DataFrame, n_tables: int, k: int) -> DataFrame:
     """knn_lsh's query side and tail over corpus bucket rows
     `c` = (neighbor_id, c_emb, c_norm, table, bucket): the queries
-    bucket with the HOF projection (bounded rows, and the broadcast
-    side must not grow a Python stage), join on (table, bucket), then
-    exact cosine, candidate dedup and per-query top-k."""
-    buckets = table_bucket_col("embedding", LSH_PLANES, n_tables)
-    q = queries.select(
-        F.col("query_id"),
-        _dvec(F.col("embedding")).alias("q_emb"),
-        norm_expr(F.col("embedding")).alias("q_norm"),
-        F.posexplode(buckets).alias("table", "bucket"),
+    bucket through the same kernel (lsh_bucket_rows), join broadcast
+    on (table, bucket), then exact cosine, candidate dedup and
+    per-query top-k."""
+    q = lsh_bucket_rows(
+        queries, n_tables=n_tables, id_col="query_id", vec_out="q_emb", norm_out="q_norm"
     )
     cos = dot_raw(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm"))
     scored = (
@@ -745,7 +668,7 @@ def lloyd_cells(
     assigned = ensure_parallelism(emb_df).select(
         "vec_id",
         "embedding",
-        bucket_expr(F.col("embedding"), lsh_planes(n_planes, dim, table=table)).alias("cell"),
+        bucket_expr("embedding", lsh_planes(n_planes, dim, table=table)).alias("cell"),
     )
     for _ in range(n_iters):
         cents = ivf_centroids(assigned, dim=dim, cell_col="cell")

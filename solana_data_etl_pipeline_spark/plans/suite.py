@@ -125,7 +125,8 @@ BUCKET_SQL = (
 
 def _table_buckets_sql(n_tables: int, src: str = "e") -> str:
     """CTE fragment: (vec_id, v, tbl, bkt) rows -- one per hash table --
-    mirroring similarity.table_bucket_col + posexplode."""
+    mirroring the (vec_id, table, bucket) rows of
+    similarity.lsh_bucket_rows."""
     mats = ", ".join(f"{_planes_sql(t)} AS m{t}" for t in range(n_tables))
     bcols = ",\n           ".join(
         BUCKET_SQL.format(m=f"m{t}", v="v") + f" AS b{t}" for t in range(n_tables)

@@ -169,38 +169,28 @@ def test_compact_lsh_index_preserves_probes(spark, tmp_path):
 
     path = str(tmp_path / "eidx")
     emb = spark.createDataFrame(
-        [(i, [float((i + j) % 7) for j in range(8)]) for i in range(40)],
+        [(i, [float((i + j) % 7) for j in range(64)]) for i in range(40)],
         "vec_id long, embedding array<double>",
     )
     D.materialize_embedding_lsh(emb, path, n_tables=2, max_bucket=8)
     # simulate per-batch appends: fragment the buckets table further
     extra = spark.createDataFrame(
-        [(100 + i, [float((i * 3 + j) % 5) for j in range(8)]) for i in range(10)],
+        [(100 + i, [float((i * 3 + j) % 5) for j in range(64)]) for i in range(10)],
         "vec_id long, embedding array<double>",
     )
     from solana_data_etl_pipeline_spark.operators.similarity import (
-        LSH_PLANES,
-        _dvec,
         knn_lsh_indexed,
-        norm_expr,
-        table_bucket_col,
+        lsh_bucket_rows,
     )
     from pyspark.sql import functions as F
 
-    rows = extra.select(
-        F.col("vec_id"),
-        _dvec(F.col("embedding")).alias("v"),
-        norm_expr(F.col("embedding")).alias("n"),
-        F.posexplode(table_bucket_col(F.col("embedding"), LSH_PLANES, 2)).alias(
-            "table", "bucket"
-        ),
-    )
+    rows = lsh_bucket_rows(extra, n_tables=2, vec_out="v", norm_out="n")
     for _ in range(3):  # three more "batches" of small files
         rows.write.mode("append").parquet(f"{path}/buckets")
 
     batch = spark.createDataFrame(
-        [(900, [float(j % 7) for j in range(8)]),   # twin of vec 0
-         (901, [9.0] * 8)],                          # novel
+        [(900, [float(j % 7) for j in range(64)]),   # twin of vec 0
+         (901, [9.0] * 64)],                          # novel
         "vec_id long, embedding array<double>",
     )
     before = {r.vec_id for r in D.delta_embedding_dedup(spark, path, batch, threshold=0.99).collect()}

@@ -190,11 +190,12 @@ def test_embedding_near_dup_lsh_max_bucket_drops_hot_bucket(spark):
     # 30 identical vectors collapse into one LSH bucket: with the cap
     # their quadratic pair set is dropped; an unrelated near-dup pair
     # in a different bucket must survive
-    rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(30)]
-    rows += [(100, [0.0, 0.0, -1.0, -0.05]), (101, [0.0, 0.0, -1.0, 0.05])]
+    rows = [(i, _vec64(1.0)) for i in range(30)]
+    rows += [(100, _vec64(0.0, 0.0, -1.0, -0.05)), (101, _vec64(0.0, 0.0, -1.0, 0.05))]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     capped = D.embedding_near_dup_lsh(emb, threshold=0.9, max_bucket=10, coverage_floor=None)
     got = {(r.vec_a, r.vec_b) for r in capped.collect()}
+    assert (100, 101) in got
     assert all(a >= 100 for a, _ in got)
     uncapped = D.embedding_near_dup_lsh(emb, threshold=0.9).count()
     assert uncapped >= 435  # the clone class alone is 30*29/2
@@ -263,9 +264,9 @@ def test_connected_components_over_embedding_near_dups(spark):
     rng = np.random.RandomState(5)
     rows = []
     for g in range(3):
-        base = rng.normal(size=16) * 3
+        base = rng.normal(size=64) * 3
         for i in range(4):
-            v = base + rng.normal(size=16) * 0.01
+            v = base + rng.normal(size=64) * 0.01
             rows.append((g * 10 + i, [float(x) for x in v]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     pairs = D.embedding_near_dup_lsh(emb, threshold=0.95, n_tables=4)
@@ -538,7 +539,7 @@ def test_coverage_floor_guard_generalizes_to_every_capped_family(spark):
     clones = [(i, " ".join(f"w{j}" for j in range(20))) for i in range(30)]
     docs = spark.createDataFrame(clones, "doc_id long, text string")
     emb = spark.createDataFrame(
-        [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(30)],
+        [(i, _vec64(1.0)) for i in range(30)],
         "vec_id long, embedding array<float>",
     )
     cases = [
@@ -837,7 +838,7 @@ def test_delta_embedding_dedup_materialized_index(spark, tmp_path):
         materialize_embedding_lsh,
     )
 
-    dim = 8
+    dim = 64
     base = [1.0] * dim
     ortho = [1.0, -1.0] * (dim // 2)
     corpus = spark.createDataFrame(
@@ -1077,7 +1078,7 @@ def test_delta_embedding_exposure_flags_blind_vectors(spark, tmp_path):
         materialize_embedding_lsh,
     )
 
-    dim = 64  # EMB_DIM: the hyperplanes are 64-dim, shorter vectors degenerate to bucket 0
+    dim = 64  # EMB_DIM: the hyperplanes are 64-dim, other widths are refused
     base = [1.0] * dim
     neg = [-1.0] * dim  # sign-LSH bucket is the exact complement of base's
     corpus = spark.createDataFrame(
@@ -1195,8 +1196,8 @@ def test_embedding_index_geometry_is_self_describing(spark, tmp_path):
     from solana_data_etl_pipeline_spark.operators.util import read_index_meta
 
     rng = np.random.RandomState(5)
-    base = rng.normal(size=(20, 8))
-    noisy = base[:10] + rng.normal(size=(10, 8)) * 0.6
+    base = rng.normal(size=(20, 64))
+    noisy = base[:10] + rng.normal(size=(10, 64)) * 0.6
     schema = "vec_id long, embedding array<double>"
     corpus = spark.createDataFrame([(i, [float(x) for x in v]) for i, v in enumerate(base)], schema)
     batch = spark.createDataFrame(

@@ -12,14 +12,17 @@ from pyspark.sql import functions as F
 from solana_data_etl_pipeline_spark.operators import dedup as D
 from solana_data_etl_pipeline_spark.operators import similarity as V
 
-DIM = 8
+DIM = V.EMB_DIM  # the LSH planes' width: the knn_lsh* tests really bucket
 N = 40
 K = 5
 
 
 def _vectors():
+    # four clusters (label = i % 4) of cos ~0.8 members, so LSH buckets
+    # hold real neighbours and prune the rest
     rng = np.random.RandomState(7)
-    vecs = rng.normal(size=(N, DIM)).astype("float32")
+    centers = rng.normal(size=(4, DIM))
+    vecs = (centers[np.arange(N) % 4] + 0.5 * rng.normal(size=(N, DIM))).astype("float32")
     return [(i, [float(x) for x in vecs[i]], int(i % 4)) for i in range(N)]
 
 
@@ -71,13 +74,25 @@ def test_knn_bruteforce_rank_invariants(emb, queries):
 
 
 def test_knn_lsh_results_subset_of_exact_scores(emb, queries):
-    """Every ANN hit must carry the exact cosine (rerank is exact) and
-    respect top-k ordering within the candidate set."""
+    """Every ANN hit must carry the exact cosine (rerank is exact),
+    respect top-k ordering within the candidate set, and share a
+    (table, bucket) with its query: candidates come from the bucket
+    join, so the hits are fewer than the brute-force scan's."""
     exact = {}
     for r in V.knn_bruteforce(emb, queries, k=N).collect():
         exact[(r.query_id, r.neighbor_id)] = r.cosine
-    for r in V.knn_lsh(emb, queries, k=K).collect():
+    buckets = {
+        (r.vec_id, r.table): r.bucket
+        for r in V.lsh_bucket_rows(emb, include_vec=False).collect()
+    }
+    hits = V.knn_lsh(emb, queries, k=K).collect()
+    assert 0 < len(hits) < 3 * K
+    for r in hits:
         assert math.isclose(r.cosine, exact[(r.query_id, r.neighbor_id)], abs_tol=1e-9)
+        assert any(
+            buckets[(r.query_id, t)] == buckets[(r.neighbor_id, t)]
+            for t in range(V.LSH_TABLES)
+        )
 
 
 def test_knn_ivf_candidates_come_from_probed_cells(emb, queries):
@@ -121,8 +136,8 @@ def test_ivf_centroids_are_per_cell_means(emb):
 
 def test_bucket_expr_is_deterministic(emb):
     planes = V.lsh_planes(n_planes=4, dim=DIM)
-    b1 = {r.vec_id: r.b for r in emb.select("vec_id", V.bucket_expr(F.col("embedding"), planes).alias("b")).collect()}
-    b2 = {r.vec_id: r.b for r in emb.select("vec_id", V.bucket_expr(F.col("embedding"), planes).alias("b")).collect()}
+    b1 = {r.vec_id: r.b for r in emb.select("vec_id", V.bucket_expr("embedding", planes).alias("b")).collect()}
+    b2 = {r.vec_id: r.b for r in emb.select("vec_id", V.bucket_expr("embedding", planes).alias("b")).collect()}
     assert b1 == b2
     assert all(0 <= v < 16 for v in b1.values())
 
@@ -577,81 +592,93 @@ def test_knn_ivf_pq_cluster_coherent(spark):
 def test_lsh_bucket_rows_bit_identical_to_hof_projection(spark):
     """The Arrow/numpy bucket kernel (r13 optimization: the corpus-side
     hyperplane dots/norms move from interpreted HOF expressions to one
-    vectorized batch pass) must reproduce the former HOF projection
+    vectorized batch pass) must reproduce the HOF projection
     BIT-FOR-BIT -- same ids, tables, buckets, same double vectors, and
     norms equal to the last ulp (the kernel folds dimensions in the
     same left-to-right IEEE order as F.aggregate). Checked on both the
     embeddings table and hash_embed text vectors, at the knn (4-table)
-    and dedup (2-table) operating points, plus the bucket-only form."""
+    and dedup (2-table) operating points, on a query frame (its own id
+    column), plus the bucket-only form."""
     from pyspark.sql import functions as F
 
     from solana_data_etl_pipeline_spark.operators.similarity import (
-        EMB_DIM,
-        LSH_PLANES,
         _dvec,
+        bucket_expr,
         lsh_bucket_rows,
+        lsh_planes,
         norm_expr,
-        table_bucket_col,
     )
     from solana_data_etl_pipeline_spark.operators.text import hash_embed
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(64)
-    for frame, n_tables in ((emb, 4), (emb, 2), (hash_embed(docs), 4)):
-        buckets = table_bucket_col(F.col("embedding"), LSH_PLANES, n_tables, EMB_DIM)
-        hof = frame.select(
-            F.col("vec_id"),
+    def hof(frame, n_tables, id_col):
+        buckets = F.array(
+            *[bucket_expr("embedding", lsh_planes(table=t)) for t in range(n_tables)]
+        )
+        return frame.select(
+            F.col(id_col),
             _dvec(F.col("embedding")).alias("c_emb"),
             norm_expr(F.col("embedding")).alias("c_norm"),
             F.posexplode(buckets).alias("table", "bucket"),
         )
-        krn = lsh_bucket_rows(frame, LSH_PLANES, EMB_DIM, n_tables)
-        key = lambda r: (r.vec_id, r.table, r.bucket, r.c_norm, tuple(r.c_emb))
-        a = sorted(map(key, hof.collect()))
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(64)
+    queries = emb.limit(5).select(F.col("vec_id").alias("query_id"), "embedding")
+    cases = (
+        (emb, 4, "vec_id"),
+        (emb, 2, "vec_id"),
+        (hash_embed(docs), 4, "vec_id"),
+        (queries, 4, "query_id"),
+    )
+    for frame, n_tables, id_col in cases:
+        krn = lsh_bucket_rows(frame, n_tables, id_col=id_col)
+        key = lambda r: (r[id_col], r.table, r.bucket, r.c_norm, tuple(r.c_emb))
+        a = sorted(map(key, hof(frame, n_tables, id_col).collect()))
         b = sorted(map(key, krn.collect()))
         assert a == b
-    only = lsh_bucket_rows(emb, LSH_PLANES, EMB_DIM, 2, include_vec=False)
+    only = lsh_bucket_rows(emb, 2, include_vec=False)
     assert only.columns == ["vec_id", "table", "bucket"]
-    full = {(r.vec_id, r.table, r.bucket) for r in lsh_bucket_rows(emb, LSH_PLANES, EMB_DIM, 2).collect()}
+    full = {(r.vec_id, r.table, r.bucket) for r in lsh_bucket_rows(emb, 2).collect()}
     assert {(r.vec_id, r.table, r.bucket) for r in only.collect()} == full
 
 
 def test_lsh_bucket_rows_mixed_lengths_summing_to_n_dim(spark):
-    """ADVICE r13 (medium): the kernel's fast-path uniformity check
-    tested only the TOTAL flattened length, so a batch of mixed-length
-    vectors whose lengths sum to n*dim (e.g. dim-1 and dim+1) took the
-    reshape path misaligned and silently emitted wrong buckets/norms.
-    Such rows must take the exact HOF-semantics fallback: bucket 0 per
-    table (zip_with NULL-padding kills every plane dot) and the norm of
-    whatever elements exist."""
-    from pyspark.sql import functions as F
+    """ADVICE r13 (medium): a batch of mixed-length vectors whose
+    lengths sum to n*dim (dim-1 and dim+1) must not reshape
+    misaligned into wrong buckets/norms. A vector that is not EMB_DIM
+    non-NULL values has no sign-bit bucket, so the kernel refuses it
+    -- whether it is too short, too long, NULL or holds a NULL -- with
+    a ValueError naming EMB_DIM, the width it got and the id; and a
+    knn_lsh query side refuses a 63-wide query the same way."""
+    from pyspark.errors import PythonException
 
     from solana_data_etl_pipeline_spark.operators.similarity import (
         EMB_DIM,
-        LSH_PLANES,
-        _dvec,
+        knn_lsh,
         lsh_bucket_rows,
-        norm_expr,
-        table_bucket_col,
     )
 
-    rows = [
-        (1, [float(i) for i in range(EMB_DIM - 1)]),
-        (2, [float(i) for i in range(EMB_DIM + 1)]),
-        (3, [0.25 * i - 1.0 for i in range(EMB_DIM)]),  # one well-formed row
-    ]
-    frame = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
-    buckets = table_bucket_col(F.col("embedding"), LSH_PLANES, 2, EMB_DIM)
-    hof = frame.select(
-        F.col("vec_id"),
-        _dvec(F.col("embedding")).alias("c_emb"),
-        norm_expr(F.col("embedding")).alias("c_norm"),
-        F.posexplode(buckets).alias("table", "bucket"),
-    )
-    krn = lsh_bucket_rows(frame, LSH_PLANES, EMB_DIM, 2)
-    key = lambda r: (r.vec_id, r.table, r.bucket, r.c_norm, tuple(r.c_emb))
-    assert sorted(map(key, hof.collect())) == sorted(map(key, krn.collect()))
-    # the malformed rows land in bucket 0 for every table
-    by_id = {(r.vec_id, r.table): r.bucket for r in krn.collect()}
-    assert by_id[(1, 0)] == 0 and by_id[(1, 1)] == 0
-    assert by_id[(2, 0)] == 0 and by_id[(2, 1)] == 0
+    good = (3, [0.25 * i - 1.0 for i in range(EMB_DIM)])
+    short = (1, [float(i) for i in range(EMB_DIM - 1)])
+    long_ = (2, [float(i) for i in range(EMB_DIM + 1)])
+    schema = "vec_id long, embedding array<double>"
+    bad_rows = {  # the first bad row of the batch is the one named
+        "width 63": [short, long_],
+        "width 65": [long_, short],
+        "a NULL vector": [(4, None)],
+        "width 64 with a NULL element": [(5, [1.0] * (EMB_DIM - 1) + [None])],
+    }
+    for got, rows in bad_rows.items():
+        frame = spark.createDataFrame(rows + [good], schema).coalesce(1)
+        with pytest.raises(
+            PythonException,
+            match=rf"ValueError: .*EMB_DIM = {EMB_DIM} .*vec_id {rows[0][0]} has {got}",
+        ):
+            lsh_bucket_rows(frame, 2).collect()
+    corpus = spark.createDataFrame([good], schema)
+    query = spark.createDataFrame([(7, good[1][:-1])], "query_id long, embedding array<double>")
+    with pytest.raises(PythonException, match=r"ValueError: .*query_id 7 has width 63"):
+        knn_lsh(corpus, query, k=1).collect()
+    # the well-formed row alone still buckets, one row per table
+    ok = lsh_bucket_rows(corpus, 2).collect()
+    assert sorted(r.table for r in ok) == [0, 1] and all(r.vec_id == 3 for r in ok)
