@@ -2633,8 +2633,8 @@ def hash_embed(df: DataFrame, dim: int = HASH_EMBED_DIM, text_col: str = "text")
     near-dup, quantize) straight from the documents table when no
     learned encoder is deployed; output contract matches the
     embeddings table: (vec_id, embedding array<double>), vec_id =
-    doc_id. Zero-norm documents (no tokens) come out as zero
-    vectors.
+    doc_id. Zero-norm documents (no tokens, or NULL text) come out as
+    zero vectors.
 
     Scale shape: a pure per-row projection, ZERO shuffles and zero
     joins. Each token is md5-hashed ONCE into a bound (dim, sign)
@@ -2658,7 +2658,7 @@ def hash_embed(df: DataFrame, dim: int = HASH_EMBED_DIM, text_col: str = "text")
     # md5 once per token; the (dim, sign) split re-reads the cheap
     # long, not the hash expression
     hashes = F.expr(
-        "transform(filter(_tk, t -> t != ''), "
+        "transform(filter(coalesce(_tk, array()), t -> t != ''), "
         "t -> cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint))"
     )
     base = base.select("vec_id", hashes.alias("_hs"))

@@ -18,11 +18,12 @@ K = 5
 
 
 def _vectors():
-    # four clusters (label = i % 4) of cos ~0.8 members, so LSH buckets
-    # hold real neighbours and prune the rest
+    # five clusters (i % 5) of cos ~0.8 members, so LSH buckets hold real
+    # neighbours and prune the rest; the IVF cell (label = i % 4) cuts
+    # across the clusters, so unprobed cells hold true neighbours
     rng = np.random.RandomState(7)
-    centers = rng.normal(size=(4, DIM))
-    vecs = (centers[np.arange(N) % 4] + 0.5 * rng.normal(size=(N, DIM))).astype("float32")
+    centers = rng.normal(size=(5, DIM))
+    vecs = (centers[np.arange(N) % 5] + 0.5 * rng.normal(size=(N, DIM))).astype("float32")
     return [(i, [float(x) for x in vecs[i]], int(i % 4)) for i in range(N)]
 
 

@@ -1286,6 +1286,27 @@ def test_hash_embed_bag_of_words_properties(spark):
         assert math.isclose(sum(x * x for x in got[vid]), 1.0, rel_tol=1e-9)
 
 
+def test_hash_embed_null_text_feeds_lsh_paths(spark, tmp_path):
+    """A NULL-text document embeds as the zero vector, exactly like an
+    empty one, so the embedding-LSH paths over hash_embed (which refuse
+    NULL vectors) index and rank a corpus that holds one."""
+    from solana_data_etl_pipeline_spark.operators.dedup import materialize_embedding_lsh
+    from solana_data_etl_pipeline_spark.operators.similarity import EMB_DIM, knn_lsh_indexed
+
+    rows = [(1, "a b c", "en", "s", 5), (2, None, "en", "s", 0), (3, "", "en", "s", 0)]
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    )
+    got = {r.vec_id: list(r.embedding) for r in X.hash_embed(docs).collect()}
+    assert got[2] == got[3] == [0.0] * EMB_DIM
+    path = str(tmp_path / "lsh")
+    materialize_embedding_lsh(X.hash_embed(docs), path)
+    q = X.hash_embed(docs.filter("doc_id = 1")).selectExpr("-1L AS query_id", "embedding")
+    assert 1 in {r.neighbor_id for r in knn_lsh_indexed(path, q, k=3).collect()}
+    fused = X.hybrid_rank(docs, ["a"], k=3).collect()
+    assert fused[0].doc_id == 1
+
+
 def test_hash_embed_bridges_into_semdedup(spark):
     """End-to-end bridge: hash_embed output slots straight into
     semdedup_keepers -- exact-duplicate texts form a cosine-1 dup
