@@ -59,20 +59,26 @@ def main(argv: list[str] | None = None) -> int:
     p_ana = sub.add_parser("analytics", help="recompute analytics tables")
     p_ana.add_argument("--as-of", default=None, help="ISO timestamp; default = max block_time")
 
+    # Every stream option's dest is its StreamOptions field name and an
+    # option left out is absent from the namespace, so the dataclass
+    # holds the only defaults; the other flags set theirs explicitly.
     p_scorp = sub.add_parser(
         "stream-corpus",
         help="continuously assemble the corpus from a JSONL document landing zone",
+        argument_default=argparse.SUPPRESS,
     )
     p_scorp.add_argument("--input", required=True, help="landing-zone directory (JSONL shards)")
     p_scorp.add_argument("--output", default=None, help="corpus dir (default <warehouse>/corpus_stream)")
     p_scorp.add_argument(
         "--near-dup",
         action="store_true",
+        default=False,
         help="also near-dup dedup each batch against a maintained minhash index",
     )
     p_scorp.add_argument(
         "--semantic-dedup",
         action="store_true",
+        default=False,
         help="also SEMANTIC-dedup each batch: hash-embed the docs and "
         "probe a maintained embedding-LSH index (drops bag-of-words "
         "twins exact/minhash dedup misses)",
@@ -80,13 +86,11 @@ def main(argv: list[str] | None = None) -> int:
     p_scorp.add_argument(
         "--semantic-threshold",
         type=float,
-        default=0.95,
         help="cosine threshold for --semantic-dedup (default 0.95)",
     )
     p_scorp.add_argument(
         "--semantic-blind-bp",
         type=int,
-        default=5000,
         help="log admitted docs whose embedding-LSH buckets are at "
         "least this many basis points on the semantic index's "
         "over-cap excluded list (the probe is blind to them) to "
@@ -104,11 +108,13 @@ def main(argv: list[str] | None = None) -> int:
     p_scorp.add_argument(
         "--compact-clusters",
         action="store_true",
+        default=False,
         help="after the drain, fold the near-dup cluster remap log into the per-doc table",
     )
     p_scorp.add_argument(
         "--compact-indexes",
         action="store_true",
+        default=False,
         help="after the drain, compact the maintained LSH indexes' "
         "per-batch append files into ~target-sized files clustered on "
         "their probe-join keys (crash-safe swap; probe verdicts "
@@ -117,7 +123,6 @@ def main(argv: list[str] | None = None) -> int:
     p_scorp.add_argument(
         "--temperature-tau",
         type=float,
-        default=None,
         help="mT5 temperature-scaled source rebalancing per batch (rates "
         "from corpus-so-far + batch counts, logged per epoch under "
         "<out>/policy_rates)",
@@ -125,20 +130,17 @@ def main(argv: list[str] | None = None) -> int:
     p_scorp.add_argument(
         "--target-frac",
         type=float,
-        default=0.5,
         help="overall take fraction for --temperature-tau (default 0.5)",
     )
     p_scorp.add_argument(
         "--token-budget",
         type=int,
-        default=None,
         help="hard cap on total corpus tokens; each batch admits its "
         "best-scored docs within the remaining budget",
     )
     p_scorp.add_argument(
         "--waterfill-budget",
         type=int,
-        default=None,
         help="allocation-constrained token budget: waterfilled across "
         "sources at tau=0.5 weights over corpus-so-far capacities; "
         "each source spends only its remaining allocation (the "
@@ -146,7 +148,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     p_scorp.add_argument(
         "--decontaminate",
-        default=None,
+        dest="decontaminate_bench",
         metavar="BENCH_PARQUET",
         help="block benchmark contamination at ingest: batches are "
         "probed against the bench set's winnowing index with exact "
@@ -155,13 +157,11 @@ def main(argv: list[str] | None = None) -> int:
     p_scorp.add_argument(
         "--decon-threshold",
         type=float,
-        default=0.5,
-        help="containment verify threshold for --decontaminate",
+        help="containment verify threshold for --decontaminate (default 0.5)",
     )
     p_scorp.add_argument(
         "--decon-blind-bp",
         type=int,
-        default=5000,
         help="log admitted docs whose winnow-fingerprint mass is at "
         "least this many basis points on the bench index's over-cap "
         "excluded list (the probe is blind to them) to "
@@ -206,9 +206,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     p_scorp.add_argument(
         "--gates",
-        choices=["simple", "published"],
-        default="simple",
-        help="quality-gate generation: 'simple' = MIN_TOKENS/alpha "
+        help="quality-gate generation (default simple): 'simple' = MIN_TOKENS/alpha "
         "constants, 'published' = C4 page cleaning + the full Gopher "
         "rule conjunction (the corpus_curation_v2 gates)",
     )
@@ -398,38 +396,28 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command == "stream-corpus":
-        from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+        from dataclasses import fields
+
+        from solana_data_etl_pipeline_spark.operators.util import read_or_none
+        from solana_data_etl_pipeline_spark.streaming.corpus import (
+            StreamOptions,
+            index_health,
+            run_document_stream,
+        )
 
         out = args.output or f"{config.warehouse.path}/corpus_stream"
-        run_document_stream(
-            spark,
-            args.input,
-            f"{out}/documents",
-            f"{out}/quarantine",
-            f"{out}/checkpoint",
+        given = {f.name: getattr(args, f.name) for f in fields(StreamOptions) if f.name in args}
+        opts = StreamOptions(
             near_dup_index=f"{out}/near_dup_index" if args.near_dup else None,
             semantic_index=f"{out}/semantic_index" if args.semantic_dedup else None,
-            semantic_threshold=args.semantic_threshold,
-            semantic_blind_bp=args.semantic_blind_bp,
-            semantic_route_blind=args.semantic_route_blind,
-            temperature_tau=args.temperature_tau,
-            target_frac=args.target_frac,
-            token_budget=args.token_budget,
-            waterfill_budget=args.waterfill_budget,
-            policy_log_dir=f"{out}/policy_rates" if args.temperature_tau is not None else None,
-            gates=args.gates,
-            decontaminate_bench=args.decontaminate,
-            decon_threshold=args.decon_threshold,
-            decon_blind_bp=args.decon_blind_bp,
-            decon_route_blind=args.decon_route_blind,
-            media_health=args.media_health,
-            media_gate=args.media_gate,
-            drift_report=args.drift_report,
+            policy_log_dir=f"{out}/policy_rates" if "temperature_tau" in given else None,
+            **given,
         )
-        try:
-            n = spark.read.parquet(f"{out}/documents").count()
-        except Exception:
-            n = 0
+        run_document_stream(
+            spark, args.input, f"{out}/documents", f"{out}/quarantine", f"{out}/checkpoint", opts
+        )
+        docs = read_or_none(spark, f"{out}/documents")
+        n = 0 if docs is None else docs.count()
         print(f"corpus_stream: drained ({n} documents total)")
         if args.compact_indexes:
             from solana_data_etl_pipeline_spark.sinks.compaction import (
@@ -448,26 +436,22 @@ def main(argv: list[str] | None = None) -> int:
                         f"compacted {idx_name}/{sub}: "
                         f"{st['before_files']} -> {st['after_files']} files"
                     )
-        if args.media_health:
-            try:
-                mh = spark.read.parquet(f"{out}/documents_media_health")
+        if opts.media_health:
+            mh = read_or_none(spark, f"{out}/documents_media_health")
+            if mh is None:
+                print("media_health: no media payloads seen")
+            else:
                 from pyspark.sql import functions as _F
 
-                agg = mh.agg(
-                    _F.sum("n_ok").alias("ok"), _F.sum("n_bad").alias("bad")
-                ).first()
+                agg = mh.agg(_F.sum("n_ok").alias("ok"), _F.sum("n_bad").alias("bad")).first()
                 print(
                     f"media_health: {agg['ok'] or 0} payloads decoded, "
                     f"{agg['bad'] or 0} quarantined"
                 )
-            except Exception:
-                print("media_health: no media payloads seen")
-        from solana_data_etl_pipeline_spark.streaming.corpus import index_health
-
-        if args.semantic_dedup:
+        if opts.semantic_index:
             h = index_health(
-                spark, f"{out}/semantic_index", ("table", "bucket"),
-                max_bucket=64, sub="buckets",
+                spark, opts.semantic_index, ("table", "bucket"),
+                max_bucket=opts.semantic_max_bucket, sub="buckets",
             )
             print(
                 "semantic_index: "
@@ -477,29 +461,31 @@ def main(argv: list[str] | None = None) -> int:
             )
             # the blind-spot surfaces: excluded list (always maintained
             # once something over-caps) and the overflow twin (routing
-            # mode) -- the operator reads these to size the cap
-            try:
-                n_exc = spark.read.parquet(f"{out}/semantic_index/excluded").count()
-                line = f"semantic_blind_spot: {n_exc} excluded buckets"
-                if args.semantic_route_blind:
-                    ho = index_health(
-                        spark, f"{out}/semantic_index_overflow",
-                        ("table", "bucket"), sub="buckets",
-                    )
+            # mode, written once a cap refuses rows) -- the operator
+            # reads these to size the cap
+            excluded = read_or_none(spark, f"{opts.semantic_index}/excluded")
+            if excluded is None:
+                print("semantic_blind_spot: nothing has over-capped")
+            else:
+                line = f"semantic_blind_spot: {excluded.count()} excluded buckets"
+                overflow = f"{opts.semantic_index}_overflow"
+                if (
+                    opts.semantic_route_blind
+                    and read_or_none(spark, f"{overflow}/buckets") is not None
+                ):
+                    ho = index_health(spark, overflow, ("table", "bucket"), sub="buckets")
                     line += (
                         f"; overflow twin {ho['rows']} rows in "
                         f"{ho['buckets']} buckets (max width {ho['max_width']})"
                     )
                 print(line)
-            except Exception:
-                print("semantic_blind_spot: nothing has over-capped")
-        if args.near_dup:
+        if opts.near_dup_index:
             from solana_data_etl_pipeline_spark.streaming.clusters import (
                 compact_clusters,
                 streamed_clusters,
             )
 
-            idx = f"{out}/near_dup_index"
+            idx = opts.near_dup_index
             if args.compact_clusters:
                 compact_clusters(spark, idx)
             labels = streamed_clusters(spark, idx)
@@ -508,7 +494,9 @@ def main(argv: list[str] | None = None) -> int:
                 f"{labels.count()} docs in "
                 f"{labels.select('cluster_id').distinct().count()} clusters"
             )
-            h = index_health(spark, idx, ("band", "band_sig"), max_bucket=64)
+            h = index_health(
+                spark, idx, ("band", "band_sig"), max_bucket=opts.near_dup_max_bucket
+            )
             print(
                 "near_dup_index: "
                 f"{h['rows']} rows in {h['buckets']} buckets, "

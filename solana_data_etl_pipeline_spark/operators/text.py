@@ -1015,57 +1015,64 @@ def training_shuffle(
     )
 
 
-def temperature_mix(
-    df: DataFrame,
-    tau: float = 0.5,
-    target_frac: float = 0.5,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Temperature-scaled source sampling (the mT5/XLM-R multilingual
-    recipe): source s with corpus share p_s is sampled in proportion
-    to p_s^tau -- tau<1 UP-samples small sources and damps dominant
-    ones, tau=1 is proportional, tau=0 is uniform-over-sources. The
-    overall take is target_frac of the corpus; per-source keep
-    probability min(1, target_frac * N * q_s / n_s) is applied with
-    the deterministic hash-mod rule (stable across engines and
-    reruns, composes with the other samplers). Returns the kept rows
-    with their source rate attached (rate_bp, basis points).
-
-    Scale shape: one tiny per-source count agg; the rate table is
-    sources-sized and BROADCAST onto the un-shuffled corpus scan; the
-    filter itself is a pure projection. Rates are rounded to basis
-    points on both engines so the hash-mod comparison is integral."""
-    counts = df.groupBy(source_col).agg(F.count(F.lit(1)).alias("_n"))
-    tot = counts.agg(F.sum("_n").alias("_tot"))
-    rates = (
+def temperature_rates(counts: DataFrame, tau: float, target_frac: float) -> DataFrame:
+    """Per-source keep rates (basis points) under the mT5 p^tau recipe
+    from a (source, n) count frame: source s with share p_s = n_s / N
+    is sampled in proportion to q_s = p_s^tau / sum(p^tau), at keep
+    probability min(1, target_frac * N * q_s / n_s). Rates are rounded
+    to basis points on both engines so keep_at_rates' hash-mod
+    comparison is integral. temperature_mix computes the counts over
+    its input; the document stream (streaming/corpus.py
+    temperature_policy) over corpus-so-far + batch."""
+    tot = counts.agg(F.sum("n").alias("_tot"))
+    return (
         counts.crossJoin(F.broadcast(tot))
-        .withColumn("_w", F.pow(F.col("_n") / F.col("_tot"), F.lit(float(tau))))
+        .withColumn("_w", F.pow(F.col("n") / F.col("_tot"), F.lit(float(tau))))
         .withColumn("_wsum", F.sum("_w").over(Window.partitionBy()))
         .select(
-            source_col,
+            "source",
             F.least(
                 F.lit(10_000),
                 F.round(
                     F.lit(float(target_frac))
                     * F.col("_tot")
                     * (F.col("_w") / F.col("_wsum"))
-                    / F.col("_n")
+                    / F.col("n")
                     * 10_000
                 ).cast("long"),
             ).alias("rate_bp"),
         )
     )
+
+
+def keep_at_rates(df: DataFrame, rates: DataFrame) -> DataFrame:
+    """The rows of `df` the deterministic hash-mod rule keeps at their
+    source's `rate_bp` (a temperature_rates frame, broadcast): md5 of
+    doc_id mod 10,000 below the rate. Stable across engines and
+    reruns, and composes with the other samplers. The rows carry
+    their rate_bp."""
     bucket = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10).cast(
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10).cast(
             "long"
         )
         % 10_000
     )
-    return (
-        df.join(F.broadcast(rates), source_col)
-        .filter(bucket < F.col("rate_bp"))
-    )
+    return df.join(F.broadcast(rates), "source").filter(bucket < F.col("rate_bp"))
+
+
+def temperature_mix(df: DataFrame, tau: float = 0.5, target_frac: float = 0.5) -> DataFrame:
+    """Temperature-scaled source sampling (the mT5/XLM-R multilingual
+    recipe): tau<1 UP-samples small sources and damps dominant ones,
+    tau=1 is proportional, tau=0 is uniform-over-sources. The overall
+    take is target_frac of the corpus (temperature_rates), applied
+    with keep_at_rates. Returns the kept rows with their source rate
+    attached (rate_bp, basis points).
+
+    Scale shape: one tiny per-source count agg; the rate table is
+    sources-sized and BROADCAST onto the un-shuffled corpus scan; the
+    filter itself is a pure projection."""
+    counts = df.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
+    return keep_at_rates(df, temperature_rates(counts, tau, target_frac))
 
 
 #: C4-style line-cleaning knobs (Raffel et al. 2020, §2.2 "Colossal

@@ -77,14 +77,26 @@ _SLOW_TESTS = frozenset((
 ))
 
 # The set a change to an index writer or the document stream must pass
-# (`pytest tests -m stream -q`): every document-stream test, the CLI's
-# blind-routing streams, the delta-dedup property and the compacted
-# index probe. Marking does not change the default run's selection.
+# (`pytest tests -m stream -q`): every document-stream test, the
+# stage tests on static batches, the CLI's blind-routing streams, the
+# delta-dedup property and the compacted index probe. Marking does not
+# change the default run's selection.
 _STREAM_TESTS = frozenset((
     "test_cli.py::test_cli_stream_corpus_decon_route_blind",
     "test_cli.py::test_cli_stream_corpus_semantic_route_blind",
     "test_compaction.py::test_compact_lsh_index_preserves_probes",
     "test_properties.py::test_delta_dedup_matches_python_model",
+    "test_stream_stages.py::test_cli_stream_corpus_refuses_ignored_options",
+    "test_stream_stages.py::test_stage_decontaminate_and_blind_routing",
+    "test_stream_stages.py::test_stage_drift_log",
+    "test_stream_stages.py::test_stage_media_sidecar_and_gate",
+    "test_stream_stages.py::test_stage_near_dup_dedup_and_catch_up",
+    "test_stream_stages.py::test_stage_semantic_blind_log_and_routing",
+    "test_stream_stages.py::test_stage_semantic_dedup_and_catch_up",
+    "test_stream_stages.py::test_stage_split_features_exact_dedup_and_commit",
+    "test_stream_stages.py::test_stage_temperature_policy",
+    "test_stream_stages.py::test_stage_token_budget_and_waterfill_policies",
+    "test_stream_stages.py::test_stream_options_refuse_ignored_options",
     "test_streaming.py::test_document_stream_decon_blind_log",
     "test_streaming.py::test_document_stream_decon_blind_routing_catches_hollow_verdict",
     "test_streaming.py::test_document_stream_drift_report_per_batch",

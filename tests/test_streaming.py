@@ -271,7 +271,7 @@ def test_document_stream_near_dup_index(spark, tmp_path):
     """Streaming NEAR-dup dedup: each batch probes the maintained
     minhash index; the index catches up to the corpus after every
     batch (self-healing form); replays stay no-ops."""
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "docs_in")
     out = str(tmp_path / "corpus")
@@ -293,7 +293,7 @@ def test_document_stream_near_dup_index(spark, tmp_path):
         f.write(_doc(1, text_a) + "\n")
         f.write(_doc(2, text_b) + "\n")
 
-    run_document_stream(spark, land, out, quar, ckpt, near_dup_index=idx)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(near_dup_index=idx))
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 2}
     # index caught up to the corpus
     assert {r.doc_id for r in spark.read.parquet(f"{idx}/bands").collect()} == {1, 2}
@@ -305,14 +305,14 @@ def test_document_stream_near_dup_index(spark, tmp_path):
         f.write(_doc(10, text_a + " extra") + "\n")   # near-dup of doc 1 -> dropped
         f.write(_doc(11, text_c) + "\n")              # fresh -> kept
 
-    run_document_stream(spark, land, out, quar, ckpt, near_dup_index=idx)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(near_dup_index=idx))
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 2, 11}
     assert {r.doc_id for r in spark.read.parquet(f"{idx}/bands").collect()} == {1, 2, 11}
     # shingle side of the index stays in lockstep
     assert {r.doc_id for r in spark.read.parquet(f"{idx}/shingles").collect()} == {1, 2, 11}
 
     # lost-checkpoint replay: corpus AND index unchanged
-    run_document_stream(spark, land, out, quar, str(tmp_path / "ckpt2"), near_dup_index=idx)
+    run_document_stream(spark, land, out, quar, str(tmp_path / "ckpt2"), StreamOptions(near_dup_index=idx))
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 2, 11}
     assert spark.read.parquet(f"{idx}/bands").select("doc_id").distinct().count() == 3
 
@@ -325,7 +325,7 @@ def test_document_stream_near_dup_index(spark, tmp_path):
     shutil.rmtree(idx)
     with open(os.path.join(land, "c.jsonl"), "w") as f:
         f.write(_doc(20, "fresh follow-up batch content with entirely novel wording throughout every single line") + "\n")
-    run_document_stream(spark, land, out, quar, ckpt, near_dup_index=idx)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(near_dup_index=idx))
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 2, 11, 20}
     assert {r.doc_id for r in spark.read.parquet(f"{idx}/bands").collect()} == {1, 2, 11, 20}
     assert {r.doc_id for r in spark.read.parquet(f"{idx}/shingles").collect()} == {1, 2, 11, 20}
@@ -640,7 +640,7 @@ def test_document_stream_maintains_clusters(spark, tmp_path):
     batches after the components formed."""
     from solana_data_etl_pipeline_spark.operators.dedup import connected_components
     from solana_data_etl_pipeline_spark.streaming.clusters import streamed_clusters
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "docs_in")
     out = str(tmp_path / "corpus")
@@ -666,7 +666,7 @@ def test_document_stream_maintains_clusters(spark, tmp_path):
     def _run():
         run_document_stream(
             spark, land, out, quar, ckpt,
-            near_dup_index=idx, near_dup_threshold=0.4,
+            StreamOptions(near_dup_index=idx, near_dup_threshold=0.4),
         )
 
     # batch 1: family representatives (J(fam_a, fam_b)=0.33 < 0.4 ->
@@ -716,7 +716,7 @@ def test_document_stream_maintains_clusters(spark, tmp_path):
     # anti-join and write-once epoch logging keeps recorded pairs
     _run_ckpt2 = lambda: run_document_stream(  # noqa: E731
         spark, land, out, quar, str(tmp_path / "ckpt2"),
-        near_dup_index=idx, near_dup_threshold=0.4,
+        StreamOptions(near_dup_index=idx, near_dup_threshold=0.4),
     )
     _run_ckpt2()
     got2 = {r.doc_id: r.cluster_id for r in streamed_clusters(spark, idx).collect()}
@@ -765,7 +765,7 @@ def test_document_stream_temperature_policy(spark, tmp_path):
     import hashlib
     import math
 
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "in"); out = str(tmp_path / "corpus")
     quar = str(tmp_path / "quar"); ckpt = str(tmp_path / "ckpt")
@@ -793,7 +793,7 @@ def test_document_stream_temperature_policy(spark, tmp_path):
         for i in range(100, 104):
             f.write(_doc(i, "small") + "\n")
     run_document_stream(spark, land, out, quar, ckpt,
-                        temperature_tau=0.5, target_frac=0.5, policy_log_dir=plog)
+                        StreamOptions(temperature_tau=0.5, target_frac=0.5, policy_log_dir=plog))
 
     r0 = {r.source: r.rate_bp for r in spark.read.parquet(plog).filter("epoch = 0").collect()}
     assert r0 == _expected_rates({"big": 16, "small": 4})
@@ -807,7 +807,7 @@ def test_document_stream_temperature_policy(spark, tmp_path):
         for i in range(200, 210):
             f.write(_doc(i, "big") + "\n")
     run_document_stream(spark, land, out, quar, ckpt,
-                        temperature_tau=0.5, target_frac=0.5, policy_log_dir=plog)
+                        StreamOptions(temperature_tau=0.5, target_frac=0.5, policy_log_dir=plog))
     corpus_counts = {}
     for s in got1.values():
         corpus_counts[s] = corpus_counts.get(s, 0) + 1
@@ -822,7 +822,7 @@ def test_document_stream_temperature_policy(spark, tmp_path):
     # replay from scratch: corpus and policy log unchanged
     n_log = spark.read.parquet(plog).count()
     run_document_stream(spark, land, out, quar, str(tmp_path / "ckpt2"),
-                        temperature_tau=0.5, target_frac=0.5, policy_log_dir=plog)
+                        StreamOptions(temperature_tau=0.5, target_frac=0.5, policy_log_dir=plog))
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == got2
     assert spark.read.parquet(plog).count() == n_log
 
@@ -831,7 +831,7 @@ def test_document_stream_token_budget(spark, tmp_path):
     """Streaming token budget: each batch admits its best-scored docs
     within the REMAINING budget; once spent, later batches admit
     nothing; the cap holds across restarts."""
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "in"); out = str(tmp_path / "corpus")
     quar = str(tmp_path / "quar"); ckpt = str(tmp_path / "ckpt")
@@ -846,14 +846,14 @@ def test_document_stream_token_budget(spark, tmp_path):
     with open(os.path.join(land, "a.jsonl"), "w") as f:
         for i in range(4):
             f.write(_doc(i) + "\n")
-    run_document_stream(spark, land, out, quar, ckpt, token_budget=budget)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(token_budget=budget))
     tok1 = sum(r.n_tokens for r in spark.read.parquet(out).collect())
     assert 0 < tok1 <= budget
 
     with open(os.path.join(land, "b.jsonl"), "w") as f:
         for i in range(10, 20):
             f.write(_doc(i) + "\n")
-    run_document_stream(spark, land, out, quar, ckpt, token_budget=budget)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(token_budget=budget))
     rows2 = spark.read.parquet(out).collect()
     assert sum(r.n_tokens for r in rows2) <= budget
 
@@ -861,7 +861,7 @@ def test_document_stream_token_budget(spark, tmp_path):
     with open(os.path.join(land, "c.jsonl"), "w") as f:
         for i in range(30, 40):
             f.write(_doc(i) + "\n")
-    run_document_stream(spark, land, out, quar, ckpt, token_budget=budget)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(token_budget=budget))
     rows3 = spark.read.parquet(out).collect()
     assert sum(r.n_tokens for r in rows3) <= budget
 
@@ -872,7 +872,7 @@ def test_document_stream_waterfill_budget(spark, tmp_path):
     the big source is cut to its weighted allocation -- the source
     balance the plain greedy budget gate cannot express -- and later
     batches spend only each source's REMAINING allocation."""
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "in"); out = str(tmp_path / "corpus")
     quar = str(tmp_path / "quar"); ckpt = str(tmp_path / "ckpt")
@@ -890,7 +890,7 @@ def test_document_stream_waterfill_budget(spark, tmp_path):
         f.write(_doc(0, "a") + "\n")
         for i in range(10, 20):
             f.write(_doc(i, "b") + "\n")
-    run_document_stream(spark, land, out, quar, ckpt, waterfill_budget=60)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(waterfill_budget=60))
     rows = spark.read.parquet(out).collect()
     by_src = {}
     for r in rows:
@@ -908,7 +908,7 @@ def test_document_stream_waterfill_budget(spark, tmp_path):
             f.write(_doc(100 + i, "a") + "\n")
         for i in range(20, 25):
             f.write(_doc(i, "b") + "\n")
-    run_document_stream(spark, land, out, quar, ckpt, waterfill_budget=60)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(waterfill_budget=60))
     rows2 = spark.read.parquet(out).collect()
     assert sum(r.n_tokens for r in rows2) == 60
     assert {r.doc_id for r in rows2} == {r.doc_id for r in rows}
@@ -919,7 +919,7 @@ def test_document_stream_published_gates(spark, tmp_path):
     C4 page gate + Gopher rule conjunction (the corpus_curation_v2
     gates): a Gopher-passing doc survives, a brace-marked page and a
     stopword-free doc are dropped."""
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "docs_in")
     out = str(tmp_path / "corpus")
@@ -946,7 +946,7 @@ def test_document_stream_published_gates(spark, tmp_path):
         f.write(_doc(2, braces) + "\n")
         f.write(_doc(3, no_stop) + "\n")
 
-    run_document_stream(spark, land, out, quar, ckpt, gates="published")
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(gates="published"))
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1}
 
 
@@ -954,7 +954,7 @@ def test_document_stream_ingest_decontamination(spark, tmp_path):
     """A batch doc containing a benchmark doc verbatim is blocked at
     ingest via the static winnowing index; clean docs pass; a second
     drain reuses the index and stays exactly-once."""
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "docs_in")
     out = str(tmp_path / "corpus")
@@ -983,7 +983,7 @@ def test_document_stream_ingest_decontamination(spark, tmp_path):
 
     run_document_stream(
         spark, land, out, quar, ckpt,
-        decontaminate_bench=bench_path, decon_threshold=0.5,
+        StreamOptions(decontaminate_bench=bench_path, decon_threshold=0.5),
     )
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1}
 
@@ -994,7 +994,7 @@ def test_document_stream_ingest_decontamination(spark, tmp_path):
 
     run_document_stream(
         spark, land, out, quar, ckpt,
-        decontaminate_bench=bench_path, decon_threshold=0.5,
+        StreamOptions(decontaminate_bench=bench_path, decon_threshold=0.5),
     )
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 4}
 
@@ -1010,7 +1010,7 @@ def test_document_stream_decon_blind_log(spark, tmp_path):
     a hollow verdict -- the probe literally cannot see it. The blind
     log records exactly that doc (exposure 10000 bp) BEFORE the
     corpus commit; clean docs stay out of the log."""
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "docs_in")
     out = str(tmp_path / "corpus")
@@ -1039,8 +1039,8 @@ def test_document_stream_decon_blind_log(spark, tmp_path):
 
     run_document_stream(
         spark, land, out, quar, ckpt,
-        decontaminate_bench=bench_path, decon_threshold=0.5,
-        near_dup_max_bucket=5,
+        StreamOptions(decontaminate_bench=bench_path, decon_threshold=0.5,
+        near_dup_max_bucket=5),
     )
     # the boilerplate doc is ADMITTED (the capped index is blind to it)...
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 2}
@@ -1058,7 +1058,7 @@ def test_document_stream_decon_blind_routing_catches_hollow_verdict(spark, tmp_p
     clean docs are untouched and never pay fallback cost, and the
     blind log holds no admitted-blind rows because the only blind doc
     was caught."""
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "docs_in")
     out = str(tmp_path / "corpus")
@@ -1087,8 +1087,8 @@ def test_document_stream_decon_blind_routing_catches_hollow_verdict(spark, tmp_p
 
     run_document_stream(
         spark, land, out, quar, ckpt,
-        decontaminate_bench=bench_path, decon_threshold=0.5,
-        near_dup_max_bucket=5, decon_route_blind=True,
+        StreamOptions(decontaminate_bench=bench_path, decon_threshold=0.5,
+        near_dup_max_bucket=5, decon_route_blind=True),
     )
     # the blind contaminated doc is caught by the uncapped fallback
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {2}
@@ -1105,7 +1105,7 @@ def test_document_stream_semantic_dedup(spark, tmp_path):
     dropped by the hash-embed probe -- within a batch (min-id wins)
     and across batches (the materialized embedding index, caught up
     self-healingly after each corpus write); distinct docs pass."""
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "docs_in")
     out = str(tmp_path / "corpus")
@@ -1131,7 +1131,7 @@ def test_document_stream_semantic_dedup(spark, tmp_path):
         f.write(_doc(2, permuted) + "\n")
         f.write(_doc(3, other) + "\n")
 
-    run_document_stream(spark, land, out, quar, ckpt, semantic_index=sem)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(semantic_index=sem))
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 3}
     # the index knows exactly the surviving corpus
     idx_ids = {r.vec_id for r in spark.read.parquet(f"{sem}/buckets").collect()}
@@ -1145,7 +1145,7 @@ def test_document_stream_semantic_dedup(spark, tmp_path):
         f.write(_doc(4, rotated) + "\n")
         f.write(_doc(5, fresh) + "\n")
 
-    run_document_stream(spark, land, out, quar, ckpt, semantic_index=sem)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(semantic_index=sem))
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 3, 5}
     idx_ids = {r.vec_id for r in spark.read.parquet(f"{sem}/buckets").collect()}
     assert idx_ids == {1, 3, 5}
@@ -1163,7 +1163,7 @@ def _semantic_blind_setup(spark, tmp_path, **stream_kwargs):
     excluded -- exposure 10000 bp) plus a clean doc."""
     import shutil
 
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "docs_in")
     out = str(tmp_path / "corpus")
@@ -1187,7 +1187,7 @@ def _semantic_blind_setup(spark, tmp_path, **stream_kwargs):
         f.write(_doc(4, "a clean document about adaptive query execution internals and shuffles") + "\n")
     run_document_stream(
         spark, land, out, quar, ckpt,
-        semantic_index=sem, semantic_max_bucket=2, **stream_kwargs,
+        StreamOptions(semantic_index=sem, semantic_max_bucket=2, **stream_kwargs),
     )
     # the capped gate was blind to the in-batch permutation family
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 2, 3, 4}
@@ -1201,7 +1201,7 @@ def _semantic_blind_setup(spark, tmp_path, **stream_kwargs):
         f.write(_doc(6, "yet another unrelated document describing whole stage code generation boundaries in detail") + "\n")
     run_document_stream(
         spark, land, out, quar, ckpt,
-        semantic_index=sem, semantic_max_bucket=2, **stream_kwargs,
+        StreamOptions(semantic_index=sem, semantic_max_bucket=2, **stream_kwargs),
     )
     return out, sem
 
@@ -1246,7 +1246,7 @@ def test_semantic_index_self_heals_after_loss(spark, tmp_path):
     afterwards."""
     import shutil
 
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "docs_in")
     out = str(tmp_path / "corpus")
@@ -1265,7 +1265,7 @@ def test_semantic_index_self_heals_after_loss(spark, tmp_path):
 
     with open(os.path.join(land, "a.jsonl"), "w") as f:
         f.write(_doc(1, " ".join(words)) + "\n")
-    run_document_stream(spark, land, out, quar, ckpt, semantic_index=sem)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(semantic_index=sem))
 
     # simulate the crash: corpus committed, index lost entirely
     shutil.rmtree(sem)
@@ -1275,7 +1275,7 @@ def test_semantic_index_self_heals_after_loss(spark, tmp_path):
     with open(os.path.join(land, "b.jsonl"), "w") as f:
         f.write(_doc(2, rotated) + "\n")
         f.write(_doc(3, fresh) + "\n")
-    run_document_stream(spark, land, out, quar, ckpt, semantic_index=sem)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(semantic_index=sem))
 
     # doc 2 must STILL be dropped: with the index gone, the probe
     # falls back to batch-internal pairs (which cannot see doc 1), so
@@ -1289,7 +1289,7 @@ def test_semantic_index_self_heals_after_loss(spark, tmp_path):
     # third drain: another twin is now caught against the healed index
     with open(os.path.join(land, "c.jsonl"), "w") as f:
         f.write(_doc(4, " ".join(reversed(words))) + "\n")
-    run_document_stream(spark, land, out, quar, ckpt, semantic_index=sem)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(semantic_index=sem))
     final = {r.doc_id for r in spark.read.parquet(out).collect()}
     assert 4 not in final
     assert {r.vec_id for r in spark.read.parquet(f"{sem}/buckets").collect()} == final
@@ -1304,7 +1304,7 @@ def test_document_stream_indexes_equal_batch_build(spark, tmp_path):
     materialize_minhash(corpus)."""
     from solana_data_etl_pipeline_spark.operators import dedup as D
     from solana_data_etl_pipeline_spark.operators.text import hash_embed
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "docs_in")
     out = str(tmp_path / "corpus")
@@ -1325,8 +1325,8 @@ def test_document_stream_indexes_equal_batch_build(spark, tmp_path):
                 f.write(_doc(i, f"document {i} explains {topics[i - 1]} with worked examples and measured numbers") + "\n")
         run_document_stream(
             spark, land, out, str(tmp_path / "doc_quar"), str(tmp_path / "doc_ckpt"),
-            near_dup_index=idx, near_dup_max_bucket=None,
-            semantic_index=sem, semantic_max_bucket=None,
+            StreamOptions(near_dup_index=idx, near_dup_max_bucket=None,
+            semantic_index=sem, semantic_max_bucket=None),
         )
     corpus = spark.read.parquet(out).select("doc_id", "text")
     assert corpus.count() == 6  # both batches streamed, nothing deduplicated
@@ -1355,7 +1355,7 @@ def test_document_stream_media_sidecar(spark, tmp_path):
         _bmp_encode,
         _wav_encode,
     )
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "docs_in")
     out = str(tmp_path / "corpus")
@@ -1380,7 +1380,7 @@ def test_document_stream_media_sidecar(spark, tmp_path):
         f.write(_doc(3, b"not a real avi container", "video") + "\n")
         f.write(_doc(4) + "\n")  # no media: text-only doc
 
-    run_document_stream(spark, land, out, quar, ckpt, media_health=True)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(media_health=True))
 
     # text pipeline untouched: all four docs admitted
     assert spark.read.parquet(out).count() == 4
@@ -1397,7 +1397,7 @@ def test_document_stream_media_sidecar(spark, tmp_path):
 
     # restart over the drained landing zone: checkpoint skips the
     # files, sidecars append nothing
-    run_document_stream(spark, land, out, quar, ckpt, media_health=True)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(media_health=True))
     assert spark.read.parquet(f"{out}_media_health").count() == 3
     assert spark.read.parquet(f"{out}_media_quarantine").count() == 1
 
@@ -1412,7 +1412,7 @@ def test_document_stream_media_gate_applies_v4_bounds(spark, tmp_path):
     import base64
 
     from solana_data_etl_pipeline_spark.operators.multimodal import _wav_encode
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "docs_in")
     out = str(tmp_path / "corpus")
@@ -1438,7 +1438,7 @@ def test_document_stream_media_gate_applies_v4_bounds(spark, tmp_path):
         f.write(_doc(3, silent_wav) + "\n")
         f.write(_doc(4) + "\n")  # no media
 
-    run_document_stream(spark, land, out, quar, ckpt, media_health=True, media_gate=True)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(media_health=True, media_gate=True))
 
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 4}
     gated = {r.doc_id: r for r in spark.read.parquet(f"{out}_media_gated").collect()}
@@ -1449,7 +1449,7 @@ def test_document_stream_media_gate_applies_v4_bounds(spark, tmp_path):
     health = {r.modality: r for r in spark.read.parquet(f"{out}_media_health").collect()}
     assert health["audio"].n_ok == 3 and health["audio"].n_bad == 0
 
-    run_document_stream(spark, land, out, quar, ckpt, media_health=True, media_gate=True)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(media_health=True, media_gate=True))
     assert spark.read.parquet(f"{out}_media_gated").count() == 2
     assert spark.read.parquet(out).count() == 2
 
@@ -1461,7 +1461,7 @@ def test_document_stream_drift_report_per_batch(spark, tmp_path):
     hand-computable basis-point shares, and a restarted stream
     appends nothing twice (write-once per epoch, logged before the
     corpus commit)."""
-    from solana_data_etl_pipeline_spark.streaming.corpus import run_document_stream
+    from solana_data_etl_pipeline_spark.streaming.corpus import StreamOptions, run_document_stream
 
     land = str(tmp_path / "docs_in")
     out = str(tmp_path / "corpus")
@@ -1479,7 +1479,7 @@ def test_document_stream_drift_report_per_batch(spark, tmp_path):
     # gates' minimum), all 'base'
     with open(os.path.join(land, "a.jsonl"), "w") as f:
         f.write(_doc(1, " ".join(["base"] * 12)) + "\n")
-    run_document_stream(spark, land, out, quar, ckpt, drift_report=True)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(drift_report=True))
     import pytest as _pytest
     from pyspark.errors.exceptions.captured import AnalysisException
 
@@ -1489,7 +1489,7 @@ def test_document_stream_drift_report_per_batch(spark, tmp_path):
     # batch 2: half old vocab, half NEW -- corpus-so-far is 100% base
     with open(os.path.join(land, "b.jsonl"), "w") as f:
         f.write(_doc(2, " ".join(["base"] * 6 + ["novel"] * 6)) + "\n")
-    run_document_stream(spark, land, out, quar, ckpt, drift_report=True)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(drift_report=True))
     rows = spark.read.parquet(f"{out}_drift").collect()
     assert {r.epoch for r in rows} == {1}
     by_tok = {r.token: r for r in rows}
@@ -1503,7 +1503,7 @@ def test_document_stream_drift_report_per_batch(spark, tmp_path):
 
     # restart: replayed batches are anti-join-emptied and epoch-
     # guarded -- the report never rewrites
-    run_document_stream(spark, land, out, quar, ckpt, drift_report=True)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(drift_report=True))
     assert spark.read.parquet(f"{out}_drift").count() == len(rows)
 
     # a NEW batch (fresh epoch, so the epoch guard does not apply)
@@ -1514,6 +1514,6 @@ def test_document_stream_drift_report_per_batch(spark, tmp_path):
     # vocabulary vanishing; ADVICE r10)
     with open(os.path.join(land, "c.jsonl"), "w") as f:
         f.write(_doc(3, " ".join(["base"] * 12)) + "\n")
-    run_document_stream(spark, land, out, quar, ckpt, drift_report=True)
+    run_document_stream(spark, land, out, quar, ckpt, StreamOptions(drift_report=True))
     after = spark.read.parquet(f"{out}_drift").collect()
     assert len(after) == len(rows) and {r.epoch for r in after} == {1}
